@@ -205,12 +205,15 @@ def generate_images_spark(
             ]
             yield pd.DataFrame(rows)
 
-    # 8× parallelism, not 2×: payload tasks must be SHORT so that (a) the
-    # straggler tail at stage end wastes at most ~1/8 of a task wave and
-    # (b) concurrently submitted bookkeeping jobs (FAIR pool) wait at most
-    # one short task for a slot — with 2× the measured slot-wait behind
-    # ~26 s payload tasks was the r2 scaling killer (BENCH r2 links step).
-    n_parts = max(8, spark.sparkContext.defaultParallelism * 8)
+    # One Python task per core, like every operators/multimodal.py stage.
+    # Each Python task pays a fixed ~0.3 s before user code runs (4-vCPU
+    # VM, local[4]): PySpark's worker calls importlib.invalidate_caches()
+    # in setup_spark_files, and CPython 3.11 then re-reads pyspark.zip's
+    # directory once per zipimporter on it. Measured: an empty
+    # mapInPandas over 900 rows takes ~2.7 s as 32 tasks and ~0.44 s as
+    # 4 (warm workers); ~900 images synthesize in ~1.9 core-s, so 32
+    # tasks for them spend more core-s on task set-up than on synthesis.
+    n_parts = spark.sparkContext.defaultParallelism
     return (
         image_ids_df.select("image_id")
         .distinct()

@@ -11,6 +11,12 @@ h1 = xxhash64(url), h2 = murmur3(url) — both computed JVM-side as plain
 columns, so the Arrow UDFs only ever see int64/int32 (numpy-vectorized
 bit math, zero string handling in Python).
 
+The probe only runs where it saves a shuffle: while the seen side fits
+a broadcast, the exact broadcast ``left_anti`` alone is cheaper than any
+Python-UDF stage (see :func:`filter_unseen`); the bloom is still built
+and persisted every wave so it is ready when the seen set outgrows the
+broadcast budget.
+
 Build = per-partition partial bit arrays (``mapInPandas``) OR-merged on
 the driver; at 10^10 keys with 1% fpp the array is ~12 GB — beyond one
 driver, the same OR-merge runs as a treeAggregate or per-host sharded
@@ -145,6 +151,14 @@ def maybe_seen_expr(
     )
 
 
+def _seen_side(seen: DataFrame, url_col: str, broadcast_seen: bool) -> DataFrame:
+    """The anti-join's seen side: URL-distinct and broadcast-hinted when
+    ``broadcast_seen`` (shrinks the shipped table), the bare column
+    otherwise (a shuffled ``left_anti`` needs no distinct input)."""
+    seen_urls = seen.select(url_col)
+    return F.broadcast(seen_urls.distinct()) if broadcast_seen else seen_urls
+
+
 def prefilter_new_rows(
     candidates: DataFrame,
     seen: DataFrame,
@@ -193,11 +207,14 @@ def prefilter_new_rows(
     to the plain exact anti-join over the raw rows (only sensible for
     small candidate sets — the runner keeps the group-then-filter shape
     when it has no filter structure).
+
+    ``broadcast_seen=True`` skips the tagger and returns the broadcast
+    ``left_anti`` alone — the same cost rule as :func:`filter_unseen`:
+    a broadcast hash anti-join is already an exact in-memory probe, so
+    the tagger would only add Python stages.
     """
-    seen_urls = seen.select(url_col)
-    if broadcast_seen:
-        seen_urls = F.broadcast(seen_urls.distinct())
-    if tagger is None:
+    seen_urls = _seen_side(seen, url_col, broadcast_seen)
+    if tagger is None or broadcast_seen:
         return candidates.join(seen_urls, url_col, "left_anti")
     tagged = tagger(candidates)
     definitely_new = tagged.filter(~F.col("_maybe_seen")).drop("_maybe_seen")
@@ -228,9 +245,16 @@ def filter_unseen(
 
     ``broadcast_seen``: when the caller knows the seen set is small
     (early waves — the runner tracks exact seen row counts from parquet
-    footers), hint a broadcast anti-join so neither side shuffles. At
-    10^10 seen keys the hint stays off and the maybe-seen stream (a few
-    % of candidates after the bloom) is what shuffles.
+    footers), run ONLY a broadcast anti-join: neither side shuffles and
+    the bloom is not consulted. A broadcast hash anti-join is itself an
+    exact in-memory probe, so the bloom would only add Python stages —
+    its pandas UDF runs once per branch (definitely-new and maybe), and
+    every Python task pays a fixed ~0.3 s worker set-up (PySpark's
+    ``setup_spark_files`` calls ``importlib.invalidate_caches()``, after
+    which each ``zipimporter`` on ``pyspark.zip`` re-reads the archive
+    directory) — which made it the most expensive step of a small
+    wave. At 10^10 seen keys the hint stays off and the bloom runs:
+    the maybe-seen stream (a few % of candidates) is what shuffles.
 
     The seen side is deduplicated ONLY when broadcasting (shrinks the
     shipped table): a shuffled ``left_anti`` needs no distinct input,
@@ -238,10 +262,8 @@ def filter_unseen(
     hash-aggregate pass over the entire seen history EVERY wave — at
     10^10 keys, the single largest avoidable cost in the wave loop.
     """
-    seen_urls = seen.select(url_col)
-    if broadcast_seen:
-        seen_urls = F.broadcast(seen_urls.distinct())
-    if bloom_bits is None:
+    seen_urls = _seen_side(seen, url_col, broadcast_seen)
+    if bloom_bits is None or broadcast_seen:
         return candidates.join(seen_urls, url_col, "left_anti")
     tagged = maybe_seen_expr(candidates, url_col, bloom_bits, bloom_k)
     definitely_new = tagged.filter(~F.col("_maybe_seen")).drop("_maybe_seen")

@@ -40,9 +40,12 @@ Per wave:
    are visited but expand nothing;
 5. discovered links: explode out-links, attribute each new URL to its
    first fetcher in visit order (``min_by(parent_depth, ordem)`` —
-   matches the sequential simulator exactly), bloom-prefilter + exact
-   anti-join against seen (broadcast hint while the seen set is small),
-   split on robots;
+   matches the sequential simulator exactly), exact anti-join against
+   seen, split on robots. While the seen set fits the broadcast budget
+   the anti-join is a broadcast hash probe and the bloom is skipped (it
+   would only add Python tasks, each with a fixed ~0.3 s worker set-up
+   — see ``seen.filter_unseen``); past the budget the bloom prefilters
+   and only maybe-seen rows shuffle;
 6. bloom update, per-host metrics + duration-histogram tables, and the
    next-frontier write (old − picked + discovered∧allowed) run as three
    concurrent jobs;
@@ -207,6 +210,8 @@ class CrawlRunner:
         # driver memory and Spark's 8 GB broadcast cap, which are byte
         # denominated. 64 MB default: comfortably under both, and the
         # hint auto-disables at the 10^10-key story (~TB of keys).
+        # Within the budget the links path skips the bloom/cuckoo probe
+        # (the broadcast anti-join is the exact in-memory probe).
         self.seen_broadcast_mb = seen_broadcast_mb
         self.flaky_fetch = flaky_fetch
         self.flaky_share = flaky_share
@@ -287,25 +292,63 @@ class CrawlRunner:
         seen-index table. The catalog entry is session-local (in-memory
         catalog); the FILES are the durable state under the store root,
         so a resume in a fresh session re-creates the table over the
-        existing location and recovers its partitions (MSCK)."""
+        existing location and recovers its partitions (MSCK).
+
+        A committed store whose index lacks the seeds partition (s, -1)
+        — written with ``seen_store="paths"``, or before the index
+        existed, or cut short mid-backfill — gets the index rebuilt from
+        its own tables (:meth:`_backfill_seen_index`); registering an
+        empty index there would silently empty the seen set."""
         if self.seen_store != "bucketed":
             return
-        name = self._seen_table
-        if drop:
-            import shutil
+        import shutil
 
+        name = self._seen_table
+        path = self._seen_index_path
+        if drop:
             self.spark.sql(f"DROP TABLE IF EXISTS {name}")
-            shutil.rmtree(self._seen_index_path, ignore_errors=True)
+            shutil.rmtree(path, ignore_errors=True)
         if not self.spark.catalog.tableExists(name):
-            existed = os.path.isdir(self._seen_index_path)
+            manifest = None if drop else self.store.load_manifest()
+            backfill = manifest is not None and not os.path.isdir(
+                os.path.join(path, "src=s")
+            )
+            if backfill:  # no index, or an incomplete one: rebuild whole
+                shutil.rmtree(path, ignore_errors=True)
+            existed = os.path.isdir(path)
             self.spark.sql(
                 f"CREATE TABLE {name} (url STRING, src STRING, wave INT) "
                 f"USING parquet PARTITIONED BY (src, wave) "
                 f"CLUSTERED BY (url) INTO {self.seen_buckets} BUCKETS "
-                f"LOCATION '{self._seen_index_path}'"
+                f"LOCATION '{path}'"
             )
             if existed:
                 self.spark.sql(f"MSCK REPAIR TABLE {name}")
+            if backfill:
+                try:
+                    self._backfill_seen_index(manifest["wave"])
+                except BaseException:
+                    # unregister (the table is external: files stay) so
+                    # the next registration re-checks and rebuilds
+                    self.spark.sql(f"DROP TABLE IF EXISTS {name}")
+                    raise
+
+    def _backfill_seen_index(self, wave: int) -> None:
+        """Fill an empty index from seeds, ``discovered/w*`` and
+        ``requeued/w*`` up to ``wave`` — the entries the paths store
+        reads — as two appends. Seeds go LAST: partition (s, -1) is what
+        marks the index complete, so a backfill cut short is wiped and
+        rebuilt at the next registration."""
+        entries = self._path_entries(wave).select(
+            "url", "src", F.col("_w").cast("int").alias("wave")
+        )
+        is_seed = F.col("src") == "s"
+        for part in (entries.filter(~is_seed), entries.filter(is_seed)):
+            (
+                part.repartition(self.seen_buckets, "url")
+                .write.mode("append")
+                .insertInto(self._seen_table)
+            )
 
     def _seen_idx_insert(
         self, urls_df: DataFrame, src: str, wave: int, overwrite: bool
@@ -314,20 +357,49 @@ class CrawlRunner:
 
         The pre-insert ``repartition(B, url)`` uses the same Murmur3
         bucket function as the table spec, so each task holds exactly
-        one bucket's rows → one file per bucket per partition. With
-        dynamic partition overwrite, ``overwrite=True`` replaces only
-        the (src, wave) partitions present in this batch — the
-        idempotent-replay write mode."""
-        (
-            urls_df.select(
-                F.col("url"),
-                F.lit(src).alias("src"),
-                F.lit(wave).cast("int").alias("wave"),
+        one bucket's rows → one file per bucket per partition. The
+        partition spec is STATIC, so ``overwrite=True`` replaces exactly
+        (src, wave) — the idempotent-replay write mode — whatever the
+        session's ``partitionOverwriteMode``: a dynamic-partition insert
+        under Spark's default STATIC mode would truncate the whole index
+        (seeds and every earlier wave), and the writer's
+        ``partitionOverwriteMode`` option does not reach ``insertInto``."""
+        import uuid
+
+        view = f"seen_batch_{uuid.uuid4().hex}"
+        batch = urls_df.select("url").repartition(self.seen_buckets, "url")
+        batch.createOrReplaceTempView(view)
+        verb = "OVERWRITE" if overwrite else "INTO"
+        try:
+            self.spark.sql(
+                f"INSERT {verb} TABLE {self._seen_table} "
+                f"PARTITION (src='{src}', wave={int(wave)}) SELECT url FROM {view}"
             )
-            .repartition(self.seen_buckets, "url")
-            .write.mode("overwrite" if overwrite else "append")
-            .insertInto(self._seen_table)
+        finally:
+            self.spark.catalog.dropTempView(view)
+
+    def _path_entries(self, upto_wave: int) -> DataFrame:
+        """(url, src, _w) seen entries read from the store's own tables:
+        seeds as (s, -1), ``discovered/w{N}`` as (d, N) and
+        ``requeued/w{N}`` as (r, N) for N ≤ ``upto_wave``. Waves are
+        pruned at the PATH level (see :meth:`_seen_df`)."""
+        entries = self.seeds.select(
+            "url", F.lit("s").alias("src"), F.lit(-1).alias("_w")
         )
+        for table in ("discovered", "requeued"):
+            paths = [
+                p
+                for w in range(0, upto_wave + 1)
+                if os.path.exists(p := self.store.table_dir(table, w))
+            ]
+            if paths:
+                part = self.spark.read.schema(_SEEN_ENTRY_SCHEMA).parquet(*paths)
+                entries = entries.unionByName(
+                    part.select(
+                        "url", F.lit(table[0]).alias("src"), F.col("wave").alias("_w")
+                    )
+                )
+        return entries
 
     def _seen_df(self, upto_wave: int) -> DataFrame:
         """seen = (seeds ∪ discovered ∪ requeued)[wave ≤ upto_wave]
@@ -365,18 +437,7 @@ class CrawlRunner:
                 .select("url", F.col("wave").alias("_w"))
             )
         else:
-            entries = self.seeds.select("url", F.lit(-1).alias("_w"))
-            for table in ("discovered", "requeued"):
-                paths = [
-                    p
-                    for w in range(0, upto_wave + 1)
-                    if os.path.exists(p := self.store.table_dir(table, w))
-                ]
-                if paths:
-                    part = self.spark.read.schema(_SEEN_ENTRY_SCHEMA).parquet(*paths)
-                    entries = entries.unionByName(
-                        part.select("url", F.col("wave").alias("_w"))
-                    )
+            entries = self._path_entries(upto_wave).select("url", "_w")
         evp = os.path.join(self.store.root, "evicted")
         if os.path.isdir(evp):
             ev = (

@@ -64,3 +64,13 @@ def test_spark_generation_and_fidelity(spark):
     assert all(r["pixels_ok"] and r["caption_ok"] for r in rows)
     lossy = [r for r in rows if r["fmt"] == "q5"]
     assert lossy and all(r["psnr"] >= 40.0 for r in lossy)
+
+
+def test_spark_generation_one_task_per_core(spark):
+    """One Python task per core: each pays a fixed worker set-up, so
+    the payload stage is not split finer than the cores it runs on."""
+    from crawler_tjce_spark.datagen import generate_images_spark
+
+    ids = spark.createDataFrame([(f"img-{i}",) for i in range(40)], "image_id string")
+    df = generate_images_spark(spark, ids)
+    assert df.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism

@@ -137,3 +137,51 @@ def test_distributed_bloom_merge_parity(spark):
     assert seenmod.build_bloom(empty, "url", 400) == seenmod.build_bloom(
         empty, "url", 400, distributed=True
     )
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_broadcast_seen_skips_python_probe(spark):
+    """broadcast_seen=True plans the exact broadcast anti-join alone —
+    no Arrow UDF stage — with the same rows as the bloom path; the
+    prefilter path follows the same rule for its tagger."""
+    seen_urls, cands = _dfs(spark)
+    bits = seenmod.build_bloom(seen_urls, "url", expected_n=400)
+    _, k = seenmod.bloom_params(400)
+    expected = {f"https://h{i % 5}.example/p/{i}" for i in range(200, 350)}
+
+    bloom = seenmod.filter_unseen(cands, seen_urls, "url", bits, k)
+    bcast = seenmod.filter_unseen(cands, seen_urls, "url", bits, k, broadcast_seen=True)
+    assert "ArrowEvalPython" in _plan(bloom)
+    assert "ArrowEvalPython" not in _plan(bcast)
+    assert "BroadcastHashJoin" in _plan(bcast)
+    got = {r["url"] for r in bcast.collect()}
+    assert got == {r["url"] for r in bloom.collect()} == expected
+
+    tagger = lambda df: seenmod.maybe_seen_expr(df, "url", bits, k)  # noqa: E731
+    pre = seenmod.prefilter_new_rows(cands, seen_urls, "url", tagger, broadcast_seen=True)
+    assert "ArrowEvalPython" not in _plan(pre)
+    assert {r["url"] for r in pre.collect()} == expected
+
+
+def test_runner_bloom_path_past_broadcast_budget(spark, tmp_path):
+    """With a zero broadcast budget the runner takes the bloom probe +
+    shuffled anti-join every wave; the crawl still equals the
+    reference simulator's visit order and seen set."""
+    from crawler_tjce_spark import refsim
+    from crawler_tjce_spark.datagen import WorldConfig, write_world
+    from crawler_tjce_spark.streaming.runner import CrawlRunner
+
+    world = str(tmp_path / "world_nb")
+    write_world(WorldConfig(n_hosts=4, n_pages=80, n_seeds=3), world)
+    runner = CrawlRunner(spark, world, str(tmp_path / "store_nb"), max_waves=30,
+                         bloom_expected=500, seen_broadcast_mb=0)
+    runner.run(resume=False)
+    ref = refsim.simulate(world, max_waves=30)
+    visits = sorted(
+        (r["ordem"], r["url"]) for r in runner.visits_df().select("ordem", "url").collect()
+    )
+    assert visits == [(o, u) for o, u, _, _ in ref.visits]
+    assert {r["url"] for r in runner.seen_final_df().collect()} == ref.seen
