@@ -17,7 +17,15 @@ def ensure_min_parallelism(df: DataFrame) -> DataFrame:
     already carry thousands of partitions, the guard does not trigger,
     and no shuffle is added — this is explicitly NOT an unconditional
     ``repartition(n)`` (the guide's accidental-exchange anti-pattern).
+
+    The partition count is probed only when the physical plan holds no
+    exchange. Under AQE, ``df.rdd`` on a composed plan (aggregate, join,
+    broadcast) materializes its query stages — real jobs — and the
+    returned ``repartition`` would then run them a second time. Such a
+    plan is already spread by its own shuffle, so it is returned as is.
     """
+    if "Exchange" in df._jdf.queryExecution().executedPlan().toString():
+        return df
     sc = df.sparkSession.sparkContext
     dp = sc.defaultParallelism
     try:

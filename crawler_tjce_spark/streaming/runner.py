@@ -7,15 +7,19 @@ with distributed state:
 state                 representation
 ====================  ====================================================
 frontier              full parquet snapshot per wave (``frontier/snap=N``)
-seen set              append-only: seeds ∪ all ``discovered/wave=*``
-                      partitions (never rewritten — at 10^10 keys a
-                      rewrite-per-wave would be O(waves·|seen|) I/O);
-                      plus, by default (``seen_store="bucketed"``, r6),
-                      a catalog parquet index CLUSTERED BY (url) so the
+seen set              append-only: seeds ∪ all ``discovered/w*`` ∪
+                      ``requeued/w*`` partitions (never rewritten — at
+                      10^10 keys a rewrite-per-wave would be
+                      O(waves·|seen|) I/O), read by path while the set
+                      fits the broadcast budget; once it outgrows it
+                      (``seen_store="bucketed"``, the default) a catalog
+                      parquet index CLUSTERED BY (url), built lazily by
+                      one backfill and then kept up every wave, so the
                       exact anti-join reads the seen side
                       pre-partitioned and only candidates shuffle;
                       plus a driver-held bloom bit array as prefilter,
-                      persisted per wave for resume
+                      persisted for resume (only the committed wave's
+                      snapshot is kept)
 visit log (ordem)     append-only ``visits/wave=N`` partitions
 payload               append-only ``payload/wave=N`` with lineage cols
 progress              ``_manifest.json`` atomic commit per wave
@@ -42,12 +46,18 @@ Per wave:
    first fetcher in visit order (``min_by(parent_depth, ordem)`` —
    matches the sequential simulator exactly), exact anti-join against
    seen, split on robots. While the seen set fits the broadcast budget
-   the anti-join is a broadcast hash probe and the bloom is skipped (it
-   would only add Python tasks, each with a fixed ~0.3 s worker set-up
-   — see ``seen.filter_unseen``); past the budget the bloom prefilters
-   and only maybe-seen rows shuffle;
-6. bloom update, per-host metrics + duration-histogram tables, and the
-   next-frontier write (old − picked + discovered∧allowed) run as three
+   the anti-join is a broadcast hash probe whose seen side reads the
+   path store, and neither the bloom probe nor the bucketed index is
+   touched (the bloom would only add Python tasks, each with a fixed
+   ~0.3 s worker set-up — see ``seen.filter_unseen``; the index would
+   only add a per-wave insert and a 32-bucket scan to ship a few
+   thousand URLs). Past the budget the bloom prefilters and only
+   maybe-seen rows shuffle; the first such wave builds the index once
+   from the path store (``seen_store="bucketed"``), and from then on the
+   seen side scans bucketed;
+6. bloom update, per-host metrics + duration-histogram tables, the
+   next-frontier write (old − picked + discovered∧allowed) and, once
+   the index exists, its insert of this wave's discovered URLs run as
    concurrent jobs;
 7. the payload job PIPELINES ACROSS WAVES: it is joined at the NEXT
    wave's start (or loop end), so wave N+1's scheduling/bookkeeping
@@ -68,6 +78,7 @@ deterministic given the committed state).
 from __future__ import annotations
 
 import os
+import re
 import threading
 import time
 
@@ -104,6 +115,8 @@ _VISITS_SCHEMA = _FRONTIER_SCHEMA + (
 )
 _DISCOVERED_SCHEMA = _FRONTIER_SCHEMA + ", robots_ok boolean, wave int"
 _SEEN_ENTRY_SCHEMA = "url string, wave int"
+# per-wave seen-filter snapshots in the store root (see CrawlRunner._commit)
+_FILTER_SNAPSHOT = re.compile(r"bloom_(\d+)\.bin|cuckoo_(\d+)\.npz")
 
 
 class CrawlRunner:
@@ -173,21 +186,26 @@ class CrawlRunner:
         # bench_artifacts/bigworld.json for the recorded A/B.
         self.links_prefilter = links_prefilter
         self.cuckoo_shards = cuckoo_shards
-        # Bucketed seen store (r6, VERDICT r5 #1): the exact anti-join's
-        # seen side used to hash-exchange the ENTIRE seen history every
-        # wave once it outgrew broadcast — O(seen) shuffle per wave, the
-        # engine's last named 10^10-key cost. "bucketed" maintains a
+        # Bucketed seen store (r6, VERDICT r5 #1): past the broadcast
+        # budget the exact anti-join's seen side would hash-exchange the
+        # ENTIRE seen history every wave — O(seen) shuffle per wave, the
+        # engine's last named 10^10-key cost. "bucketed" then maintains a
         # catalog parquet table CLUSTERED BY (url) INTO ``seen_buckets``
         # BUCKETS, PARTITIONED BY (src, wave): the per-wave insert moves
         # only that wave's discovered URLs (one small exchange, one file
         # per bucket), and every seen-side read scans pre-partitioned
         # (``Bucketed: true`` — only the CANDIDATE side exchanges in the
         # left_anti). Partitions: src ∈ {s,d,r} × wave, so a crash-replay
-        # dynamically overwrites exactly (d, wave) — idempotent — and
-        # wave-pruning happens on catalog partitions (the replayed
-        # wave's files are never listed, same property as the r5
-        # path-level pruning). "paths" keeps the r5 per-wave path-union
-        # read (the seen side re-shuffles per wave once past broadcast).
+        # overwrites exactly (d, wave) — idempotent — and wave-pruning
+        # happens on catalog partitions (the replayed wave's files are
+        # never listed, same property as the r5 path-level pruning).
+        # The index is LAZY: while the seen set fits the broadcast budget
+        # it buys nothing (the seen side is shipped whole either way), so
+        # the seen side reads the path store, and the first wave past the
+        # budget builds the index with one backfill; from then on it is
+        # kept up every wave, even if evictions shrink the set again.
+        # "paths" never builds it (past the budget the seen side
+        # re-shuffles per wave).
         if seen_store not in ("bucketed", "paths"):
             raise ValueError(f"seen_store must be bucketed|paths, got {seen_store!r}")
         self.seen_store = seen_store
@@ -287,58 +305,56 @@ class CrawlRunner:
         return with_robots(df, self.robots)
 
     # ------------------------------------------------- bucketed seen index
-    def _ensure_seen_index(self, drop: bool = False) -> None:
-        """Create (or re-register, after a session restart) the bucketed
-        seen-index table. The catalog entry is session-local (in-memory
-        catalog); the FILES are the durable state under the store root,
-        so a resume in a fresh session re-creates the table over the
-        existing location and recovers its partitions (MSCK).
+    def _seen_index_live(self) -> bool:
+        """The index exists and is complete: its seeds partition
+        (s, -1) is on disk. The backfill writes that partition LAST, so
+        an index cut short mid-backfill is not live and is rebuilt."""
+        return self.seen_store == "bucketed" and os.path.isdir(
+            os.path.join(self._seen_index_path, "src=s")
+        )
 
-        A committed store whose index lacks the seeds partition (s, -1)
-        — written with ``seen_store="paths"``, or before the index
-        existed, or cut short mid-backfill — gets the index rebuilt from
-        its own tables (:meth:`_backfill_seen_index`); registering an
-        empty index there would silently empty the seen set."""
-        if self.seen_store != "bucketed":
-            return
+    def _create_seen_table(self) -> None:
+        self.spark.sql(
+            f"CREATE TABLE {self._seen_table} (url STRING, src STRING, wave INT) "
+            f"USING parquet PARTITIONED BY (src, wave) "
+            f"CLUSTERED BY (url) INTO {self.seen_buckets} BUCKETS "
+            f"LOCATION '{self._seen_index_path}'"
+        )
+
+    def _drop_seen_index(self) -> None:
+        """Remove the index: its catalog entry AND its files."""
         import shutil
 
-        name = self._seen_table
-        path = self._seen_index_path
-        if drop:
-            self.spark.sql(f"DROP TABLE IF EXISTS {name}")
-            shutil.rmtree(path, ignore_errors=True)
-        if not self.spark.catalog.tableExists(name):
-            manifest = None if drop else self.store.load_manifest()
-            backfill = manifest is not None and not os.path.isdir(
-                os.path.join(path, "src=s")
-            )
-            if backfill:  # no index, or an incomplete one: rebuild whole
-                shutil.rmtree(path, ignore_errors=True)
-            existed = os.path.isdir(path)
-            self.spark.sql(
-                f"CREATE TABLE {name} (url STRING, src STRING, wave INT) "
-                f"USING parquet PARTITIONED BY (src, wave) "
-                f"CLUSTERED BY (url) INTO {self.seen_buckets} BUCKETS "
-                f"LOCATION '{path}'"
-            )
-            if existed:
-                self.spark.sql(f"MSCK REPAIR TABLE {name}")
-            if backfill:
-                try:
-                    self._backfill_seen_index(manifest["wave"])
-                except BaseException:
-                    # unregister (the table is external: files stay) so
-                    # the next registration re-checks and rebuilds
-                    self.spark.sql(f"DROP TABLE IF EXISTS {name}")
-                    raise
+        self.spark.sql(f"DROP TABLE IF EXISTS {self._seen_table}")
+        shutil.rmtree(self._seen_index_path, ignore_errors=True)
+
+    def _ensure_seen_index(self) -> bool:
+        """Register a live index in the session catalog; return whether
+        the index is live. The catalog entry is session-local
+        (in-memory catalog); the FILES are the durable state under the
+        store root, so a resume in a fresh session re-creates the table
+        over the existing location and recovers its partitions (MSCK).
+        An index that is not live is never registered: the seen side
+        reads the path store until :meth:`_backfill_seen_index` runs."""
+        if not self._seen_index_live():
+            return False
+        if not self.spark.catalog.tableExists(self._seen_table):
+            self._create_seen_table()
+            self.spark.sql(f"MSCK REPAIR TABLE {self._seen_table}")
+        return True
 
     def _backfill_seen_index(self, wave: int) -> None:
-        """Fill an empty index from seeds, ``discovered/w*`` and
+        """Build the index the first time the seen set outgrows the
+        broadcast budget: wipe whatever a cut-short build left behind,
+        create the table and fill it from seeds, ``discovered/w*`` and
         ``requeued/w*`` up to ``wave`` — the entries the paths store
-        reads — as two appends. Seeds go LAST: partition (s, -1) is what
-        marks the index complete, so a backfill cut short is wiped and
-        rebuilt at the next registration."""
+        reads — as two appends. ``wave`` is the running wave, so its
+        requeue batches are included; on a replay its stale
+        ``discovered`` entries are overwritten by the wave's own index
+        insert. Seeds go LAST: partition (s, -1) is what marks the index
+        live, so a build cut short is not live and is redone."""
+        self._drop_seen_index()
+        self._create_seen_table()
         entries = self._path_entries(wave).select(
             "url", "src", F.col("_w").cast("int").alias("wave")
         )
@@ -422,15 +438,16 @@ class CrawlRunner:
         (explicit eviction batches), so its mask join is a broadcast —
         per-wave cost ~nothing.
 
-        seen_store="bucketed" (r6): all three entry sources live in the
-        bucketed index table; the wave bound prunes catalog PARTITIONS
-        (same replay-safety as the path-level pruning — the replayed
-        wave's partition is never listed), the scan reports
-        ``Bucketed: true``, and downstream url-equality joins exchange
-        ONLY their other side. The eviction mask is a broadcast join,
-        which preserves the streamed side's bucket partitioning."""
-        if self.seen_store == "bucketed":
-            self._ensure_seen_index()  # re-registers after session restart
+        Once the bucketed index is live (``seen_store="bucketed"`` past
+        the broadcast budget — see :meth:`_backfill_seen_index`), all
+        three entry sources are read from it instead; the wave bound
+        prunes catalog PARTITIONS (same replay-safety as the path-level
+        pruning — the replayed wave's partition is never listed), the
+        scan reports ``Bucketed: true``, and downstream url-equality
+        joins exchange ONLY their other side. The eviction mask is a
+        broadcast join, which preserves the streamed side's bucket
+        partitioning."""
+        if self._ensure_seen_index():  # re-registers after session restart
             entries = (
                 self.spark.table(self._seen_table)
                 .filter(F.col("wave") <= upto_wave)
@@ -527,6 +544,19 @@ class CrawlRunner:
         # like the bloom: persist under the wave this filter will SERVE
         ckmod.save_cuckoo(self._cuckoo, self._cuckoo_path(wave + 1))
 
+    def _commit(self, manifest: dict) -> None:
+        """Commit the manifest, then delete the filter snapshots it
+        superseded (``bloom_{w}.bin`` / ``cuckoo_{w}.npz`` for waves
+        below the committed one). Kept, they pile up one per wave —
+        ~1.2 MB each at the default ``bloom_expected``, ~12 GB each at
+        10^10 keys. Resume reads only the committed wave's file, and a
+        rollback or a lost file rebuilds it from :meth:`_seen_df`."""
+        self.store.commit(manifest)
+        for name in os.listdir(self.store.root):
+            m = _FILTER_SNAPSHOT.fullmatch(name)
+            if m and int(m.group(1) or m.group(2)) < manifest["wave"]:
+                os.remove(os.path.join(self.store.root, name))
+
     # --------------------------------------------- seen-filter dispatch
     def _init_seen_filter(self, wave: int) -> None:
         if self.seen_filter == "bloom":
@@ -562,12 +592,10 @@ class CrawlRunner:
         manifest = self.store.load_manifest() if resume else None
         if manifest is None:
             with job_group(self.spark.sparkContext, "bootstrap"):
-                # fresh store → fresh index (drop a stale catalog entry
-                # AND its files); bootstrap then seeds partition (s, -1)
-                self._ensure_seen_index(drop=True)
+                # fresh store → no index (drop a stale catalog entry AND
+                # its files); the first wave past the budget builds it
+                self._drop_seen_index()
                 manifest = self._bootstrap()
-        else:
-            self._ensure_seen_index()
         with job_group(self.spark.sparkContext, "bloom_init"):
             self._init_seen_filter(manifest["wave"])
         return manifest
@@ -655,7 +683,7 @@ class CrawlRunner:
                 # payload (0.0 when the next wave's bookkeeping fully hid it)
                 entry["steps"]["payload_tail"] = round(time.time() - t0, 3)
                 break
-        self.store.commit(manifest)
+        self._commit(manifest)
 
     def run(self, resume: bool = True) -> dict:
         return self.run_waves(self.prepare(resume))
@@ -702,7 +730,7 @@ class CrawlRunner:
         )
         if manifest.get("seen_rows") is not None:
             manifest["seen_rows"] = max(0, manifest["seen_rows"] - len(urls))
-        self.store.commit(manifest)
+        self._commit(manifest)
         return removed
 
     def requeue(self, urls: list[str]) -> dict:
@@ -731,8 +759,7 @@ class CrawlRunner:
             )
         )
         self.store.write_wave(rq, "requeued", wave)
-        if self.seen_store == "bucketed":
-            self._ensure_seen_index()
+        if self._ensure_seen_index():
             # append (never overwrite): partition (r, wave) may already
             # hold earlier requeue batches, and a wave replay must not
             # wipe them (replay only overwrites (d, wave)); duplicate
@@ -771,7 +798,7 @@ class CrawlRunner:
         )
         if manifest.get("seen_rows") is not None:
             manifest["seen_rows"] += len(urls)
-        self.store.commit(manifest)
+        self._commit(manifest)
         return manifest
 
     def _bootstrap(self) -> dict:
@@ -815,10 +842,6 @@ class CrawlRunner:
             )
         )
         fpath = self.store.write_full(frontier, "frontier", 0)
-        if self.seen_store == "bucketed":
-            # seed entries land in index partition (s, -1); idempotent
-            # overwrite so a bootstrap replay cannot duplicate them
-            self._seen_idx_insert(seeds.select("url"), "s", -1, overwrite=True)
         stats = obs.get
         manifest = {
             "wave": 0,
@@ -831,7 +854,7 @@ class CrawlRunner:
             "metrics": [],
             "snapshot_id": 0,
         }
-        self.store.commit(manifest)
+        self._commit(manifest)
         return manifest
 
     def _run_wave(self, manifest: dict) -> dict:
@@ -929,7 +952,7 @@ class CrawlRunner:
             # state: its deferred commit must not be skipped over
             self._drain_payload(manifest)
             manifest["frontier_rows"] = 0
-            self.store.commit(manifest)
+            self._commit(manifest)
             return manifest
 
         # duration histogram (ref metrics.py:10-15 analog): depends only
@@ -994,10 +1017,18 @@ class CrawlRunner:
                 F.col("depth").alias("parent_depth"),
                 F.col("ordem").alias("parent_ordem"),
             ).filter(F.col("url").isNotNull())
-            seen = self._seen_df(wave - 1)
             bcast_seen = self.seen_broadcast_ok(
                 manifest.get("seen_rows"), manifest.get("avg_url_bytes", 80.0)
             )
+            index_live = self._ensure_seen_index()
+            if self.seen_store == "bucketed" and not bcast_seen and not index_live:
+                # first wave past the budget: build the index once (the
+                # wave comes from the in-memory manifest — the previous
+                # wave's commit may still be deferred)
+                with job_group(spark.sparkContext, "seen_idx"):
+                    self._backfill_seen_index(wave)
+                index_live = True
+            seen = self._seen_df(wave - 1)
             tagger = self._probe_tagger()
             if self.links_prefilter and tagger is not None:
                 # seen-probe pushdown (VERDICT r4 #1): probe every raw
@@ -1078,9 +1109,9 @@ class CrawlRunner:
         seen_idx_err: list[BaseException] = []
 
         def _seen_idx_job() -> None:
-            # r6: append this wave's discovered URLs to the bucketed seen
-            # index — the O(|wave|) write that replaces the O(|seen|)
-            # per-wave exchange the anti-join's seen side used to pay.
+            # r6: append this wave's discovered URLs to the live bucketed
+            # seen index — the O(|wave|) write that replaces the O(|seen|)
+            # per-wave exchange the anti-join's seen side would pay.
             # Reads the committed discovered partition (write-then-re-read),
             # overwrites exactly index partition (d, wave) — replay-safe.
             try:
@@ -1190,7 +1221,7 @@ class CrawlRunner:
             (metrics_thread, metrics_err),
             (hist_thread, hist_err),
         ]
-        if self.seen_store == "bucketed":
+        if index_live:
             seen_idx_thread = threading.Thread(target=_seen_idx_job, daemon=True)
             threads.append(seen_idx_thread)
             side.append((seen_idx_thread, seen_idx_err))
@@ -1236,7 +1267,7 @@ class CrawlRunner:
             # The side-job overlap therefore only pays off in payload
             # mode — exactly the mode whose wave tail it hides under.
             self._drain_side()
-            self.store.commit(manifest)
+            self._commit(manifest)
         return manifest
 
     def _fetch_payload(self, fetched: DataFrame, wave: int) -> None:

@@ -8,6 +8,8 @@ from a mid-crawl checkpoint to identical outputs.
 
 from __future__ import annotations
 
+import os
+import re
 import shutil
 
 import pytest
@@ -82,6 +84,38 @@ def test_resume_after_bloom_loss(spark, world, ref, tmp_path):
     r2 = CrawlRunner(spark, world, store, max_waves=30, bloom_expected=10_000)
     r2.run(resume=True)
     assert _spark_visits(r2) == [(o, u) for o, u, _, _ in ref.visits]
+
+
+def _filter_snapshots(store):
+    return sorted(
+        int(m.group(2))
+        for f in os.listdir(store)
+        if (m := re.fullmatch(r"(bloom|cuckoo)_(\d+)\.(bin|npz)", f))
+    )
+
+
+@pytest.mark.parametrize("seen_filter", ["bloom", "cuckoo"])
+def test_superseded_filter_snapshots_pruned(spark, world, ref, tmp_path, seen_filter):
+    """Each commit deletes the seen-filter snapshots of earlier waves;
+    a resume and a rollback + re-run rebuild what they need and still
+    reproduce the reference crawl."""
+    store = str(tmp_path / f"store_prune_{seen_filter}")
+    kw = dict(bloom_expected=10_000, seen_filter=seen_filter)
+    m1 = CrawlRunner(spark, world, store, max_waves=4, **kw).run(resume=False)
+    assert m1["wave"] == 4 and m1["frontier_rows"] > 0
+    assert _filter_snapshots(store) and min(_filter_snapshots(store)) >= m1["wave"]
+
+    r2 = CrawlRunner(spark, world, store, max_waves=30, **kw)
+    m2 = r2.run(resume=True)
+    assert min(_filter_snapshots(store)) >= m2["wave"]
+    assert _spark_visits(r2) == [(o, u) for o, u, _, _ in ref.visits]
+
+    early = next(s for s in r2.store.snapshots() if s["wave"] == 2)
+    r2.store.rollback(early["snapshot_id"])
+    r3 = CrawlRunner(spark, world, store, max_waves=30, **kw)
+    r3.run(resume=True)
+    assert _spark_visits(r3) == [(o, u) for o, u, _, _ in ref.visits]
+    assert {r["url"] for r in r3.seen_final_df().collect()} == ref.seen
 
 
 def test_politeness_budget_never_exceeded(spark, world, tmp_path):

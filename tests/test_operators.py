@@ -263,3 +263,31 @@ def test_ann_neardup_recall_vs_exact(spark, sf_dir):
     assert ann <= exact  # no false positives, ever
     recall = len(ann) / len(exact)
     assert len(exact) > 0 and recall >= 0.95, (len(ann), len(exact))
+
+
+# ---------------------------------------------------------------------------
+# parallelism guard
+# ---------------------------------------------------------------------------
+
+def test_min_parallelism_guard_runs_no_upstream_job(spark):
+    """Under AQE, probing the partition count of a shuffled plan would
+    run its upstream stages (and the repartition would run them again):
+    the guard leaves such a plan alone and submits no job. A leaf scan
+    with too few partitions is still spread to the session's cores."""
+    from crawler_tjce_spark.parallel import ensure_min_parallelism
+    from crawler_tjce_spark.perf import job_group
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    agg = spark.range(0, 1000, 1, 2).groupBy((F.col("id") % 7).alias("k")).count()
+    with job_group(sc, "min_parallelism_probe"):
+        out = ensure_min_parallelism(agg)
+    assert list(tracker.getJobIdsForGroup("min_parallelism_probe")) == []
+    assert out is agg
+
+    leaf = spark.range(0, 100, 1, 1)
+    with job_group(sc, "min_parallelism_leaf"):
+        spread = ensure_min_parallelism(leaf)
+    assert list(tracker.getJobIdsForGroup("min_parallelism_leaf")) == []
+    assert spread.rdd.getNumPartitions() == sc.defaultParallelism > 1
+    assert sorted(r["id"] for r in spread.collect()) == list(range(100))
