@@ -206,13 +206,13 @@ def generate_images_spark(
             yield pd.DataFrame(rows)
 
     # One Python task per core, like every operators/multimodal.py stage.
-    # Each Python task pays a fixed ~0.3 s before user code runs (4-vCPU
-    # VM, local[4]): PySpark's worker calls importlib.invalidate_caches()
-    # in setup_spark_files, and CPython 3.11 then re-reads pyspark.zip's
-    # directory once per zipimporter on it. Measured: an empty
-    # mapInPandas over 900 rows takes ~2.7 s as 32 tasks and ~0.44 s as
-    # 4 (warm workers); ~900 images synthesize in ~1.9 core-s, so 32
-    # tasks for them spend more core-s on task set-up than on synthesis.
+    # Each Python task pays a fixed set-up before user code runs:
+    # ~0.3 s under Spark's default worker daemon (every task re-reads
+    # Spark's zip/jar archives), ~0.1 s under session.get_spark's
+    # pydaemon. Measured on a 4-vCPU VM, local[4]: 32 empty mapInPandas
+    # tasks take ~2.9 s with the default daemon and ~1.1 s with
+    # pydaemon. With pydaemon, 2/4/8 tasks per core did not beat one
+    # per core consistently on the crawl_payload benchmark.
     n_parts = spark.sparkContext.defaultParallelism
     return (
         image_ids_df.select("image_id")

@@ -335,6 +335,11 @@ def dedup_minhash_lsh(
 # n-gram Jaccard (exact, for bounded candidate sets / oracle parity)
 # ---------------------------------------------------------------------------
 
+# Match entries one ngram_jaccard_pairs task gathers at a time (int64
+# each, a few arrays of it live at once: ~32 MB per array).
+_GATHER_ENTRIES = 1 << 22
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     text_col: str,
@@ -381,7 +386,9 @@ def ngram_jaccard_pairs(
     bit-identical. Total work is Σ_h df(h)² multiply-equivalent steps —
     the same lower bound any exact all-pairs intersection pays — spread
     over B(B+1)/2 evenly-sized tasks; per-task memory is bounded by
-    ``block_docs`` (raise/lower for executor size at scale).
+    ``block_docs`` (raise/lower for executor size at scale), and the
+    range-gather runs over slices of ~``_GATHER_ENTRIES`` matches, so a
+    shingle every document shares does not hold block_docs² at once.
 
     The result is eagerly materialized (``localCheckpoint``) so the
     substrate cache is released before returning — no leaked persist.
@@ -420,6 +427,7 @@ def ngram_jaccard_pairs(
         ),
     )
     exploded = tagged.withColumn("_task", F.explode(tasks))
+    gather_entries = _GATHER_ENTRIES
 
     def _intersect_counts(pdf: pd.DataFrame) -> pd.DataFrame:
         import numpy as np
@@ -451,38 +459,54 @@ def ngram_jaccard_pairs(
         order = np.argsort(flat_b, kind="stable")
         hb, rb = flat_b[order], rows_b[order]
         lo = np.searchsorted(hb, flat_a, "left")
-        hi = np.searchsorted(hb, flat_a, "right")
-        cnt = hi - lo
-        nz = cnt > 0
-        if not nz.any():
-            return _empty()
-        lo, cnt, ra = lo[nz], cnt[nz], rows_a[nz]
-        tot = int(cnt.sum())
-        starts = np.concatenate(([0], np.cumsum(cnt)[:-1]))
-        gather = np.arange(tot, dtype=np.int64) + np.repeat(lo - starts, cnt)
-        ii = np.repeat(ra, cnt)
-        jj = rb[gather]
-        if i == j:
-            keep = ii < jj
-            ii, jj = ii[keep], jj[keep]
-            if len(ii) == 0:
-                return _empty()
+        cnt = np.searchsorted(hb, flat_a, "right") - lo
         nb_side = len(b_idx)
-        uk, c = np.unique(ii * nb_side + jj, return_counts=True)
-        ia, jb = uk // nb_side, uk % nb_side
-        cf = c.astype(np.float64)
-        jac = cf / (lens_a[ia] + lens_b[jb] - cf)
-        keep = jac >= thr
-        if not keep.any():
+
+        def _pairs(e0: int, e1: int):
+            """(ia, jb, jaccard ≥ thr) of the a-rows owning flat_a[e0:e1]."""
+            nz = cnt[e0:e1] > 0
+            lo_s, cnt_s, ra = lo[e0:e1][nz], cnt[e0:e1][nz], rows_a[e0:e1][nz]
+            starts = np.cumsum(cnt_s) - cnt_s
+            gather = np.arange(int(cnt_s.sum()), dtype=np.int64) + np.repeat(
+                lo_s - starts, cnt_s
+            )
+            ii = np.repeat(ra, cnt_s)
+            jj = rb[gather]
+            if i == j:
+                keep = ii < jj
+                ii, jj = ii[keep], jj[keep]
+            uk, c = np.unique(ii * nb_side + jj, return_counts=True)
+            ia, jb = uk // nb_side, uk % nb_side
+            cf = c.astype(np.float64)
+            jac = cf / (lens_a[ia] + lens_b[jb] - cf)
+            keep = jac >= thr
+            return ia[keep], jb[keep], jac[keep]
+
+        # The range-gather holds one int64 per (a-shingle, b-doc) match,
+        # Σ df_a·df_b per task — a shingle shared by every document alone
+        # is block_docs². Gather a-rows in slices of ~gather_entries
+        # matches instead; a slice holds whole a-rows, so every pair's
+        # count is complete within one slice.
+        elem_end = np.cumsum(lens_a)
+        elem_start = elem_end - lens_a
+        before = np.concatenate(([0], np.cumsum(cnt)))[elem_start]
+        cuts = np.flatnonzero(np.diff(before // gather_entries)) + 1
+        row_cuts = np.concatenate(([0], cuts, [len(a_idx)]))
+        parts = [
+            _pairs(elem_start[r0], elem_end[r1 - 1])
+            for r0, r1 in zip(row_cuts[:-1], row_cuts[1:])
+        ]
+        ia, jb, jac = (np.concatenate(x) for x in zip(*parts))
+        if len(ia) == 0:
             return _empty()
-        ida = ids[a_idx][ia[keep]]
-        idb = ids[b_idx][jb[keep]]
+        ida = ids[a_idx][ia]
+        idb = ids[b_idx][jb]
         flip = idb < ida  # object-safe elementwise compare (str ids too)
         return pd.DataFrame(
             {
                 "id_a": np.where(flip, idb, ida),
                 "id_b": np.where(flip, ida, idb),
-                "jaccard": jac[keep],
+                "jaccard": jac,
             }
         )
 

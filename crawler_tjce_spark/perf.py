@@ -66,14 +66,17 @@ def _scala_seq(seq) -> list:
 def stage_attribution(spark: SparkSession) -> dict[str, dict[str, float]] | None:
     """Aggregate executor run/CPU time per job group.
 
-    Returns ``{group: {"cpu_s": ..., "run_s": ..., "tasks": n,
-    "jobs": n, "stages": n}}``, or ``None`` when the store is
+    Returns ``{group: {"cpu_s": ..., "run_s": ..., "wait_s": ...,
+    "tasks": n, "jobs": n, "stages": n, "shuffle_write_mb": ...,
+    "shuffle_read_mb": ...}}``, or ``None`` when the store is
     unreadable. Stages shared between jobs (skipped re-use) are counted
     once, for the first job that ran them. ``run_s`` is summed task run
     time (core-seconds actually occupied); ``cpu_s`` is summed task CPU
     time — their gap is scheduler wait + I/O + GC, and contention shows
     up as wall >> run_s/cores, which is exactly the distinction the
-    wall timers cannot make.
+    wall timers cannot make. ``wait_s`` is summed (first task launch −
+    stage submission): how long the group's stages sat ready with no
+    free core, e.g. a bookkeeping stage behind a payload-held core.
 
     The ``stageList`` call below hardcodes the **Spark 4.1** signature
     of the private ``AppStatusStore.stageList`` (written and tested
@@ -116,6 +119,14 @@ def _stage_attribution_unsafe(spark: SparkSession) -> dict[str, dict[str, float]
             rec["shuf_r"] = s.shuffleReadBytes()
         except Exception:
             rec["shuf_w"] = rec["shuf_r"] = 0
+        # scheduler wait: stage submission → first task launch (a stage
+        # that waits for a core another job's task holds shows it here)
+        sub, first = s.submissionTime(), s.firstTaskLaunchedTime()
+        rec["wait_ms"] = (
+            first.get().getTime() - sub.get().getTime()
+            if sub.isDefined() and first.isDefined()
+            else 0
+        )
         if sid not in by_id or rec["tasks"] > by_id[sid]["tasks"]:
             by_id[sid] = rec
 
@@ -127,8 +138,8 @@ def _stage_attribution_unsafe(spark: SparkSession) -> dict[str, dict[str, float]
         grp_opt = j.jobGroup()
         grp = grp_opt.get() if grp_opt.isDefined() else "(untagged)"
         agg = out.setdefault(
-            grp, {"cpu_s": 0.0, "run_s": 0.0, "tasks": 0, "jobs": 0, "stages": 0,
-                  "shuffle_write_mb": 0.0, "shuffle_read_mb": 0.0}
+            grp, {"cpu_s": 0.0, "run_s": 0.0, "wait_s": 0.0, "tasks": 0, "jobs": 0,
+                  "stages": 0, "shuffle_write_mb": 0.0, "shuffle_read_mb": 0.0}
         )
         agg["jobs"] += 1
         for sid in _scala_seq(j.stageIds()):
@@ -139,6 +150,7 @@ def _stage_attribution_unsafe(spark: SparkSession) -> dict[str, dict[str, float]
             rec = by_id[sid]
             agg["cpu_s"] += rec["cpu_ns"] / 1e9
             agg["run_s"] += rec["run_ms"] / 1e3
+            agg["wait_s"] += rec["wait_ms"] / 1e3
             agg["tasks"] += rec["tasks"]
             agg["stages"] += 1
             agg["shuffle_write_mb"] += rec.get("shuf_w", 0) / 1e6
@@ -146,6 +158,7 @@ def _stage_attribution_unsafe(spark: SparkSession) -> dict[str, dict[str, float]
     for agg in out.values():
         agg["cpu_s"] = round(agg["cpu_s"], 2)
         agg["run_s"] = round(agg["run_s"], 2)
+        agg["wait_s"] = round(agg["wait_s"], 2)
         agg["shuffle_write_mb"] = round(agg["shuffle_write_mb"], 2)
         agg["shuffle_read_mb"] = round(agg["shuffle_read_mb"], 2)
     return out

@@ -106,21 +106,33 @@ def with_fetch_lineage(
     url_col: str = "url",
     fail_pct: Column | None = None,
     max_attempts: int = MAX_ATTEMPTS,
+    *,
+    flaky: tuple[int, int] | None = None,
 ) -> DataFrame:
     """Attach deterministic retry lineage columns to a fetch frame.
 
+    Attempts fail at ``fail_pct`` (a Column; None → never), or, with
+    ``flaky=(flaky_share, fail_pct)``, at
+    ``host_fail_pct_expr("host", flaky_share, fail_pct)``.
+
     The expression triple is ~60 py4j round-trips to build (measured
     ~160 ms idle) and depends only on column names + literals, so the
-    never-flaky form (``fail_pct is None`` — the wave loop's default)
-    is memoized per application (``colmemo``); a caller-supplied
+    never-flaky and the ``flaky`` forms are memoized per application
+    (``colmemo``), keyed by those integers; a caller-supplied
     ``fail_pct`` Column is not hashable and takes the unmemoized path."""
+    if fail_pct is not None and flaky is not None:
+        raise ValueError("pass fail_pct or flaky, not both")
     if fail_pct is None:
         from crawler_tjce_spark.colmemo import column_memo
 
         attempts, status, backoff = column_memo(
             df.sparkSession,
-            ("fetch_lineage", url_col, max_attempts),
-            lambda: _lineage_columns(url_col, None, max_attempts),
+            ("fetch_lineage", url_col, max_attempts, flaky),
+            lambda: _lineage_columns(
+                url_col,
+                host_fail_pct_expr("host", *flaky) if flaky is not None else None,
+                max_attempts,
+            ),
         )
     else:
         attempts, status, backoff = _lineage_columns(url_col, fail_pct, max_attempts)

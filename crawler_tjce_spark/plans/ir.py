@@ -200,11 +200,27 @@ def to_dataframe(
 
     if order_cols:
         df = df.orderBy(*[F.col(n) if asc else F.desc(n) for n, asc in order_cols])
+    ordered = bool(order_cols)
     if window and window.get("Count"):
-        df = df.limit(int(window["Count"]))
+        df = _limit(df, int(window["Count"]), ordered)
     if "Top" in reduction:
-        df = df.limit(int(reduction["Top"].get("Count", 1)))
+        df = _limit(df, int(reduction["Top"].get("Count", 1)), ordered)
     return df
+
+
+# An ordered limit plans as TakeOrderedAndProject, whose per-task queue
+# preallocates ``n`` slots: a "fetch everything" count such as 10**9
+# allocated GBs per task until the kernel killed the JVM.
+_TOPK_PREALLOC_MAX = 1_000_000
+
+
+def _limit(df: DataFrame, n: int, ordered: bool) -> DataFrame:
+    """``df.limit(n)``, dropped when ordered, ``n`` is above
+    ``_TOPK_PREALLOC_MAX`` and covers every row (one count job) — a
+    limit at or above the row count is a no-op."""
+    if ordered and n > _TOPK_PREALLOC_MAX and df.count() <= n:
+        return df
+    return df.limit(n)
 
 
 def restart_token_of(df: DataFrame, order_cols: list[tuple[str, bool]]) -> list[str] | None:

@@ -249,12 +249,13 @@ def filter_unseen(
     the bloom is not consulted. A broadcast hash anti-join is itself an
     exact in-memory probe, so the bloom would only add Python stages —
     its pandas UDF runs once per branch (definitely-new and maybe), and
-    every Python task pays a fixed ~0.3 s worker set-up (PySpark's
-    ``setup_spark_files`` calls ``importlib.invalidate_caches()``, after
-    which each ``zipimporter`` on ``pyspark.zip`` re-reads the archive
-    directory) — which made it the most expensive step of a small
-    wave. At 10^10 seen keys the hint stays off and the bloom runs:
-    the maybe-seen stream (a few % of candidates) is what shuffles.
+    every Python task pays a fixed worker set-up before user code runs
+    (~0.1 s with ``session.get_spark``'s worker daemon, ``pydaemon``;
+    ~0.3 s under Spark's default one, whose workers re-read Spark's
+    zip/jar archives on every task) — which made it the most expensive
+    step of a small wave. At 10^10 seen keys the hint stays off and the
+    bloom runs: the maybe-seen stream (a few % of candidates) is what
+    shuffles.
 
     The seen side is deduplicated ONLY when broadcasting (shrinks the
     shipped table): a shuffled ``left_anti`` needs no distinct input,

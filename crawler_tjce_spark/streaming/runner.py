@@ -49,7 +49,7 @@ Per wave:
    the anti-join is a broadcast hash probe whose seen side reads the
    path store, and neither the bloom probe nor the bucketed index is
    touched (the bloom would only add Python tasks, each with a fixed
-   ~0.3 s worker set-up — see ``seen.filter_unseen``; the index would
+   worker set-up — see ``seen.filter_unseen``; the index would
    only add a per-wave insert and a 32-bucket scan to ship a few
    thousand URLs). Past the budget the bloom prefilters and only
    maybe-seen rows shuffle; the first such wave builds the index once
@@ -205,7 +205,8 @@ class CrawlRunner:
         # budget builds the index with one backfill; from then on it is
         # kept up every wave, even if evictions shrink the set again.
         # "paths" never builds it (past the budget the seen side
-        # re-shuffles per wave).
+        # re-shuffles per wave) and drops one a bucketed run left (see
+        # prepare).
         if seen_store not in ("bucketed", "paths"):
             raise ValueError(f"seen_store must be bucketed|paths, got {seen_store!r}")
         self.seen_store = seen_store
@@ -590,11 +591,14 @@ class CrawlRunner:
         the steady-state crawl loop separately from setup (a production
         crawl amortizes bootstrap over days of waves)."""
         manifest = self.store.load_manifest() if resume else None
+        # A fresh store has no index, and a "paths" run never inserts into
+        # one, so a later "bucketed" resume would read a live but
+        # incomplete index: drop it (catalog entry AND files); the first
+        # bucketed wave past the budget rebuilds it.
+        if manifest is None or self.seen_store == "paths":
+            self._drop_seen_index()
         if manifest is None:
             with job_group(self.spark.sparkContext, "bootstrap"):
-                # fresh store → no index (drop a stale catalog entry AND
-                # its files); the first wave past the budget builds it
-                self._drop_seen_index()
                 manifest = self._bootstrap()
         with job_group(self.spark.sparkContext, "bloom_init"):
             self._init_seen_filter(manifest["wave"])
@@ -759,7 +763,9 @@ class CrawlRunner:
             )
         )
         self.store.write_wave(rq, "requeued", wave)
-        if self._ensure_seen_index():
+        if self.seen_store == "paths":
+            self._drop_seen_index()  # see prepare
+        elif self._ensure_seen_index():
             # append (never overwrite): partition (r, wave) may already
             # hold earlier requeue batches, and a wave replay must not
             # wipe them (replay only overwrites (d, wave)); duplicate
@@ -901,10 +907,8 @@ class CrawlRunner:
                     politeness_pick_ordem(budgeted, manifest["ordem_offset"],
                                           salt_buckets=self.salt_buckets,
                                           n_hosts=manifest.get("frontier_hosts")),
-                    fail_pct=(
-                        fetchmod.host_fail_pct_expr(
-                            "host", self.flaky_share, self.flaky_fail_pct
-                        )
+                    flaky=(
+                        (self.flaky_share, self.flaky_fail_pct)
                         if self.flaky_fetch
                         else None
                     ),

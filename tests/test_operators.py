@@ -127,6 +127,38 @@ def test_ngram_jaccard_matches_bruteforce(spark):
     assert got == expected and len(expected) > 0
 
 
+def test_ngram_jaccard_sliced_gather_identical(spark, monkeypatch):
+    """A boilerplate shingle in every document makes the range-gather
+    all-pairs; gathering it in tiny slices gives identical pairs."""
+    words = "alpha beta gamma delta epsilon zeta eta theta iota kappa".split()
+    docs = [
+        (i, f"copyright tribunal de justica {words[i % 10]} {words[(i * 3) % 10]} "
+            f"{words[(i * 7) % 10]} item {i % 4}")
+        for i in range(40)
+    ]
+    df = spark.createDataFrame(docs, "doc_id long, text string")
+
+    def pairs(n_blocks):
+        return sorted(
+            (r["id_a"], r["id_b"], r["jaccard"])
+            for r in dedup.ngram_jaccard_pairs(
+                df, "text", "doc_id", 0.3, n_blocks=n_blocks
+            ).collect()
+        )
+
+    whole = pairs(1)
+    monkeypatch.setattr(dedup, "_GATHER_ENTRIES", 3)
+    sliced = pairs(1)
+    assert sliced == whole and len(whole) > 0
+    assert pairs(3) == whole  # cross-block tasks slice the same way
+    expected = sorted(
+        (ia, ib, j)
+        for (ia, ta), (ib, tb) in itertools.combinations(docs, 2)
+        if (j := _jaccard(_shingle_set(ta), _shingle_set(tb))) >= 0.3
+    )
+    assert [(a, b) for a, b, _ in sliced] == [(a, b) for a, b, _ in expected]
+
+
 def test_minhash_lsh_finds_near_dups(spark):
     df = spark.createDataFrame(DOCS, "doc_id long, text string")
     pairs = {

@@ -51,6 +51,30 @@ def test_fetch_lineage_expr_matches_sequential_replica(spark):
     assert {s for _, s, _ in got.values()} == {"ok", "error"}
 
 
+def test_flaky_lineage_columns_built_once(spark, world, tmp_path, monkeypatch):
+    """The flaky-mode lineage Columns are memoized by (flaky_share,
+    flaky_fail_pct): two waves build them once (the lineage values are
+    checked by test_flaky_crawl_converges_with_simulator)."""
+    from crawler_tjce_spark.plans import fetch as fetchmod
+
+    builds = []
+    real = fetchmod._lineage_columns
+
+    def counting(*args):
+        builds.append(args)
+        return real(*args)
+
+    monkeypatch.setattr(fetchmod, "_lineage_columns", counting)
+    # integers no other test uses, so the memo starts cold for them
+    share, pct = 37, 53
+    runner = CrawlRunner(spark, world, str(tmp_path / "store_memo"), max_waves=2,
+                         bloom_expected=10_000, flaky_fetch=True,
+                         flaky_share=share, flaky_fail_pct=pct)
+    m = runner.run(resume=False)
+    assert m["wave"] == 2
+    assert len(builds) == 1
+
+
 def test_flaky_crawl_converges_with_simulator(spark, world, tmp_path):
     """Injected flaky hosts: visit order, seen set, AND the per-URL
     attempt/backoff lineage all match the sequential simulator."""

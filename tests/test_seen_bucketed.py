@@ -255,3 +255,27 @@ def test_resume_reads_and_inserts_into_live_index(spark, world, tmp_path):
     assert _index_parts(store, "d") == [0, 1, 2, 3]
     assert "Bucketed: true" in _anti_join_plan(spark, r2)
     _ref_match(r2, world, 4)
+
+
+def test_paths_resume_drops_live_index(spark, world, tmp_path):
+    """bucketed past the budget → "paths" resume → "bucketed" resume:
+    the paths run never inserts into the index, so it drops the live
+    one; the bucketed resume rebuilds it and the crawl equals refsim."""
+    store = str(tmp_path / "store_switch")
+    r = CrawlRunner(
+        spark, world, store, max_waves=2, seen_store="bucketed", seen_broadcast_mb=0
+    )
+    r.run(resume=False)
+    assert r._seen_index_live()
+    p = CrawlRunner(
+        spark, world, store, max_waves=4, seen_store="paths", seen_broadcast_mb=0
+    )
+    m = p.run(resume=True)
+    assert m["wave"] == 4
+    assert not os.path.exists(os.path.join(store, "seen_idx"))
+    b = CrawlRunner(
+        spark, world, store, max_waves=6, seen_store="bucketed", seen_broadcast_mb=0
+    )
+    m = b.run(resume=True)
+    assert b._seen_index_live()
+    _ref_match(b, world, m["wave"])
