@@ -227,9 +227,6 @@ def crawl_worker(cores: int, out_path: str) -> None:
         fetch_images=True,
         image_size_scale=BENCH_IMG_SCALE,
         image_octaves=BENCH_IMG_OCTAVES,
-        # A/B knob for the links-path seen-probe pushdown (VERDICT r4 #1;
-        # measured and rejected as default — see bigworld.json)
-        links_prefilter=os.environ.get("SPARK_BENCH_LINKS_PREFILTER", "0") == "1",
     )
     from crawler_tjce_spark.perf import job_group as _jg
 

@@ -127,7 +127,7 @@ def main(argv: list[str] | None = None) -> int:
                 args.world,
                 args.store,
                 max_waves=args.max_waves,
-                use_bloom=not args.no_bloom,
+                seen_filter="none" if args.no_bloom else "bloom",
                 fetch_images=args.fetch_images,
                 flaky_fetch=args.flaky_fetch,
                 flaky_share=args.flaky_share,

@@ -44,6 +44,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType
 
+from crawler_tjce_spark.plans import seen as seenmod
+
 SLOTS = 4  # slots per bucket (b=4: ~95% achievable load, fpp ≈ 8/2^16)
 MAX_KICKS = 500
 # odd multiplier spreads the 16-bit fingerprint across bucket-index bits
@@ -59,7 +61,7 @@ class CuckooFilter:
     (fingerprints are forced nonzero). Pickles cleanly, so the whole
     object can be handed to ``sc.broadcast`` for executor-side probes.
 
-    Single-copy invariant (ADVICE r4): every distinct key occupies at
+    Single-copy invariant: every distinct key occupies at
     most ONE slot. :func:`build_cuckoo` enforces it by deduplicating
     (h1, h2) inside each shard task; driver-side callers of
     :meth:`insert_hashed` must insert only keys not already present
@@ -196,8 +198,7 @@ def build_cuckoo(
         # exact, shuffle-free dedup (keys the filter could tell apart
         # are never merged; a full-hash twin is indistinguishable to it
         # anyway). Without it dup-carrying seen sets burn slots
-        # (overflow below expected_n distinct) and survive delete()
-        # (ADVICE r4, medium).
+        # (overflow below expected_n distinct) and survive delete().
         pairs = np.unique(
             np.stack([pdf["h1"].to_numpy(), pdf["h2"].to_numpy()], axis=1), axis=0
         )
@@ -311,19 +312,10 @@ def filter_unseen_cuckoo(
     cf: CuckooFilter | Broadcast | None = None,
     broadcast_seen: bool = False,
 ) -> DataFrame:
-    """Candidates not in the seen set: cuckoo prefilter + authoritative
-    exact ``left_anti`` — drop-in parallel of ``seen.filter_unseen``
-    (incl. its dedup-only-when-broadcasting seen-side contract)."""
-    seen_urls = seen.select(url_col)
-    if broadcast_seen:
-        seen_urls = F.broadcast(seen_urls.distinct())
-    if cf is None:
-        return candidates.join(seen_urls, url_col, "left_anti")
-    tagged = maybe_seen_expr_cuckoo(candidates, url_col, cf)
-    definitely_new = tagged.filter(~F.col("_maybe_seen")).drop("_maybe_seen")
-    maybe = tagged.filter(F.col("_maybe_seen")).drop("_maybe_seen")
-    checked = maybe.join(seen_urls, url_col, "left_anti")
-    return definitely_new.unionByName(checked)
+    """Candidates not in the seen set: ``seen.filter_unseen`` with the
+    cuckoo probe as its tagger (``cf=None`` → exact anti-join alone)."""
+    tagger = None if cf is None else (lambda df: maybe_seen_expr_cuckoo(df, url_col, cf))
+    return seenmod.filter_unseen(candidates, seen, url_col, tagger, broadcast_seen)
 
 
 def hashes_for_urls(spark, urls: list[str]) -> tuple[np.ndarray, np.ndarray]:

@@ -99,7 +99,7 @@ def with_robots_literal(
     whole-stage codegen with zero jobs, zero shuffles, zero broadcasts.
     The broadcast join stays the path for big rule tables (a 10^6-entry
     literal would bloat the plan); the crawl runner switches on
-    ``robots_literal_max_hosts``. Empty rules → all defaults (allowed,
+    its ``ROBOTS_LITERAL_MAX_HOSTS``. Empty rules → all defaults (allowed,
     budget 4), mirroring the join's unknown-host behavior. The map
     Columns are memoized per (session, rules) — see ``_literal_maps``."""
     host = F.col("host")

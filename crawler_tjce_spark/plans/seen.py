@@ -13,8 +13,9 @@ bit math, zero string handling in Python).
 
 The probe only runs where it saves a shuffle: while the seen side fits
 a broadcast, the exact broadcast ``left_anti`` alone is cheaper than any
-Python-UDF stage (see :func:`filter_unseen`); the bloom is still built
-and persisted every wave so it is ready when the seen set outgrows the
+Python-UDF stage (see :func:`filter_unseen`, which takes the bloom or
+the cuckoo probe as its tagger); the filter is still built and
+persisted every wave so it is ready when the seen set outgrows the
 broadcast budget.
 
 Build = per-partition partial bit arrays (``mapInPandas``) OR-merged on
@@ -68,10 +69,9 @@ def build_bloom(
     array per upstream partition lands on the driver. Fine while
     P × m/8 bytes is driver-sized (the sandbox's ~1.2 MB arrays).
 
-    ``distributed=True`` (r6, VERDICT r5 #8 — the cluster-scale merge
-    path as code, not prose): partials are OR-merged executor-side via
-    ``treeReduce``, so the driver receives exactly ONE array regardless
-    of partition count. At the documented 10^10-key/1% story the array
+    ``distributed=True`` (the cluster-scale merge path): partials are
+    OR-merged executor-side via ``treeReduce``, so the driver receives
+    exactly ONE array regardless of partition count. At the documented 10^10-key/1% story the array
     is ~12 GB — with thousands of partials the driver-merge form would
     pull terabytes through the driver; the tree form moves each level's
     arrays between executors and ships one result. OR is associative
@@ -130,7 +130,7 @@ def maybe_seen_expr(
     at the sandbox's ~1.2 MB array, pathological at the documented
     10^8-key mid-scale (~120 MB/task). A broadcast ships once per
     executor and is cached there, which is why the crawl runner always
-    passes the handle (VERDICT r3 missing #4)."""
+    passes the handle."""
     is_bc = isinstance(bloom_bits, Broadcast)
     # Broadcast.value on the DRIVER reads the locally-kept copy — no job
     m = (len(bloom_bits.value) if is_bc else len(bloom_bits)) * 8
@@ -151,122 +151,47 @@ def maybe_seen_expr(
     )
 
 
-def _seen_side(seen: DataFrame, url_col: str, broadcast_seen: bool) -> DataFrame:
-    """The anti-join's seen side: URL-distinct and broadcast-hinted when
-    ``broadcast_seen`` (shrinks the shipped table), the bare column
-    otherwise (a shuffled ``left_anti`` needs no distinct input)."""
-    seen_urls = seen.select(url_col)
-    return F.broadcast(seen_urls.distinct()) if broadcast_seen else seen_urls
-
-
-def prefilter_new_rows(
+def filter_unseen(
     candidates: DataFrame,
     seen: DataFrame,
     url_col: str = "url",
     tagger=None,
     broadcast_seen: bool = False,
 ) -> DataFrame:
-    """Row-level unseen filter applied BEFORE any dedup/aggregation —
-    the links-path pushdown (VERDICT r4 #1).
-
-    ``filter_unseen`` assumes its candidates are already URL-distinct;
-    the crawl's links path used to get there with a ``groupBy(url)``
-    over EVERY exploded out-link, which at 10^8-URL waves shuffles the
-    whole discovered-link stream — dominated, in a converged crawl, by
-    links to already-seen URLs — before the filter structure has pruned
-    anything. Here the probe runs as a map-side projection over the raw
-    rows and the streams split BEFORE the shuffle:
-
-    * probe-negative rows are DEFINITELY NEW (no false negatives) and
-      flow to the caller's aggregation unchecked — in a converged crawl
-      this is the small stream;
-    * probe-positive rows reduce to a URL-ONLY ``distinct`` (narrower
-      rows than the caller's aggregate, and the dominant truly-seen
-      traffic collapses map-side) whose survivors of the authoritative
-      exact anti-join are the bloom/cuckoo FALSE POSITIVES — expected
-      ``fpp × |distinct new URLs|``, i.e. tiny — broadcast back as a
-      semi-join to recover their full rows.
-
-    Equivalence: the tag is a pure function of the URL, so every row of
-    a URL takes the same branch; output rows = candidates whose URL is
-    not in ``seen``, exactly (false positives are recovered by the
-    exact check, never dropped). What no longer happens is the seen-URL
-    traffic entering a full-width shuffle: it dies in the map-side
-    partial aggregate of a url-only distinct.
-
-    Cost note: the candidate subtree is evaluated by three consumers
-    (new stream, maybe-url distinct, false-positive recovery) — the
-    explode recomputes instead of re-reading a shuffle. That is the
-    intended trade at cluster scale (CPU-cheap recompute vs network
-    shuffle of the dominant stream); the A/B on the 20× world is
-    recorded in BENCH.md.
-
-    ``tagger``: callable df → df with a boolean ``_maybe_seen`` (the
-    bloom's :func:`maybe_seen_expr` or the cuckoo's
-    ``maybe_seen_expr_cuckoo``, partially applied). ``None`` falls back
-    to the plain exact anti-join over the raw rows (only sensible for
-    small candidate sets — the runner keeps the group-then-filter shape
-    when it has no filter structure).
-
-    ``broadcast_seen=True`` skips the tagger and returns the broadcast
-    ``left_anti`` alone — the same cost rule as :func:`filter_unseen`:
-    a broadcast hash anti-join is already an exact in-memory probe, so
-    the tagger would only add Python stages.
-    """
-    seen_urls = _seen_side(seen, url_col, broadcast_seen)
-    if tagger is None or broadcast_seen:
-        return candidates.join(seen_urls, url_col, "left_anti")
-    tagged = tagger(candidates)
-    definitely_new = tagged.filter(~F.col("_maybe_seen")).drop("_maybe_seen")
-    maybe = tagged.filter(F.col("_maybe_seen")).drop("_maybe_seen")
-    fp_urls = (
-        maybe.select(url_col).distinct().join(seen_urls, url_col, "left_anti")
-    )
-    # fp_urls is bounded by fpp × distinct-new-URLs — broadcast is safe
-    # by construction (a saturated/undersized bloom degrades this the
-    # same way it degraded the old path's anti-join width)
-    recovered = maybe.join(F.broadcast(fp_urls), url_col, "left_semi")
-    return definitely_new.unionByName(recovered)
-
-
-def filter_unseen(
-    candidates: DataFrame,
-    seen: DataFrame,
-    url_col: str = "url",
-    bloom_bits: bytes | Broadcast | None = None,
-    bloom_k: int = 0,
-    broadcast_seen: bool = False,
-) -> DataFrame:
-    """Candidates not in the seen set: bloom prefilter (optional) +
+    """Candidates not in the seen set: filter probe (optional) +
     authoritative exact ``left_anti``.
 
-    The definitely-new stream (bloom miss) bypasses the anti-join
-    entirely; only maybe-seen rows shuffle. Result = union of both.
+    ``tagger``: callable df → df with a boolean ``_maybe_seen`` — the
+    bloom's :func:`maybe_seen_expr` or the cuckoo's
+    ``maybe_seen_expr_cuckoo``, partially applied. The definitely-new
+    stream (probe miss) bypasses the anti-join entirely; only maybe-seen
+    rows shuffle. Result = union of both. ``None`` runs the exact
+    anti-join alone.
 
     ``broadcast_seen``: when the caller knows the seen set is small
-    (early waves — the runner tracks exact seen row counts from parquet
-    footers), run ONLY a broadcast anti-join: neither side shuffles and
-    the bloom is not consulted. A broadcast hash anti-join is itself an
-    exact in-memory probe, so the bloom would only add Python stages —
-    its pandas UDF runs once per branch (definitely-new and maybe), and
-    every Python task pays a fixed worker set-up before user code runs
-    (~0.1 s with ``session.get_spark``'s worker daemon, ``pydaemon``;
-    ~0.3 s under Spark's default one, whose workers re-read Spark's
-    zip/jar archives on every task) — which made it the most expensive
-    step of a small wave. At 10^10 seen keys the hint stays off and the
-    bloom runs: the maybe-seen stream (a few % of candidates) is what
-    shuffles.
+    (the runner tracks its size against a byte budget), run ONLY a
+    broadcast anti-join: neither side shuffles and the probe is not
+    consulted. A broadcast hash anti-join is itself an exact in-memory
+    probe, so the tagger would only add Python stages — its pandas UDF
+    runs once per branch (definitely-new and maybe), and every Python
+    task pays a fixed worker set-up before user code runs (~0.1 s with
+    ``session.get_spark``'s worker daemon, ``pydaemon``; ~0.3 s under
+    Spark's default one, whose workers re-read Spark's zip/jar archives
+    on every task) — which made it the most expensive step of a small
+    wave. At 10^10 seen keys the hint stays off and the probe runs: the
+    maybe-seen stream (a few % of candidates) is what shuffles.
 
     The seen side is deduplicated ONLY when broadcasting (shrinks the
     shipped table): a shuffled ``left_anti`` needs no distinct input,
-    and the r4 shape's unconditional ``.distinct()`` was a full
-    hash-aggregate pass over the entire seen history EVERY wave — at
-    10^10 keys, the single largest avoidable cost in the wave loop.
+    and an unconditional ``.distinct()`` would be a full hash-aggregate
+    pass over the entire seen history every wave.
     """
-    seen_urls = _seen_side(seen, url_col, broadcast_seen)
-    if bloom_bits is None or broadcast_seen:
+    seen_urls = seen.select(url_col)
+    if broadcast_seen:
+        seen_urls = F.broadcast(seen_urls.distinct())
+    if tagger is None or broadcast_seen:
         return candidates.join(seen_urls, url_col, "left_anti")
-    tagged = maybe_seen_expr(candidates, url_col, bloom_bits, bloom_k)
+    tagged = tagger(candidates)
     definitely_new = tagged.filter(~F.col("_maybe_seen")).drop("_maybe_seen")
     maybe = tagged.filter(F.col("_maybe_seen")).drop("_maybe_seen")
     checked = maybe.join(seen_urls, url_col, "left_anti")

@@ -10,8 +10,12 @@ oracle (DuckDB timestamps are UTC-naive).
 
 from __future__ import annotations
 
+import atexit
+import functools
 import os
+import pkgutil
 import site
+import tempfile
 
 from pyspark.sql import SparkSession
 
@@ -32,6 +36,34 @@ def _workers_import_package() -> bool:
     roots = [os.getcwd(), *os.environ.get("PYTHONPATH", "").split(os.pathsep)]
     roots += site.getsitepackages()
     return any(r and os.path.realpath(r) == _PACKAGE_PARENT for r in roots)
+
+
+def _driver_memory() -> str:
+    """``$SPARK_GRAFT_DRIVER_MEM``, else half the host's physical memory
+    capped at 48g: a runaway plan then fails with a JVM OutOfMemoryError
+    instead of growing the heap until the kernel kills the driver."""
+    if "SPARK_GRAFT_DRIVER_MEM" in os.environ:
+        return os.environ["SPARK_GRAFT_DRIVER_MEM"]
+    try:
+        phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, ValueError, OSError):  # no sysconf (Windows)
+        return "48g"
+    return f"{max(1024, min(48 * 1024, phys // 2 // 2**20))}m"
+
+
+@functools.lru_cache(maxsize=None)
+def _allocation_file() -> str:
+    """Path of the FAIR allocation file. Imported from an archive
+    (``spark-submit --py-files <zip>``) the packaged file is no real
+    path the JVM can open, so its bytes go to a temp file."""
+    path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "fairscheduler.xml")
+    if os.path.isfile(path):
+        return path
+    fd, tmp = tempfile.mkstemp(prefix="fairscheduler-", suffix=".xml")
+    with os.fdopen(fd, "wb") as f:
+        f.write(pkgutil.get_data(__package__, "fairscheduler.xml"))
+    atexit.register(os.remove, tmp)
+    return tmp
 
 
 def get_spark(
@@ -69,7 +101,7 @@ def get_spark(
         # crashed wave by overwriting ONLY that wave's partition (static
         # mode would wipe the whole table on every insert-overwrite)
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", _driver_memory())
         .config("spark.ui.enabled", "false")
         # FAIR scheduling: the crawl runner overlaps the big payload-fetch
         # job with small bookkeeping jobs (links/seen/frontier) from a
@@ -79,10 +111,7 @@ def get_spark(
         # FAIR — without it intra-pool scheduling is FIFO and the mode
         # alone changes nothing (ADVICE r2).
         .config("spark.scheduler.mode", "FAIR")
-        .config(
-            "spark.scheduler.allocation.file",
-            os.path.join(os.path.dirname(os.path.abspath(__file__)), "fairscheduler.xml"),
-        )
+        .config("spark.scheduler.allocation.file", _allocation_file())
     )
     # The worker daemon drops Spark's zip/jar archives from the worker path
     # and imports the installed pyspark instead (see pydaemon): each Python

@@ -11,22 +11,22 @@ seen set              append-only: seeds ∪ all ``discovered/w*`` ∪
                       ``requeued/w*`` partitions (never rewritten — at
                       10^10 keys a rewrite-per-wave would be
                       O(waves·|seen|) I/O), read by path while the set
-                      fits the broadcast budget; once it outgrows it
-                      (``seen_store="bucketed"``, the default) a catalog
-                      parquet index CLUSTERED BY (url), built lazily by
-                      one backfill and then kept up every wave, so the
-                      exact anti-join reads the seen side
+                      fits the broadcast budget; once it outgrows it, a
+                      catalog parquet index CLUSTERED BY (url), built
+                      lazily by one backfill and then kept up every
+                      wave, so the exact anti-join reads the seen side
                       pre-partitioned and only candidates shuffle;
-                      plus a driver-held bloom bit array as prefilter,
-                      persisted for resume (only the committed wave's
-                      snapshot is kept)
+                      plus a driver-held bloom or cuckoo filter as
+                      prefilter, persisted for resume (only the
+                      committed wave's snapshot is kept)
 visit log (ordem)     append-only ``visits/wave=N`` partitions
 payload               append-only ``payload/wave=N`` with lineage cols
 progress              ``_manifest.json`` atomic commit per wave
 ====================  ====================================================
 
 Per wave:
-1. broadcast-join robots budgets onto the frontier;
+1. robots budgets (literal maps, or a broadcast join for big rule
+   tables) onto the frontier;
 2. fused salted politeness pick + global ``ordem``
    (``plans.frontier.politeness_pick_ordem`` — the stage-2 politeness
    rank IS the within-host visit rank, and the cross-host offsets come
@@ -34,9 +34,9 @@ Per wave:
    + deterministic fetch retry/backoff lineage (``plans.fetch``); the
    visit-log parquet write is the wave's ONE materialization of the
    picked set — payload and links re-read the written file, the picked
-   count comes from its footers;
-3. payload fetch launches CONCURRENTLY (own thread, FAIR pool with
-   fair intra-pool sharing): it depends only on the picked set, so the
+   count rides the write as an ``Observation``;
+3. payload fetch runs as a background job (FAIR pool with fair
+   intra-pool sharing): it depends only on the picked set, so the
    wave's bookkeeping hides under it instead of adding to it;
 4. "fetch" = join picked URLs against the pages table (the synthetic
    web); real fetching swaps in an Arrow-batched UDF with identical
@@ -47,23 +47,24 @@ Per wave:
    matches the sequential simulator exactly), exact anti-join against
    seen, split on robots. While the seen set fits the broadcast budget
    the anti-join is a broadcast hash probe whose seen side reads the
-   path store, and neither the bloom probe nor the bucketed index is
-   touched (the bloom would only add Python tasks, each with a fixed
-   worker set-up — see ``seen.filter_unseen``; the index would
-   only add a per-wave insert and a 32-bucket scan to ship a few
-   thousand URLs). Past the budget the bloom prefilters and only
+   path store, and neither the filter probe nor the bucketed index is
+   touched (the probe would only add Python tasks, each with a fixed
+   worker set-up — see ``seen.filter_unseen``; the index would only add
+   a per-wave insert and a bucketed scan to ship a few thousand URLs).
+   Past the budget the bloom or cuckoo probe prefilters and only
    maybe-seen rows shuffle; the first such wave builds the index once
-   from the path store (``seen_store="bucketed"``), and from then on the
-   seen side scans bucketed;
-6. bloom update, per-host metrics + duration-histogram tables, the
-   next-frontier write (old − picked + discovered∧allowed) and, once
-   the index exists, its insert of this wave's discovered URLs run as
-   concurrent jobs;
-7. the payload job PIPELINES ACROSS WAVES: it is joined at the NEXT
-   wave's start (or loop end), so wave N+1's scheduling/bookkeeping
-   runs under wave N's payload tail; wave N's manifest commit
-   (+ snapshot log for time travel) is deferred to that join, keeping
-   the resume invariant "a committed wave is fully on disk".
+   from the path store, and from then on the seen side scans bucketed;
+6. seen-filter update, per-host metrics + duration-histogram tables,
+   the next-frontier write (old − picked + discovered∧allowed) and,
+   once the index exists, its insert of this wave's discovered URLs run
+   as concurrent background jobs (:meth:`CrawlRunner._spawn`); only the
+   frontier is waited on in-wave, the rest are drained after the next
+   wave's pick;
+7. the payload job PIPELINES ACROSS WAVES: it is waited on at the NEXT
+   wave's payload start (or loop end), so wave N+1's pick runs under
+   wave N's payload tail; wave N's manifest commit (+ snapshot log for
+   time travel) is deferred to that point, keeping the resume invariant
+   "a committed wave is fully on disk".
 
 Every wave's outputs are written then *re-read* before use: this
 truncates the logical plan (no unbounded lineage growth across waves)
@@ -77,15 +78,21 @@ deterministic given the committed state).
 
 from __future__ import annotations
 
+import hashlib
 import os
 import re
+import shutil
 import threading
 import time
+import uuid
+from concurrent import futures
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from crawler_tjce_spark.functions.urlkit import url_host
 from crawler_tjce_spark.perf import job_group
+from crawler_tjce_spark.plans import cuckoo as ckmod
 from crawler_tjce_spark.plans import fetch as fetchmod
 from crawler_tjce_spark.plans import seen as seenmod
 from crawler_tjce_spark.plans.frontier import (
@@ -98,13 +105,24 @@ from crawler_tjce_spark.sources.tableio import SnapshotStore
 
 FRONTIER_COLS = ["url", "host", "depth", "discovered_wave", "salient"]
 
+# bloom false-positive rate (sizes the bit array with bloom_expected)
+BLOOM_FPP = 0.01
+# salt buckets of the politeness pick's hot-host split
+SALT_BUCKETS = 16
+# robots rule tables up to this many rows are baked into the plan as
+# create_map literals: the pick and the links step attach robots every
+# wave, and a broadcast join submits a broadcast-build job per query. A
+# bigger table keeps the broadcast join (its literal would bloat plans).
+ROBOTS_LITERAL_MAX_HOSTS = 4096
+# cuckoo filter shards (a power of two)
+CUCKOO_SHARDS = 32
+# buckets of the seen index (its CLUSTERED BY (url) spec)
+SEEN_BUCKETS = 32
+
 # Explicit read schemas for the per-wave hot paths. Every
-# schema-less ``spark.read.parquet`` runs a footer-inference job
-# (observed: one "parquet at NativeMethodAccessorImpl" job per wave,
-# ~0.1-0.35 s of pure driver latency in the multi-wave regime, plus
-# one inside each group that re-reads its own write); the runner
-# wrote these files itself, so the schemas are known statically and
-# inference buys nothing. Partial schemas (``_SEEN_ENTRY_SCHEMA``)
+# schema-less ``spark.read.parquet`` runs a footer-inference job; the
+# runner wrote these files itself, so the schemas are known statically
+# and inference buys nothing. Partial schemas (``_SEEN_ENTRY_SCHEMA``)
 # are legal for parquet and double as read-side column pruning.
 _FRONTIER_SCHEMA = (
     "url string, host string, depth int, discovered_wave int, salient boolean"
@@ -126,133 +144,66 @@ class CrawlRunner:
         world_dir: str,
         store_root: str,
         max_waves: int = 50,
-        use_bloom: bool = True,
         bloom_expected: int = 1_000_000,
-        bloom_fpp: float = 0.01,
-        salt_buckets: int = 16,
         fetch_images: bool = False,
         image_size_scale: int = 1,
         image_octaves: int = 6,
-        seen_broadcast_mb: int = 64,
+        seen_broadcast_mb: float = 64,
         flaky_fetch: bool = False,
         flaky_share: int = 10,
         flaky_fail_pct: int = 40,
-        adaptive_bookkeeping: bool = True,
-        robots_literal_max_hosts: int = 4096,
-        seen_filter: str | None = None,
-        links_prefilter: bool = False,
-        cuckoo_shards: int = 32,
+        seen_filter: str = "bloom",
         seen_store: str = "bucketed",
-        seen_buckets: int = 32,
     ):
         self.spark = spark
-        # True (default) keeps the session's AQE setting for the crawl
-        # loop. MEASURED (r4, interleaved A/B at local[8], 4 small
-        # waves, clock-normalized): AQE ON 34.1/34.4 s vs OFF 40.2/36.5
-        # s — AQE's runtime coalescing of the small bookkeeping shuffles
-        # saves more task-scheduling overhead than its per-exchange
-        # stage materialization costs, so the r3-VERDICT hypothesis
-        # ("AQE off for the tiny pick jobs") is rejected by data. False
-        # turns AQE off for the loop and statically sizes
-        # spark.sql.shuffle.partitions to 2×defaultParallelism instead.
-        self.adaptive_bookkeeping = adaptive_bookkeeping
         self.world_dir = world_dir
         self.store = SnapshotStore(store_root)
         self.max_waves = max_waves
-        # seen-filter selection (VERDICT r4 #7): "bloom" (append-only,
-        # cheapest), "cuckoo" (deletion-capable — TTL eviction / forced
-        # re-crawl via ttl_evict), or "none". `use_bloom` kept as the
-        # legacy switch: seen_filter=None derives from it.
-        self.seen_filter = (
-            seen_filter if seen_filter is not None else ("bloom" if use_bloom else "none")
-        )
-        if self.seen_filter not in ("bloom", "cuckoo", "none"):
+        # "bloom" (append-only, cheapest), "cuckoo" (deletion-capable —
+        # TTL eviction / forced re-crawl via ttl_evict) or "none"
+        if seen_filter not in ("bloom", "cuckoo", "none"):
             raise ValueError(f"seen_filter must be bloom|cuckoo|none, got {seen_filter!r}")
-        self.use_bloom = self.seen_filter == "bloom"
-        # probe the bloom/cuckoo BEFORE the links groupBy shuffle
-        # (VERDICT r4 #1 suggestion). Implemented, parity-tested, and
-        # A/B-MEASURED on the 20×/1M-page world — and REJECTED as the
-        # default (the AQE-off precedent): ON tripled links core-s
-        # (probe+explode recomputed per consumer: 249.6 vs 59.8 run_s)
-        # and even shuffled more (338 vs 252 MB), because exactness
-        # forces every distinct maybe-seen URL through a shuffle anyway
-        # — a bloom/cuckoo positive is only "maybe", so "definitely-seen
-        # links never enter the shuffle" is unachievable without
-        # dropping false-positive (i.e. genuinely new) URLs. The probe
-        # stays AFTER the URL-dedup groupBy, where it runs once over
-        # deduped rows. Opt-in regime that can still win: extreme
-        # per-partition link duplication (boilerplate nav links), where
-        # the maybe side's url-only distinct collapses map-side. See
-        # bench_artifacts/bigworld.json for the recorded A/B.
-        self.links_prefilter = links_prefilter
-        self.cuckoo_shards = cuckoo_shards
-        # Bucketed seen store (r6, VERDICT r5 #1): past the broadcast
-        # budget the exact anti-join's seen side would hash-exchange the
-        # ENTIRE seen history every wave — O(seen) shuffle per wave, the
-        # engine's last named 10^10-key cost. "bucketed" then maintains a
-        # catalog parquet table CLUSTERED BY (url) INTO ``seen_buckets``
-        # BUCKETS, PARTITIONED BY (src, wave): the per-wave insert moves
-        # only that wave's discovered URLs (one small exchange, one file
-        # per bucket), and every seen-side read scans pre-partitioned
-        # (``Bucketed: true`` — only the CANDIDATE side exchanges in the
-        # left_anti). Partitions: src ∈ {s,d,r} × wave, so a crash-replay
-        # overwrites exactly (d, wave) — idempotent — and wave-pruning
-        # happens on catalog partitions (the replayed wave's files are
-        # never listed, same property as the r5 path-level pruning).
-        # The index is LAZY: while the seen set fits the broadcast budget
-        # it buys nothing (the seen side is shipped whole either way), so
-        # the seen side reads the path store, and the first wave past the
-        # budget builds the index with one backfill; from then on it is
-        # kept up every wave, even if evictions shrink the set again.
-        # "paths" never builds it (past the budget the seen side
-        # re-shuffles per wave) and drops one a bucketed run left (see
-        # prepare).
-        if seen_store not in ("bucketed", "paths"):
-            raise ValueError(f"seen_store must be bucketed|paths, got {seen_store!r}")
-        self.seen_store = seen_store
-        self.seen_buckets = seen_buckets
-        import hashlib
-
+        self.seen_filter = seen_filter
+        # The bucketed seen index is the only seen store: past the
+        # broadcast budget a path-store seen side would hash-exchange the
+        # whole seen history every wave, while the index's per-wave insert
+        # moves only that wave's discovered URLs and every seen-side read
+        # scans pre-partitioned (only the candidate side exchanges).
+        # Partitions are src ∈ {s,d,r} × wave, so a crash-replay
+        # overwrites exactly (d, wave) and the wave bound prunes catalog
+        # partitions.
+        if seen_store != "bucketed":
+            raise ValueError(f"seen_store must be 'bucketed', got {seen_store!r}")
         self._seen_table = (
             "seen_idx_" + hashlib.md5(store_root.encode()).hexdigest()[:10]
         )
         self._seen_index_path = os.path.join(self.store.root, "seen_idx")
         self.bloom_expected = bloom_expected
-        self.bloom_fpp = bloom_fpp
-        self.salt_buckets = salt_buckets
         self.fetch_images = fetch_images
         self.image_size_scale = image_size_scale
         self.image_octaves = image_octaves
-        # seen-set broadcast hint budget, in MB of *estimated serialized
-        # bytes* (rows × average url length, measured at bootstrap). A
-        # row-count budget (r2) ignored key width; the real limits are
-        # driver memory and Spark's 8 GB broadcast cap, which are byte
-        # denominated. 64 MB default: comfortably under both, and the
-        # hint auto-disables at the 10^10-key story (~TB of keys).
-        # Within the budget the links path skips the bloom/cuckoo probe
-        # (the broadcast anti-join is the exact in-memory probe).
+        # seen-set broadcast budget, in MB of *estimated serialized bytes*
+        # (rows × average url length, measured at bootstrap): the real
+        # limits are driver memory and Spark's 8 GB broadcast cap, which
+        # are byte denominated, and the hint turns itself off at the
+        # 10^10-key story (~TB of keys). Within the budget the links path
+        # skips the filter probe and the bucketed index.
         self.seen_broadcast_mb = seen_broadcast_mb
         self.flaky_fetch = flaky_fetch
         self.flaky_share = flaky_share
         self.flaky_fail_pct = flaky_fail_pct
         self._bloom_bits: bytes | None = None
-        # broadcast handle of _bloom_bits: probes read from the broadcast
-        # (one transfer per executor, cached) instead of re-serializing
-        # the array with every task closure (VERDICT r3 missing #4 — the
-        # closure path is ~1.2 MB/task here but ~120 MB/task at the
-        # documented 10^8-key mid-scale). Refreshed by _bloom_publish.
+        # probes read the filters from broadcasts (one transfer per
+        # executor, cached) instead of re-serializing them with every task
+        # closure; refreshed by _bloom_publish / _cuckoo_publish
         self._bloom_bc = None
         self._bloom_k = 0
-        # cuckoo state (seen_filter="cuckoo"): driver handle + broadcast
         self._cuckoo = None
         self._cuckoo_bc = None
-        # cross-wave payload pipeline: (thread, err_list, wave) of the
-        # in-flight payload job — see _drain_payload
-        self._payload_pending: tuple | None = None
-        # cross-wave bookkeeping pipeline: [(thread, err_list), ...] of
-        # the previous wave's deferred side jobs (bloom/cuckoo update,
-        # metrics, duration histogram) — see _drain_side
-        self._side_pending: list[tuple] = []
+        # (future, wave) of the in-flight payload job — see _drain_payload
+        self._payload_pending: tuple[futures.Future, int] | None = None
+        # deferred side jobs of the last wave — see _drain_side
+        self._side_pending: list[futures.Future] = []
 
         # cached: the fetch join reads pages twice per wave (links +
         # image refs). At real scale "pages" is the live web reached via
@@ -260,15 +211,7 @@ class CrawlRunner:
         self.pages = spark.read.parquet(f"{world_dir}/pages.parquet").persist()
         self.robots = spark.read.parquet(f"{world_dir}/robots.parquet")
         self.seeds = spark.read.parquet(f"{world_dir}/seeds.parquet")
-        # Literal-map robots (r4): the wave loop attaches robots TWICE per
-        # wave (pick + links) and a broadcast join submits a broadcast-
-        # build job per query — two driver-latency jobs/wave on a static
-        # dim. When the rule table is small (footer row count ≤
-        # robots_literal_max_hosts) collect it ONCE and bake the rules
-        # into the plan as create_map literals: zero jobs per use, pure
-        # codegen. Big rule tables keep the broadcast join (a 10^6-entry
-        # literal would bloat every plan).
-        self.robots_literal_max_hosts = robots_literal_max_hosts
+        # collect a small rule table once (footer row count, no job)
         self._robots_rules: list[tuple] | None = None
         try:
             import pyarrow.parquet as _pq
@@ -276,7 +219,7 @@ class CrawlRunner:
             n_rules = _pq.read_metadata(f"{world_dir}/robots.parquet").num_rows
         except Exception:
             n_rules = None
-        if n_rules is not None and n_rules <= robots_literal_max_hosts:
+        if n_rules is not None and n_rules <= ROBOTS_LITERAL_MAX_HOSTS:
             self._robots_rules = [
                 (r["host"], r["disallow_prefix"], r["host_budget"])
                 for r in self.robots.select(
@@ -288,10 +231,8 @@ class CrawlRunner:
     def seen_broadcast_ok(self, seen_rows: int | None, avg_url_bytes: float) -> bool:
         """Byte-budgeted broadcast hint: estimated serialized seen-set
         size (rows × avg key length + per-row overhead) must fit the MB
-        budget. Row counts alone (r2) ignored key width; the real limits
-        — driver memory and Spark's 8 GB broadcast cap — are bytes. At
-        10^10 keys the estimate is ~TB, so the hint is structurally off
-        at the north-rule scale."""
+        budget. At 10^10 keys the estimate is ~TB, so the hint is
+        structurally off at the north-rule scale."""
         if seen_rows is None:
             return False
         est_mb = seen_rows * (avg_url_bytes + 20.0) / 1e6
@@ -305,27 +246,41 @@ class CrawlRunner:
             return with_robots_literal(df, self._robots_rules)
         return with_robots(df, self.robots)
 
+    def _spawn(self, group: str, fn) -> futures.Future:
+        """Run ``fn()`` on a daemon thread with its jobs in job group
+        ``group``; the future holds its result or its exception. The
+        group tag is thread-local (pinned py4j threads), so concurrent
+        jobs stay attributable."""
+        fut: futures.Future = futures.Future()
+        sc = self.spark.sparkContext
+
+        def target() -> None:
+            try:
+                with job_group(sc, group):
+                    fut.set_result(fn())
+            except BaseException as e:
+                fut.set_exception(e)
+
+        threading.Thread(target=target, daemon=True).start()
+        return fut
+
     # ------------------------------------------------- bucketed seen index
     def _seen_index_live(self) -> bool:
         """The index exists and is complete: its seeds partition
         (s, -1) is on disk. The backfill writes that partition LAST, so
         an index cut short mid-backfill is not live and is rebuilt."""
-        return self.seen_store == "bucketed" and os.path.isdir(
-            os.path.join(self._seen_index_path, "src=s")
-        )
+        return os.path.isdir(os.path.join(self._seen_index_path, "src=s"))
 
     def _create_seen_table(self) -> None:
         self.spark.sql(
             f"CREATE TABLE {self._seen_table} (url STRING, src STRING, wave INT) "
             f"USING parquet PARTITIONED BY (src, wave) "
-            f"CLUSTERED BY (url) INTO {self.seen_buckets} BUCKETS "
+            f"CLUSTERED BY (url) INTO {SEEN_BUCKETS} BUCKETS "
             f"LOCATION '{self._seen_index_path}'"
         )
 
     def _drop_seen_index(self) -> None:
         """Remove the index: its catalog entry AND its files."""
-        import shutil
-
         self.spark.sql(f"DROP TABLE IF EXISTS {self._seen_table}")
         shutil.rmtree(self._seen_index_path, ignore_errors=True)
 
@@ -348,8 +303,8 @@ class CrawlRunner:
         """Build the index the first time the seen set outgrows the
         broadcast budget: wipe whatever a cut-short build left behind,
         create the table and fill it from seeds, ``discovered/w*`` and
-        ``requeued/w*`` up to ``wave`` — the entries the paths store
-        reads — as two appends. ``wave`` is the running wave, so its
+        ``requeued/w*`` up to ``wave`` — the entries the path store
+        holds — as two appends. ``wave`` is the running wave, so its
         requeue batches are included; on a replay its stale
         ``discovered`` entries are overwritten by the wave's own index
         insert. Seeds go LAST: partition (s, -1) is what marks the index
@@ -362,7 +317,7 @@ class CrawlRunner:
         is_seed = F.col("src") == "s"
         for part in (entries.filter(~is_seed), entries.filter(is_seed)):
             (
-                part.repartition(self.seen_buckets, "url")
+                part.repartition(SEEN_BUCKETS, "url")
                 .write.mode("append")
                 .insertInto(self._seen_table)
             )
@@ -381,10 +336,8 @@ class CrawlRunner:
         under Spark's default STATIC mode would truncate the whole index
         (seeds and every earlier wave), and the writer's
         ``partitionOverwriteMode`` option does not reach ``insertInto``."""
-        import uuid
-
         view = f"seen_batch_{uuid.uuid4().hex}"
-        batch = urls_df.select("url").repartition(self.seen_buckets, "url")
+        batch = urls_df.select("url").repartition(SEEN_BUCKETS, "url")
         batch.createOrReplaceTempView(view)
         verb = "OVERWRITE" if overwrite else "INTO"
         try:
@@ -424,13 +377,12 @@ class CrawlRunner:
 
         Wave pruning happens at the PATH level (explicit ``w{N}`` dirs),
         not by scanning ``w*`` and filtering the ``wave`` column. Two
-        reasons: (a) the row filter still listed and footer-read every
-        wave's files — including the wave currently being REPLAYED after
-        a crash, whose idempotent overwrite deletes the very files its
-        own input plan had listed (FAILED_READ_FILE; surfaced by the r4
-        AQE-off change, but a latent read-own-write-target overlap all
-        along); (b) at 10^5 waves this is source-level pruning instead
-        of 10^5 footer reads per seen-join.
+        reasons: (a) the row filter would still list and footer-read
+        every wave's files — including the wave currently being REPLAYED
+        after a crash, whose idempotent overwrite deletes the very files
+        its own input plan listed (FAILED_READ_FILE); (b) at 10^5 waves
+        this is source-level pruning instead of 10^5 footer reads per
+        seen-join.
 
         Evictions (``ttl_evict``, cuckoo mode): a tombstone (url,
         evict_wave) masks every entry for that url from BEFORE the
@@ -439,15 +391,14 @@ class CrawlRunner:
         (explicit eviction batches), so its mask join is a broadcast —
         per-wave cost ~nothing.
 
-        Once the bucketed index is live (``seen_store="bucketed"`` past
-        the broadcast budget — see :meth:`_backfill_seen_index`), all
-        three entry sources are read from it instead; the wave bound
-        prunes catalog PARTITIONS (same replay-safety as the path-level
-        pruning — the replayed wave's partition is never listed), the
-        scan reports ``Bucketed: true``, and downstream url-equality
-        joins exchange ONLY their other side. The eviction mask is a
-        broadcast join, which preserves the streamed side's bucket
-        partitioning."""
+        Once the bucketed index is live (past the broadcast budget — see
+        :meth:`_backfill_seen_index`), all three entry sources are read
+        from it instead; the wave bound prunes catalog PARTITIONS (same
+        replay-safety as the path-level pruning — the replayed wave's
+        partition is never listed), the scan reports ``Bucketed: true``,
+        and downstream url-equality joins exchange ONLY their other
+        side. The eviction mask is a broadcast join, which preserves the
+        streamed side's bucket partitioning."""
         if self._ensure_seen_index():  # re-registers after session restart
             entries = (
                 self.spark.table(self._seen_table)
@@ -468,6 +419,7 @@ class CrawlRunner:
             )
         return entries.select("url")
 
+    # ------------------------------------------------------------ bloom filter
     def _bloom_path(self, wave: int) -> str:
         return os.path.join(self.store.root, f"bloom_{wave}.bin")
 
@@ -483,26 +435,21 @@ class CrawlRunner:
             old.unpersist()
 
     def _init_bloom(self, wave: int) -> None:
-        if not self.use_bloom:
-            return
-        m, k = seenmod.bloom_params(self.bloom_expected, self.bloom_fpp)
-        self._bloom_k = k
+        _, self._bloom_k = seenmod.bloom_params(self.bloom_expected, BLOOM_FPP)
         p = self._bloom_path(wave)
         if os.path.exists(p):
             with open(p, "rb") as f:
                 self._bloom_bits = f.read()
         else:  # rebuild from committed state (resume after bloom-file loss)
             self._bloom_bits = seenmod.build_bloom(
-                self._seen_df(wave - 1), "url", self.bloom_expected, self.bloom_fpp
+                self._seen_df(wave - 1), "url", self.bloom_expected, BLOOM_FPP
             )
         self._bloom_publish()
 
     def _bloom_add(self, df: DataFrame, wave: int) -> None:
-        if not self.use_bloom:
-            return
         import numpy as np
 
-        inc = seenmod.build_bloom(df, "url", self.bloom_expected, self.bloom_fpp)
+        inc = seenmod.build_bloom(df, "url", self.bloom_expected, BLOOM_FPP)
         acc = np.frombuffer(self._bloom_bits, dtype=np.uint8) | np.frombuffer(
             inc, dtype=np.uint8
         )
@@ -518,28 +465,22 @@ class CrawlRunner:
         return os.path.join(self.store.root, f"cuckoo_{wave}.npz")
 
     def _cuckoo_publish(self) -> None:
-        from crawler_tjce_spark.plans import cuckoo as ckmod  # noqa: F401
-
         old = self._cuckoo_bc
         self._cuckoo_bc = self.spark.sparkContext.broadcast(self._cuckoo)
         if old is not None:
             old.unpersist()
 
     def _init_cuckoo(self, wave: int) -> None:
-        from crawler_tjce_spark.plans import cuckoo as ckmod
-
         p = self._cuckoo_path(wave)
         if os.path.exists(p):
             self._cuckoo = ckmod.load_cuckoo(p)
         else:  # rebuild from committed state (resume after filter-file loss)
             self._cuckoo = ckmod.build_cuckoo(
-                self._seen_df(wave - 1), "url", self.bloom_expected, self.cuckoo_shards
+                self._seen_df(wave - 1), "url", self.bloom_expected, CUCKOO_SHARDS
             )
         self._cuckoo_publish()
 
     def _cuckoo_add(self, df: DataFrame, wave: int) -> None:
-        from crawler_tjce_spark.plans import cuckoo as ckmod
-
         self._cuckoo = ckmod.insert_distributed(self._cuckoo, df.select("url"), "url")
         self._cuckoo_publish()
         # like the bloom: persist under the wave this filter will SERVE
@@ -578,26 +519,20 @@ class CrawlRunner:
             bc, k = self._bloom_bc, self._bloom_k
             return lambda df: seenmod.maybe_seen_expr(df, "url", bc, k)
         if self.seen_filter == "cuckoo":
-            from crawler_tjce_spark.plans.cuckoo import maybe_seen_expr_cuckoo
-
             bc = self._cuckoo_bc
-            return lambda df: maybe_seen_expr_cuckoo(df, "url", bc)
+            return lambda df: ckmod.maybe_seen_expr_cuckoo(df, "url", bc)
         return None
 
     # ------------------------------------------------------------------- run
     def prepare(self, resume: bool = True) -> dict:
-        """One-time setup: load/bootstrap the manifest and the bloom
+        """One-time setup: load/bootstrap the manifest and the seen-filter
         state. Split from :meth:`run_waves` so benchmarks can measure
         the steady-state crawl loop separately from setup (a production
         crawl amortizes bootstrap over days of waves)."""
         manifest = self.store.load_manifest() if resume else None
-        # A fresh store has no index, and a "paths" run never inserts into
-        # one, so a later "bucketed" resume would read a live but
-        # incomplete index: drop it (catalog entry AND files); the first
-        # bucketed wave past the budget rebuilds it.
-        if manifest is None or self.seen_store == "paths":
-            self._drop_seen_index()
         if manifest is None:
+            # a stale index would be live but hold another crawl's entries
+            self._drop_seen_index()
             with job_group(self.spark.sparkContext, "bootstrap"):
                 manifest = self._bootstrap()
         with job_group(self.spark.sparkContext, "bloom_init"):
@@ -605,78 +540,70 @@ class CrawlRunner:
         return manifest
 
     def run_waves(self, manifest: dict) -> dict:
-        # Optional AQE-off mode for the crawl loop (see the constructor
-        # comment: measured slower than AQE-on on this workload, so OFF
-        # is opt-in; kept because a deployment with much higher
-        # driver-to-executor latency than local mode may find the
-        # opposite, and the static-shuffle-partition sizing below is the
-        # right companion setting there).
-        prior = None
         # _run_wave re-sizes spark.sql.shuffle.partitions per wave from
         # the frontier's footer row count; always restore the session's
         # setting when the loop exits so analytics queries on the same
         # session keep their configuration.
         prior_sp = self.spark.conf.get("spark.sql.shuffle.partitions")
-        if not self.adaptive_bookkeeping:
-            prior = self.spark.conf.get("spark.sql.adaptive.enabled", "true")
-            self.spark.conf.set("spark.sql.adaptive.enabled", "false")
         try:
             while manifest["wave"] < self.max_waves and manifest["frontier_rows"] > 0:
                 manifest = self._run_wave(manifest)
+            self._drain_side()  # counters must be complete before the commit
             self._drain_payload(manifest)
+        except BaseException:
+            # wait out this runner's background jobs before the error
+            # reaches the caller: a resume replays the uncommitted waves
+            # over the very paths they may still be writing
+            pending = self._side_pending
+            if self._payload_pending is not None:
+                pending.append(self._payload_pending[0])
+            self._side_pending, self._payload_pending = [], None
+            futures.wait(pending)
+            raise
         finally:
-            if prior is not None:
-                self.spark.conf.set("spark.sql.adaptive.enabled", prior)
             if prior_sp is not None:
                 self.spark.conf.set("spark.sql.shuffle.partitions", prior_sp)
         return manifest
 
     def _drain_side(self) -> None:
-        """Join the previous wave's deferred side jobs (seen-filter
-        update, per-host metrics, duration histogram).
+        """Wait for the deferred side jobs (seen-filter update, per-host
+        metrics, duration histogram, index insert), then raise the first
+        error among them.
 
-        These jobs have no consumer inside their own wave: the
-        bloom/cuckoo update is first read by the NEXT wave's links
-        probe, and metrics/histogram only by the manifest commit. The
-        wave loop therefore leaves them running and joins them here —
-        after the next wave's pick has been submitted (post-pick drain
-        point in ``_run_wave``) — so their job latency hides under the
-        next pick's plan-build + write instead of extending the wave
-        tail. Every manifest ``commit`` path drains first, keeping the
-        resume invariant "a committed wave is fully on disk" intact."""
-        pending = self._side_pending
-        if not pending:
-            return
-        self._side_pending = []
-        errs: list[BaseException] = []
-        for thread, err in pending:
-            thread.join()
-            errs.extend(err)
-        if errs:
-            raise errs[0]
+        These jobs have no consumer inside their own wave: the filter
+        update is first read by the NEXT wave's links probe, and metrics
+        and histogram only by the manifest commit. The wave loop
+        therefore leaves them running and drains them after the next
+        wave's pick — so their job latency hides under the next pick's
+        plan-build + write instead of extending the wave tail — and
+        before every manifest commit, keeping the resume invariant "a
+        committed wave is fully on disk". Every job is waited on before
+        any error is raised, so none is left writing while a caller
+        handles the error or a resume replays the wave."""
+        pending, self._side_pending = self._side_pending, []
+        futures.wait(pending)
+        for fut in pending:
+            fut.result()
 
     def _drain_payload(self, manifest: dict) -> None:
-        """Join the previous wave's in-flight payload job and make that
-        wave's DEFERRED manifest commit.
+        """Wait for the previous wave's in-flight payload job and, if it
+        succeeded, make that wave's DEFERRED manifest commit.
 
         The payload write is independent of the next wave's scheduling
-        and bookkeeping, so the wave loop PIPELINES it: wave N+1's pick/
-        links/frontier jobs run (FAIR pool) while wave N's payload is
-        still landing, and the join happens here — at wave N+1's start
-        or at loop end. Wave N's manifest commit waits for its payload
-        (resume correctness: a committed wave must be fully on disk);
-        a crash before the deferred commit simply replays wave N from
-        the previous commit — every wave write is an idempotent
-        overwrite, so recovery is recompute, never corruption."""
-        self._drain_side()  # counters must be complete before any commit
+        and bookkeeping, so the wave loop PIPELINES it: wave N+1's pick
+        runs (FAIR pool) while wave N's payload is still landing, and the
+        wait happens here — at wave N+1's payload start or at loop end.
+        Wave N's manifest commit waits for its payload (a committed wave
+        must be fully on disk); a crash before the deferred commit
+        simply replays wave N from the previous commit — every wave
+        write is an idempotent overwrite, so recovery is recompute,
+        never corruption."""
         if self._payload_pending is None:
             return
-        thread, err, pwave = self._payload_pending
-        t0 = time.time()
-        thread.join()
+        fut, pwave = self._payload_pending
         self._payload_pending = None
-        if err:
-            raise err[0]
+        t0 = time.time()
+        fut.result()
         # records_processed (ref metrics.py counter): payload rows of the
         # drained wave, from parquet footers — no job
         rows = self.store.count_rows(self.store.table_dir("payload", pwave))
@@ -684,7 +611,7 @@ class CrawlRunner:
             if entry["wave"] == pwave:
                 entry["counters"]["records_processed"] = rows
                 # the time the pipeline actually STALLED waiting for this
-                # payload (0.0 when the next wave's bookkeeping fully hid it)
+                # payload (0.0 when the next wave's pick fully hid it)
                 entry["steps"]["payload_tail"] = round(time.time() - t0, 3)
                 break
         self._commit(manifest)
@@ -703,8 +630,9 @@ class CrawlRunner:
         clears, persisted for resume) and a tombstone (url, evict_wave)
         masks the exact seen entries written before now. From this
         point the URLs are re-discoverable: the next fetched page that
-        links to one re-discovers it through the normal links path
-        (probe says definitely-new, exact anti-join agrees) and it is
+        links to one re-discovers it through the normal links path (the
+        exact anti-join no longer finds it, and past the broadcast
+        budget the cuckoo probe says definitely-new) and it is
         re-fetched next wave. For an immediate re-fetch without waiting
         on organic discovery, follow with :meth:`requeue`.
 
@@ -717,8 +645,6 @@ class CrawlRunner:
                 "cannot delete (clearing shared bits would create false "
                 "negatives); rebuild the bloom from the masked seen set instead"
             )
-        from crawler_tjce_spark.plans import cuckoo as ckmod
-
         manifest = self.store.load_manifest()
         if self._cuckoo is None:
             self._init_cuckoo(manifest["wave"])
@@ -753,9 +679,7 @@ class CrawlRunner:
             .dropDuplicates(["url"])
             .select(
                 "url",
-                F.regexp_extract(
-                    "url", r"^[a-z][a-z0-9+.-]*://([^/:?#]*)", 1
-                ).alias("host"),
+                url_host("url").alias("host"),
                 F.lit(0).alias("depth"),
                 F.lit(wave).alias("discovered_wave"),
                 salient_expr().alias("salient"),
@@ -763,17 +687,13 @@ class CrawlRunner:
             )
         )
         self.store.write_wave(rq, "requeued", wave)
-        if self.seen_store == "paths":
-            self._drop_seen_index()  # see prepare
-        elif self._ensure_seen_index():
+        if self._ensure_seen_index():
             # append (never overwrite): partition (r, wave) may already
             # hold earlier requeue batches, and a wave replay must not
             # wipe them (replay only overwrites (d, wave)); duplicate
             # rows are harmless to seen-set semantics
             self._seen_idx_insert(rq.select("url"), "r", wave, overwrite=False)
         if self.seen_filter == "cuckoo":
-            from crawler_tjce_spark.plans import cuckoo as ckmod
-
             if self._cuckoo is None:
                 self._init_cuckoo(wave)
             h1, h2 = ckmod.hashes_for_urls(self.spark, urls)
@@ -784,8 +704,6 @@ class CrawlRunner:
             self._cuckoo_publish()
         # frontier = current ∪ requeued; written to a fresh snapshot path
         # (never overwrite the snapshot the plan is reading)
-        from pyspark.sql import Observation
-
         old = self.spark.read.parquet(manifest["frontier_path"])
         frontier = old.select(*FRONTIER_COLS).unionByName(rq.select(*FRONTIER_COLS))
         obs = Observation(f"frontier_hosts_rq{manifest['snapshot_id']}")
@@ -810,20 +728,14 @@ class CrawlRunner:
     def _bootstrap(self) -> dict:
         """Wave-0 state: seeds → frontier (robots permitting), ONE pass.
 
-        r5 (the 60×-probe's named non-payload bottleneck — bootstrap is
-        linear in seeds): the r4 shape ran a SECOND full
-        distinct-shuffle over the seed list just for the manifest's
-        seen stats. All of it now rides the frontier write as one
+        The manifest's seen stats ride the frontier write as one
         mid-plan ``Observation`` placed BEFORE the robots filter: total
         distinct seeds (= initial seen rows), avg URL length (the
-        broadcast-hint budget), allowed-row count (= frontier rows,
-        exact — the footer walk goes too) and the allowed distinct-host
-        count (offsets-form selection). One dedup shuffle, one job."""
-        from pyspark.sql import Observation
-
+        broadcast-hint budget), allowed-row count (= frontier rows) and
+        the allowed distinct-host count (offsets-form selection). One
+        dedup shuffle, one job."""
         seeds = self.seeds.select(
-            "url",
-            F.regexp_extract("url", r"^[a-z][a-z0-9+.-]*://([^/:?#]*)", 1).alias("host"),
+            "url", url_host("url").alias("host")
         ).dropDuplicates(["url"])
         obs = Observation("bootstrap_stats")
         seeded = self._with_robots(seeds).observe(
@@ -863,386 +775,68 @@ class CrawlRunner:
         self._commit(manifest)
         return manifest
 
+    # ------------------------------------------------------------------ wave
     def _run_wave(self, manifest: dict) -> dict:
-        # NB: the PREVIOUS wave's in-flight payload is drained just
-        # before this wave's payload thread starts (not here) — the
-        # pick below doesn't read the payload table, so the previous
-        # payload tail overlaps this wave's pick/visit-log write (r4;
-        # measured ~1-4 s/wave of tail at local[8] small waves). The
-        # pick only reads manifest fields set by the previous wave's
-        # manifest.update, which has already happened in-memory.
-        t0 = time.time()
+        t0 = last = time.time()
         wave = manifest["wave"]
-        spark = self.spark
         steps: dict[str, float] = {}
-        _last = time.time()
 
-        def _step(name: str) -> None:
-            nonlocal _last
+        def step(name: str) -> None:
+            nonlocal last
             now = time.time()
-            steps[name] = round(now - _last, 3)
-            _last = now
+            steps[name] = round(now - last, 3)
+            last = now
 
-        # Size the static shuffle-partition ceiling to the wave (r4 20×
-        # dry-run follow-up): AQE coalesces DOWN from this number but
-        # never splits above it, so a 10^8-row frontier at the 32-task
-        # default would put ~3M rows in every links-groupBy/anti-join
-        # partition. Target ~1M frontier rows per partition, floored at
-        # 2×parallelism, capped at 10k tasks; frontier_rows comes from
-        # parquet footers (no job). The payload stage repartitions
-        # explicitly and is unaffected.
-        dp = spark.sparkContext.defaultParallelism
+        # AQE coalesces shuffle partitions DOWN from this ceiling but never
+        # splits above it: ~1M frontier rows per partition, floored at
+        # 2×parallelism, capped at 10k tasks (frontier_rows comes from
+        # parquet footers, no job). The payload repartitions explicitly.
+        dp = self.spark.sparkContext.defaultParallelism
         wave_sp = min(max(2 * dp, manifest["frontier_rows"] // 1_000_000), 10_000)
-        spark.conf.set("spark.sql.shuffle.partitions", str(wave_sp))
+        self.spark.conf.set("spark.sql.shuffle.partitions", str(wave_sp))
 
-        frontier = spark.read.schema(_FRONTIER_SCHEMA).parquet(manifest["frontier_path"])
-
-        # 1-3. budgets + salted politeness pick + global ordem, fused into a
-        # single pass over the frontier (the stage-2 politeness rank doubles
-        # as the within-host visit rank — see politeness_pick_ordem)
-        with job_group(spark.sparkContext, "pick_ordem"):
-            budgeted = self._with_robots(frontier).withColumn("score", score_expr())
-            visits_plan = (
-                fetchmod.with_fetch_lineage(
-                    politeness_pick_ordem(budgeted, manifest["ordem_offset"],
-                                          salt_buckets=self.salt_buckets,
-                                          n_hosts=manifest.get("frontier_hosts")),
-                    flaky=(
-                        (self.flaky_share, self.flaky_fail_pct)
-                        if self.flaky_fetch
-                        else None
-                    ),
-                )
-                .select(*FRONTIER_COLS, "score", "ordem",
-                        "fetch_attempts", "fetch_status", "backoff_total_s")
-                .withColumn("wave", F.lit(wave))
-            )
-            # ONE materialization: the visit-log write IS it. The payload
-            # thread and the links path re-read the written parquet (the
-            # runner's write-then-re-read doctrine), and the picked count
-            # rides the write as an Observation — the r2 flow's two eager
-            # localCheckpoints + count job (≈3-4 s of driver-latency-bound
-            # scheduling floor per wave, measured via perf.stage_attribution)
-            # collapse into the write, and the r4 footer walk (os.walk +
-            # per-file metadata reads, ~10-40 ms/wave of driver time in
-            # the multi-wave regime) into the accumulator.
-            # (r6 A/B, measured and REJECTED: launching the payload thread
-            # from the LAZY pick plan, before this write, so the write
-            # hides under the payload. Interleaved runs read dead even —
-            # 19.0 s old vs 19.1 s new at local[32] — because the payload
-            # job then serializes on the same pick computation inside its
-            # own lineage before its wide synth stage can start; and at a
-            # 10^10-row frontier the duplicated pick would be a real
-            # second full pass. The write-then-re-read doctrine stays.)
-            from pyspark.sql import Observation
-
-            obs_v = Observation(f"picked_w{wave}")
-            vpath = self.store.write_wave(
-                visits_plan.observe(obs_v, F.count(F.lit(1)).alias("n")),
-                "visits", wave,
-            )
-            visits = spark.read.schema(_VISITS_SCHEMA).parquet(vpath)
-            picked = visits
-            picked_n = int(obs_v.get["n"])
-        _step("pick_ordem")
-        # join the PREVIOUS wave's deferred side jobs only now — their
-        # latency ran under this wave's pick plan-build + write. The
-        # links probe below reads the post-update seen filter, so the
-        # drain must (and does) precede the links step.
+        frontier = self.spark.read.schema(_FRONTIER_SCHEMA).parquet(
+            manifest["frontier_path"]
+        )
+        picked, picked_n = self._pick(frontier, manifest)
+        step("pick_ordem")
+        # the previous wave's side jobs ran under this pick; the links
+        # probe below reads the seen filter they updated
         self._drain_side()
-        _step("side_drain")
+        step("side_drain")
         if picked_n == 0:  # stall guard (ref crawler/crawler.py:633-639 analog)
-            # drain the previous payload BEFORE committing the stall
-            # state: its deferred commit must not be skipped over
+            # the previous payload's deferred commit must not be skipped
             self._drain_payload(manifest)
             manifest["frontier_rows"] = 0
             self._commit(manifest)
             return manifest
 
         # duration histogram (ref metrics.py:10-15 analog): depends only
-        # on the picked set, so it launches HERE and runs under the
-        # links/anti-join step; joined at the next wave's drain point
-        hist_err: list[BaseException] = []
-
-        def _hist_job() -> None:
-            try:
-                spark.sparkContext.setJobGroup("metrics", "metrics")
-                hist = fetchmod.duration_histogram(
-                    fetchmod.with_request_duration(picked)
-                ).withColumn("wave", F.lit(wave))
-                self.store.write_wave(hist, "duration_hist", wave)
-            except BaseException as e:
-                hist_err.append(e)
-
-        hist_thread = threading.Thread(target=_hist_job, daemon=True)
-        hist_thread.start()
-
-        # 4. fetch = join against the web; keep parent lineage for depth.
-        # URLs whose retries exhausted (fetch_status='error') were visited
-        # (they consumed schedule slots and carry ordem + retry lineage) but
-        # yield no links and no payload — the reference's failed-fetch path.
+        # on the picked set, so it runs under the links step
+        self._side_pending.append(
+            self._spawn("metrics", lambda: self._write_histogram(picked, wave))
+        )
+        # fetch = join against the web; URLs whose retries exhausted
+        # (fetch_status='error') were visited (they consumed schedule
+        # slots and carry ordem + retry lineage) but yield no links and no
+        # payload — the reference's failed-fetch path
         ok = picked.filter(F.col("fetch_status") == "ok")
         fetched = ok.join(self.pages, "url", "left").select(
             ok["url"], ok["depth"], ok["ordem"], "out_links", "image_refs"
         )
-
-        # 6 (overlapped). payload fetch (image plumbing) — independent of the
-        # links/seen/frontier bookkeeping below, so it runs as a concurrent
-        # Spark job from its own thread. The per-wave scheduling floor (~7 s
-        # of small-data jobs, parallelism-independent) hides under the
-        # payload stage instead of adding to it — the Amdahl term that owned
-        # the round-1 scaling number.
         if self.fetch_images:
-            # join the PREVIOUS wave's payload + make its deferred commit
-            # only now — everything above this point (pick, visit log)
-            # ran under its tail
+            # the previous wave's payload tail ran under this wave's pick
             self._drain_payload(manifest)
-            payload_err: list[BaseException] = []
-
-            def _payload_job() -> None:
-                try:
-                    # group tag is thread-local (pinned py4j threads), so
-                    # the payload job stays attributable under overlap
-                    with job_group(spark.sparkContext, "payload_fetch"):
-                        self._fetch_payload(fetched, wave)
-                except BaseException as e:  # surfaced at drain
-                    payload_err.append(e)
-
-            payload_thread = threading.Thread(target=_payload_job, daemon=True)
-            payload_thread.start()
-            # drained at the NEXT wave's start (or loop end): the next
-            # wave's bookkeeping pipelines under this wave's payload
-            self._payload_pending = (payload_thread, payload_err, wave)
-
-        # 5. discovered links, first-fetcher attribution, seen-filter, robots
-        with job_group(spark.sparkContext, "links_seen"):
-            raw_links = fetched.select(
-                F.explode_outer("out_links").alias("url"),
-                F.col("depth").alias("parent_depth"),
-                F.col("ordem").alias("parent_ordem"),
-            ).filter(F.col("url").isNotNull())
-            bcast_seen = self.seen_broadcast_ok(
-                manifest.get("seen_rows"), manifest.get("avg_url_bytes", 80.0)
+            self._payload_pending = (
+                self._spawn("payload_fetch", lambda: self._fetch_payload(fetched, wave)),
+                wave,
             )
-            index_live = self._ensure_seen_index()
-            if self.seen_store == "bucketed" and not bcast_seen and not index_live:
-                # first wave past the budget: build the index once (the
-                # wave comes from the in-memory manifest — the previous
-                # wave's commit may still be deferred)
-                with job_group(spark.sparkContext, "seen_idx"):
-                    self._backfill_seen_index(wave)
-                index_live = True
-            seen = self._seen_df(wave - 1)
-            tagger = self._probe_tagger()
-            if self.links_prefilter and tagger is not None:
-                # seen-probe pushdown (VERDICT r4 #1): probe every raw
-                # link map-side and drop definitely-seen traffic BEFORE
-                # the attribution groupBy — in a converged crawl the
-                # overwhelming majority of discovered links never enter
-                # the shuffle (they collapse in a url-only distinct on
-                # the maybe side; exact anti-join stays authoritative,
-                # see seen.prefilter_new_rows).
-                new_rows = seenmod.prefilter_new_rows(
-                    raw_links, seen, "url", tagger, broadcast_seen=bcast_seen
-                )
-                new_links = new_rows.groupBy("url").agg(
-                    F.min_by("parent_depth", "parent_ordem").alias("parent_depth")
-                )
-            else:
-                links = raw_links.groupBy("url").agg(
-                    F.min_by("parent_depth", "parent_ordem").alias("parent_depth")
-                )
-                new_links = seenmod.filter_unseen(
-                    links,
-                    seen,
-                    "url",
-                    self._bloom_bc if self.seen_filter == "bloom" else None,
-                    self._bloom_k,
-                    broadcast_seen=bcast_seen,
-                )
-            discovered = self._with_robots(
-                new_links.select(
-                    "url",
-                    F.regexp_extract("url", r"^[a-z][a-z0-9+.-]*://([^/:?#]*)", 1).alias("host"),
-                    (F.col("parent_depth") + 1).alias("depth"),
-                ),
-            ).select(
-                "url",
-                "host",
-                "depth",
-                F.lit(wave + 1).alias("discovered_wave"),
-                salient_expr().alias("salient"),
-                "robots_ok",
-                F.lit(wave).alias("wave"),
-            )
-            from pyspark.sql import Observation
-
-            obs_d = Observation(f"discovered_w{wave}")
-            dpath = self.store.write_wave(
-                discovered.observe(obs_d, F.count(F.lit(1)).alias("n")),
-                "discovered", wave,
-            )
-            discovered = spark.read.schema(_DISCOVERED_SCHEMA).parquet(dpath)
-            if manifest.get("seen_rows") is not None:
-                manifest["seen_rows"] += int(obs_d.get["n"])  # rides the write
-        _step("links_anti_join")
-
-        # Everything below depends only on the just-committed discovered
-        # partition (+ the picked checkpoint) and NOT on each other — run
-        # the three jobs concurrently (FAIR scheduler): bloom build,
-        # per-host metrics, next-frontier write. Only the FRONTIER job is
-        # joined in-wave (the next pick reads its path/row-count); the
-        # bloom and metrics joins are DEFERRED to the next wave's
-        # post-pick drain point, so their job latency pipelines under the
-        # next pick instead of extending this wave's tail (the bloom's
-        # first consumer is the next links probe, the metrics' only
-        # consumer is the manifest commit — both after that drain).
-        bloom_err: list[BaseException] = []
-        metrics_err: list[BaseException] = []
-        frontier_err: list[BaseException] = []
-        counters: dict[str, int] = {}
-        frontier_out: dict[str, object] = {}
-
-        def _bloom_job() -> None:
-            try:
-                with job_group(spark.sparkContext, "bloom_update"):
-                    self._seen_filter_add(discovered, wave)
-            except BaseException as e:
-                bloom_err.append(e)
-
-        seen_idx_err: list[BaseException] = []
-
-        def _seen_idx_job() -> None:
-            # r6: append this wave's discovered URLs to the live bucketed
-            # seen index — the O(|wave|) write that replaces the O(|seen|)
-            # per-wave exchange the anti-join's seen side would pay.
-            # Reads the committed discovered partition (write-then-re-read),
-            # overwrites exactly index partition (d, wave) — replay-safe.
-            try:
-                with job_group(spark.sparkContext, "seen_idx"):
-                    self._seen_idx_insert(
-                        discovered.select("url"), "d", wave, overwrite=True
-                    )
-            except BaseException as e:
-                seen_idx_err.append(e)
-
-        def _metrics_job() -> None:
-            # per-host metrics (reference metrics.py:6-27 analog:
-            # requests_total, records_processed, errors_total{type} — here
-            # per host per wave, as a queryable parquet table instead of a
-            # Prometheus endpoint). ONE shuffle: the picked-side and
-            # links-side contributions union into a single groupBy(host)
-            # (the r4 shape ran two grouped aggs + a full outer join —
-            # three exchanges and two extra AQE stage jobs for the same
-            # output table).
-            try:
-                from pyspark.sql import Observation
-
-                spark.sparkContext.setJobGroup("metrics", "metrics")
-                met_src = picked.select(
-                    "host",
-                    F.lit(1).alias("_req"),
-                    F.col("fetch_attempts").alias("_att"),
-                    (F.col("fetch_status") == "error").cast("int").alias("_err"),
-                    F.col("backoff_total_s").alias("_back"),
-                    F.lit(0).alias("_disc"),
-                ).unionByName(
-                    discovered.select(
-                        "host",
-                        F.lit(0).alias("_req"),
-                        F.lit(0).alias("_att"),
-                        F.lit(0).alias("_err"),
-                        F.lit(0).alias("_back"),
-                        F.lit(1).alias("_disc"),
-                    )
-                )
-                metrics_df = (
-                    met_src.groupBy("host")
-                    .agg(
-                        F.sum("_req").alias("requests_total"),
-                        F.sum("_att").alias("fetch_attempts_total"),
-                        F.sum("_err").alias("errors_fetch_total"),
-                        F.sum("_back").alias("retry_backoff_s_total"),
-                        F.sum("_disc").alias("links_discovered_total"),
-                    )
-                    .withColumn("wave", F.lit(wave))
-                )
-                # wave totals ride the metrics WRITE itself (Observation
-                # = accumulator-backed, zero extra job) — r3 ran an eager
-                # localCheckpoint + a separate totals collect here, two of
-                # the per-wave driver-latency jobs the small-wave regime
-                # pays for (VERDICT r3 task 3)
-                obs = Observation(f"metrics_totals_w{wave}")
-                metrics_df = metrics_df.observe(
-                    obs,
-                    F.sum("requests_total").alias("requests_total"),
-                    F.sum("fetch_attempts_total").alias("fetch_attempts_total"),
-                    F.sum("errors_fetch_total").alias("errors_fetch_total"),
-                    F.sum("retry_backoff_s_total").alias("retry_backoff_s_total"),
-                    F.sum("links_discovered_total").alias("links_discovered_total"),
-                )
-                self.store.write_wave(metrics_df, "metrics", wave)
-                counters.update(
-                    {k: int(v or 0) for k, v in obs.get.items()}
-                )
-            except BaseException as e:
-                metrics_err.append(e)
-
-        def _frontier_job() -> None:
-            # 7. next frontier = old − picked + discovered∧allowed
-            try:
-                from pyspark.sql import Observation
-
-                spark.sparkContext.setJobGroup("frontier_write", "frontier_write")
-                frontier_next = (
-                    frontier.join(picked.select("url"), "url", "left_anti")
-                    .select(*FRONTIER_COLS)
-                    .unionByName(
-                        discovered.filter(F.col("robots_ok")).select(*FRONTIER_COLS)
-                    )
-                )
-                obs = Observation(f"frontier_hosts_w{wave + 1}")
-                frontier_next = frontier_next.observe(
-                    obs,
-                    F.approx_count_distinct("host").alias("hosts"),
-                    F.count(F.lit(1)).alias("rows"),
-                )
-                frontier_out["path"] = self.store.write_full(
-                    frontier_next, "frontier", wave + 1
-                )
-                got = obs.get
-                frontier_out["hosts"] = int(got["hosts"])
-                frontier_out["rows"] = int(got["rows"])
-            except BaseException as e:
-                frontier_err.append(e)
-
-        bloom_thread = threading.Thread(target=_bloom_job, daemon=True)
-        metrics_thread = threading.Thread(target=_metrics_job, daemon=True)
-        frontier_thread = threading.Thread(target=_frontier_job, daemon=True)
-        threads = [bloom_thread, metrics_thread, frontier_thread]
-        side = [
-            (bloom_thread, bloom_err),
-            (metrics_thread, metrics_err),
-            (hist_thread, hist_err),
-        ]
-        if index_live:
-            seen_idx_thread = threading.Thread(target=_seen_idx_job, daemon=True)
-            threads.append(seen_idx_thread)
-            side.append((seen_idx_thread, seen_idx_err))
-        for t in threads:
-            t.start()
-        # register the deferred side jobs BEFORE joining the frontier
-        # thread (ADVICE r5): if the frontier job raises, a later drain
-        # must still join these threads and surface their errors instead
-        # of orphaning them mid-write while a caller handles the
-        # exception or a resume replays the wave.
-        self._side_pending = side
-        frontier_thread.join()
-        if frontier_err:
-            raise frontier_err[0]
-        fpath = str(frontier_out["path"])
-        frontier_rows = int(frontier_out["rows"])  # rode the write (Observation)
-        _step("side_jobs")
+        discovered, index_live = self._links(fetched, manifest)
+        step("links_anti_join")
+        fpath, frontier_rows, frontier_hosts, counters = self._start_side_jobs(
+            frontier, picked, discovered, wave, index_live
+        )
+        step("side_jobs")
 
         manifest.update(
             {
@@ -1250,7 +844,7 @@ class CrawlRunner:
                 "ordem_offset": manifest["ordem_offset"] + picked_n,
                 "frontier_path": fpath,
                 "frontier_rows": frontier_rows,
-                "frontier_hosts": int(frontier_out.get("hosts", 0)),
+                "frontier_hosts": frontier_hosts,
             }
         )
         manifest["metrics"].append(
@@ -1264,15 +858,205 @@ class CrawlRunner:
             }
         )
         if self._payload_pending is None:
-            # no in-flight payload → drain the deferred side jobs (the
-            # commit below serializes their counters) and commit now;
-            # otherwise the commit is DEFERRED to _drain_payload so a
-            # committed wave is always fully on disk, payload included.
-            # The side-job overlap therefore only pays off in payload
-            # mode — exactly the mode whose wave tail it hides under.
+            # no in-flight payload → drain the side jobs (the commit
+            # serializes their counters) and commit now; otherwise the
+            # commit is DEFERRED to _drain_payload, so a committed wave is
+            # always fully on disk, payload included
             self._drain_side()
             self._commit(manifest)
         return manifest
+
+    def _pick(self, frontier: DataFrame, manifest: dict) -> tuple[DataFrame, int]:
+        """Budgets + salted politeness pick + global ``ordem`` + fetch
+        lineage, written as the wave's visit log: that write is the one
+        materialization of the picked set. Returns the re-read visit log
+        and its row count, which rides the write as an ``Observation``.
+
+        The payload starts from the written log, not from the lazy pick
+        plan: started earlier it would compute the same pick inside its
+        own lineage before its wide stage could start."""
+        wave = manifest["wave"]
+        with job_group(self.spark.sparkContext, "pick_ordem"):
+            budgeted = self._with_robots(frontier).withColumn("score", score_expr())
+            pick = politeness_pick_ordem(
+                budgeted, manifest["ordem_offset"], salt_buckets=SALT_BUCKETS,
+                n_hosts=manifest.get("frontier_hosts"),
+            )
+            flaky = (self.flaky_share, self.flaky_fail_pct) if self.flaky_fetch else None
+            visits = (
+                fetchmod.with_fetch_lineage(pick, flaky=flaky)
+                .select(*FRONTIER_COLS, "score", "ordem",
+                        "fetch_attempts", "fetch_status", "backoff_total_s")
+                .withColumn("wave", F.lit(wave))
+            )
+            obs = Observation(f"picked_w{wave}")
+            vpath = self.store.write_wave(
+                visits.observe(obs, F.count(F.lit(1)).alias("n")), "visits", wave
+            )
+            return self.spark.read.schema(_VISITS_SCHEMA).parquet(vpath), int(obs.get["n"])
+
+    def _links(self, fetched: DataFrame, manifest: dict) -> tuple[DataFrame, bool]:
+        """Discovered links: first-fetcher attribution, exact anti-join
+        against the seen set (behind the filter probe past the broadcast
+        budget), robots split; written as ``discovered/w{wave}``. Returns
+        the re-read partition and whether the seen index is live. Adds
+        the discovered count (rides the write) to ``seen_rows``."""
+        wave = manifest["wave"]
+        sc = self.spark.sparkContext
+        with job_group(sc, "links_seen"):
+            links = (
+                fetched.select(
+                    F.explode_outer("out_links").alias("url"),
+                    F.col("depth").alias("parent_depth"),
+                    F.col("ordem").alias("parent_ordem"),
+                )
+                .filter(F.col("url").isNotNull())
+                .groupBy("url")
+                .agg(F.min_by("parent_depth", "parent_ordem").alias("parent_depth"))
+            )
+            bcast_seen = self.seen_broadcast_ok(
+                manifest.get("seen_rows"), manifest.get("avg_url_bytes", 80.0)
+            )
+            index_live = self._ensure_seen_index()
+            if not bcast_seen and not index_live:
+                # first wave past the budget: build the index once (the
+                # wave comes from the in-memory manifest — the previous
+                # wave's commit may still be deferred)
+                with job_group(sc, "seen_idx"):
+                    self._backfill_seen_index(wave)
+                index_live = True
+            new_links = seenmod.filter_unseen(
+                links, self._seen_df(wave - 1), "url", self._probe_tagger(),
+                broadcast_seen=bcast_seen,
+            )
+            discovered = self._with_robots(
+                new_links.select(
+                    "url",
+                    url_host("url").alias("host"),
+                    (F.col("parent_depth") + 1).alias("depth"),
+                ),
+            ).select(
+                "url",
+                "host",
+                "depth",
+                F.lit(wave + 1).alias("discovered_wave"),
+                salient_expr().alias("salient"),
+                "robots_ok",
+                F.lit(wave).alias("wave"),
+            )
+            obs = Observation(f"discovered_w{wave}")
+            dpath = self.store.write_wave(
+                discovered.observe(obs, F.count(F.lit(1)).alias("n")), "discovered", wave
+            )
+            if manifest.get("seen_rows") is not None:
+                manifest["seen_rows"] += int(obs.get["n"])
+        return self.spark.read.schema(_DISCOVERED_SCHEMA).parquet(dpath), index_live
+
+    def _start_side_jobs(
+        self,
+        frontier: DataFrame,
+        picked: DataFrame,
+        discovered: DataFrame,
+        wave: int,
+        index_live: bool,
+    ) -> tuple[str, int, int, dict[str, int]]:
+        """Start the jobs that depend only on the written discovered
+        partition and visit log, not on each other: seen-filter update,
+        per-host metrics, next frontier and (once live) the index insert.
+        Only the frontier is waited on here — the next pick reads it;
+        the others join the deferred side jobs. Returns the next
+        frontier's (path, rows, hosts) and the wave's counters, which
+        the metrics job fills in before it completes."""
+        counters: dict[str, int] = {}
+        side = [
+            self._spawn("bloom_update", lambda: self._seen_filter_add(discovered, wave)),
+            self._spawn(
+                "metrics",
+                lambda: counters.update(self._write_metrics(picked, discovered, wave)),
+            ),
+        ]
+        nxt = self._spawn(
+            "frontier_write", lambda: self._write_frontier(frontier, picked, discovered, wave)
+        )
+        if index_live:
+            # overwrites exactly index partition (d, wave): replay-safe
+            side.append(self._spawn("seen_idx", lambda: self._seen_idx_insert(
+                discovered.select("url"), "d", wave, overwrite=True
+            )))
+        # registered BEFORE waiting on the frontier: if that job fails,
+        # the next drain still waits for these instead of orphaning them
+        self._side_pending += side
+        return (*nxt.result(), counters)
+
+    def _write_histogram(self, picked: DataFrame, wave: int) -> None:
+        hist = fetchmod.duration_histogram(
+            fetchmod.with_request_duration(picked)
+        ).withColumn("wave", F.lit(wave))
+        self.store.write_wave(hist, "duration_hist", wave)
+
+    def _write_metrics(
+        self, picked: DataFrame, discovered: DataFrame, wave: int
+    ) -> dict[str, int]:
+        """Per-host metrics (reference metrics.py:6-27 analog:
+        requests_total, records_processed, errors_total{type} — here per
+        host per wave, as a queryable parquet table instead of a
+        Prometheus endpoint). The picked-side and links-side
+        contributions union into a single ``groupBy(host)``: one shuffle.
+        Returns the wave totals, which ride the write as an
+        ``Observation`` (no extra job)."""
+        met_src = picked.select(
+            "host",
+            F.lit(1).alias("_req"),
+            F.col("fetch_attempts").alias("_att"),
+            (F.col("fetch_status") == "error").cast("int").alias("_err"),
+            F.col("backoff_total_s").alias("_back"),
+            F.lit(0).alias("_disc"),
+        ).unionByName(
+            discovered.select(
+                "host",
+                F.lit(0).alias("_req"),
+                F.lit(0).alias("_att"),
+                F.lit(0).alias("_err"),
+                F.lit(0).alias("_back"),
+                F.lit(1).alias("_disc"),
+            )
+        )
+        totals = {
+            "requests_total": "_req",
+            "fetch_attempts_total": "_att",
+            "errors_fetch_total": "_err",
+            "retry_backoff_s_total": "_back",
+            "links_discovered_total": "_disc",
+        }
+        metrics_df = (
+            met_src.groupBy("host")
+            .agg(*(F.sum(c).alias(name) for name, c in totals.items()))
+            .withColumn("wave", F.lit(wave))
+        )
+        obs = Observation(f"metrics_totals_w{wave}")
+        metrics_df = metrics_df.observe(obs, *(F.sum(n).alias(n) for n in totals))
+        self.store.write_wave(metrics_df, "metrics", wave)
+        return {k: int(v or 0) for k, v in obs.get.items()}
+
+    def _write_frontier(
+        self, frontier: DataFrame, picked: DataFrame, discovered: DataFrame, wave: int
+    ) -> tuple[str, int, int]:
+        """Next frontier = old − picked + discovered∧allowed; returns its
+        path, rows and distinct hosts (both ride the write)."""
+        frontier_next = (
+            frontier.join(picked.select("url"), "url", "left_anti")
+            .select(*FRONTIER_COLS)
+            .unionByName(discovered.filter(F.col("robots_ok")).select(*FRONTIER_COLS))
+        )
+        obs = Observation(f"frontier_hosts_w{wave + 1}")
+        frontier_next = frontier_next.observe(
+            obs,
+            F.approx_count_distinct("host").alias("hosts"),
+            F.count(F.lit(1)).alias("rows"),
+        )
+        path = self.store.write_full(frontier_next, "frontier", wave + 1)
+        got = obs.get
+        return path, int(got["rows"]), int(got["hosts"])
 
     def _fetch_payload(self, fetched: DataFrame, wave: int) -> None:
         """Image+caption payload landing with per-partition lineage."""

@@ -6,83 +6,13 @@ from crawler_tjce_spark.session import get_spark
 
 SF_TEST = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
-# Recycle the Spark JVM every N test modules (VERDICT r4 #9): the full
-# ~15-minute suite in ONE session died mid-run once with the JVM gone
-# (ConnectionRefusedError cascade; every affected test green on
-# re-run), i.e. accumulated driver-side state eventually killed the
-# long-lived JVM. No test shares Spark state across modules (module
-# fixtures rebuild their DataFrames), so a module boundary is a safe
-# restart point. ~22 modules / 8 → the suite runs in ≥3 fresh
-# sessions, each well under the observed failure horizon, at the cost
-# of ~10 s JVM warmup per restart.
-#
-# The recycle is a FULL JVM replacement, not a same-JVM context
-# restart: an in-place stop()+getOrCreate() once hit
-# `IllegalStateException: Shutdown hooks cannot be modified during
-# shutdown` — the 24-minute-old JVM had begun dying exactly as the new
-# context was constructed in it, and the half-dead JVM poisoned every
-# remaining module (76-error cascade). Tearing down the py4j gateway
-# and terminating the launcher process guarantees the next module gets
-# a truly fresh JVM no matter what state the old one accumulated.
-RECYCLE_EVERY_MODULES = int(os.environ.get("SPARK_GRAFT_TEST_RECYCLE", "8"))
-
-_sess: dict = {"spark": None, "modules": 0}
-
-
-def _teardown_jvm(spark) -> None:
-    """Stop the session AND retire its JVM: py4j gateway down, launcher
-    process terminated, PySpark's process-global gateway handle cleared
-    so the next get_spark launches a brand-new JVM."""
-    from pyspark import SparkContext
-
-    try:
-        spark.stop()
-    except Exception:
-        pass
-    gw = SparkContext._gateway
-    if gw is not None:
-        try:
-            gw.shutdown()
-        except Exception:
-            pass
-        proc = getattr(gw, "proc", None)
-        if proc is not None:
-            try:
-                proc.terminate()
-                proc.wait(timeout=15)
-            except Exception:
-                try:
-                    proc.kill()
-                except Exception:
-                    pass
-    SparkContext._gateway = None
-    SparkContext._jvm = None
-    # If spark.stop() itself failed above, PySpark's process-global
-    # session/context singletons may still point at the dead JVM and the
-    # next getOrCreate would hand back a session whose gateway was just
-    # destroyed (ADVICE r5) — clear them so the next fixture call is
-    # guaranteed a fresh session.
-    from pyspark.sql import SparkSession
-
-    try:
-        SparkSession._instantiatedSession = None
-        SparkSession._activeSession = None
-        SparkContext._active_spark_context = None
-    except Exception:
-        pass
+# One session for the whole suite: no test shares Spark state across
+# modules (module fixtures rebuild their DataFrames).
+_sess: dict = {"spark": None}
 
 
 @pytest.fixture(scope="module")
 def spark():
-    _sess["modules"] += 1
-    if (
-        _sess["spark"] is not None
-        and RECYCLE_EVERY_MODULES > 0
-        and (_sess["modules"] - 1) % RECYCLE_EVERY_MODULES == 0
-        and _sess["modules"] > 1
-    ):
-        _teardown_jvm(_sess["spark"])
-        _sess["spark"] = None
     if _sess["spark"] is None:
         _sess["spark"] = get_spark(app_name="tests", cores=8)
     s = _sess["spark"]
@@ -99,7 +29,7 @@ def spark():
 def _stop_spark_at_exit():
     yield
     if _sess["spark"] is not None:
-        _teardown_jvm(_sess["spark"])
+        _sess["spark"].stop()
         _sess["spark"] = None
 
 

@@ -51,7 +51,7 @@ def test_crawl_matches_reference_order_and_seen(spark, world, ref, tmp_path):
 def test_crawl_without_bloom_identical(spark, world, ref, tmp_path):
     """Bloom is a prefilter only — disabling it must not change results."""
     store = str(tmp_path / "store_nb")
-    runner = CrawlRunner(spark, world, store, max_waves=30, use_bloom=False)
+    runner = CrawlRunner(spark, world, store, max_waves=30, seen_filter="none")
     runner.run(resume=False)
     assert _spark_visits(runner) == [(o, u) for o, u, _, _ in ref.visits]
 

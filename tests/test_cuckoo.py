@@ -34,7 +34,8 @@ def test_parity_with_bloom_path(spark, world):
 
     bits = seenmod.build_bloom(seen_urls, "url", expected_n=800)
     _, k = seenmod.bloom_params(800)
-    got_bl = {r["url"] for r in seenmod.filter_unseen(cands, seen_urls, "url", bits, k).collect()}
+    tagger = lambda df: seenmod.maybe_seen_expr(df, "url", bits, k)  # noqa: E731
+    got_bl = {r["url"] for r in seenmod.filter_unseen(cands, seen_urls, "url", tagger).collect()}
 
     assert got_ck == expected
     assert got_bl == expected

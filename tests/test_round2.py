@@ -605,7 +605,7 @@ def test_pipelined_payload_crash_before_deferred_commit_replays(spark, world, tm
     assert r1._payload_pending is not None
     # simulate the crash: thread may or may not have finished its write;
     # the manifest on disk is still the bootstrap commit either way
-    r1._payload_pending[0].join()
+    r1._payload_pending[0].result()
     assert r1.store.load_manifest()["wave"] == 0
     # resume with a fresh runner: wave 0 replays (idempotent overwrite),
     # then the crawl runs to completion
@@ -621,3 +621,46 @@ def test_pipelined_payload_crash_before_deferred_commit_replays(spark, world, tm
     for w in range(final["wave"]):
         rows = r2.store.count_rows(r2.store.table_dir("payload", w))
         assert rows > 0 or not _os.path.exists(r2.store.table_dir("payload", w))
+
+
+def test_side_job_failure_waits_for_siblings_and_skips_commit(
+    spark, world, tmp_path, monkeypatch
+):
+    """A failing side job (wave 1's seen-filter update) surfaces at the
+    next drain — after wave 2's pick — only once the other side jobs of
+    its wave have finished; wave 1 is not committed, no job is left
+    running, and a resume equals the reference simulator."""
+    store = str(tmp_path / "store_sidefail")
+    r1 = CrawlRunner(spark, world, store, max_waves=3, bloom_expected=10_000,
+                     fetch_images=True)
+    real_add, real_metrics = r1._seen_filter_add, r1._write_metrics
+    finished = []
+
+    def failing_add(df, wave):
+        if wave == 1:
+            raise RuntimeError("filter update failed")
+        real_add(df, wave)
+
+    def slow_metrics(picked, discovered, wave):
+        if wave == 1:
+            time.sleep(2)
+        out = real_metrics(picked, discovered, wave)
+        finished.append(wave)
+        return out
+
+    monkeypatch.setattr(r1, "_seen_filter_add", failing_add)
+    monkeypatch.setattr(r1, "_write_metrics", slow_metrics)
+    with pytest.raises(RuntimeError, match="filter update failed"):
+        r1.run(resume=False)
+    assert 1 in finished
+    assert os.path.isdir(r1.store.table_dir("visits", 2))
+    assert r1.store.load_manifest()["wave"] == 1
+    assert not spark.sparkContext.statusTracker().getActiveJobsIds()
+
+    r2 = CrawlRunner(spark, world, store, max_waves=3, bloom_expected=10_000,
+                     fetch_images=True)
+    r2.run(resume=True)
+    ref = refsim.simulate(world, max_waves=3)
+    got = sorted((r["ordem"], r["url"]) for r in r2.visits_df().select("ordem", "url").collect())
+    assert got == [(o, u) for o, u, _, _ in ref.visits]
+    assert {r["url"] for r in r2.seen_final_df().collect()} == ref.seen

@@ -25,14 +25,14 @@ def test_broadcast_and_bytes_paths_agree(spark):
     bits = seenmod.build_bloom(seen_urls, "url", expected_n=400)
     _, k = seenmod.bloom_params(400)
 
-    via_bytes = set(
-        r["url"] for r in seenmod.filter_unseen(cands, seen_urls, "url", bits, k).collect()
-    )
+    def via(payload):
+        tagger = lambda df: seenmod.maybe_seen_expr(df, "url", payload, k)  # noqa: E731
+        return {r["url"] for r in seenmod.filter_unseen(cands, seen_urls, "url", tagger).collect()}
+
+    via_bytes = via(bits)
     bc = spark.sparkContext.broadcast(bits)
     assert isinstance(bc, Broadcast)
-    via_bc = set(
-        r["url"] for r in seenmod.filter_unseen(cands, seen_urls, "url", bc, k).collect()
-    )
+    via_bc = via(bc)
     bc.unpersist()
 
     expected = {f"https://h{i % 5}.example/p/{i}" for i in range(200, 350)}
@@ -89,41 +89,6 @@ def test_wave_shuffle_sizing_restored(spark, tmp_path):
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
 
 
-def test_prefilter_new_rows_equals_not_in(spark):
-    """Row-level pre-shuffle filter == exact NOT IN semantics for any
-    bloom state: candidates with DUPLICATE rows per url, a seen set
-    overlapping half of them, and a deliberately tiny (collision-heavy)
-    bloom — false positives must be recovered, never dropped, and
-    duplicate candidate rows must all survive for downstream
-    attribution."""
-    from crawler_tjce_spark.plans import seen as seenmod
-
-    cands = spark.createDataFrame(
-        [(f"https://h{i % 5}.example/p/{i % 40}", i) for i in range(120)],
-        "url string, payload int",
-    )
-    seen = spark.createDataFrame(
-        [(f"https://h{i % 5}.example/p/{i}",) for i in range(0, 40, 2)], "url string"
-    )
-    # collision-heavy bloom: 64 bits for 20 keys → many false positives
-    import numpy as np
-
-    bits = seenmod.build_bloom(seen, "url", expected_n=2, fpp=0.5)
-    _, k = seenmod.bloom_params(2, 0.5)
-    tagger = lambda df: seenmod.maybe_seen_expr(df, "url", bits, k)  # noqa: E731
-
-    got = sorted(
-        (r["url"], r["payload"])
-        for r in seenmod.prefilter_new_rows(cands, seen, "url", tagger).collect()
-    )
-    seen_urls = {r["url"] for r in seen.collect()}
-    want = sorted(
-        (r["url"], r["payload"]) for r in cands.collect() if r["url"] not in seen_urls
-    )
-    assert got == want
-    assert len(got) > 0 and np.frombuffer(bits, dtype=np.uint8).any()
-
-
 def test_distributed_bloom_merge_parity(spark):
     """build_bloom(distributed=True) — the treeReduce executor-side
     OR-merge (VERDICT r5 #8) — must produce a byte-identical array to
@@ -145,25 +110,20 @@ def _plan(df) -> str:
 
 def test_broadcast_seen_skips_python_probe(spark):
     """broadcast_seen=True plans the exact broadcast anti-join alone —
-    no Arrow UDF stage — with the same rows as the bloom path; the
-    prefilter path follows the same rule for its tagger."""
+    no Arrow UDF stage — with the same rows as the bloom path."""
     seen_urls, cands = _dfs(spark)
     bits = seenmod.build_bloom(seen_urls, "url", expected_n=400)
     _, k = seenmod.bloom_params(400)
     expected = {f"https://h{i % 5}.example/p/{i}" for i in range(200, 350)}
+    tagger = lambda df: seenmod.maybe_seen_expr(df, "url", bits, k)  # noqa: E731
 
-    bloom = seenmod.filter_unseen(cands, seen_urls, "url", bits, k)
-    bcast = seenmod.filter_unseen(cands, seen_urls, "url", bits, k, broadcast_seen=True)
+    bloom = seenmod.filter_unseen(cands, seen_urls, "url", tagger)
+    bcast = seenmod.filter_unseen(cands, seen_urls, "url", tagger, broadcast_seen=True)
     assert "ArrowEvalPython" in _plan(bloom)
     assert "ArrowEvalPython" not in _plan(bcast)
     assert "BroadcastHashJoin" in _plan(bcast)
     got = {r["url"] for r in bcast.collect()}
     assert got == {r["url"] for r in bloom.collect()} == expected
-
-    tagger = lambda df: seenmod.maybe_seen_expr(df, "url", bits, k)  # noqa: E731
-    pre = seenmod.prefilter_new_rows(cands, seen_urls, "url", tagger, broadcast_seen=True)
-    assert "ArrowEvalPython" not in _plan(pre)
-    assert {r["url"] for r in pre.collect()} == expected
 
 
 def test_runner_bloom_path_past_broadcast_budget(spark, tmp_path):

@@ -66,18 +66,6 @@ def _exchanges(plan):
     return len(re.findall(r"^\(\d+\) Exchange\b", plan, re.M))
 
 
-def test_bucketed_matches_paths_mode(spark, world, tmp_path):
-    fps = {}
-    for mode in ("bucketed", "paths"):
-        store = str(tmp_path / f"store_{mode}")
-        r = CrawlRunner(
-            spark, world, store, max_waves=4, seen_store=mode, seen_broadcast_mb=0
-        )
-        m = r.run(resume=False)
-        fps[mode] = (m["wave"], m["ordem_offset"], _crawl_fingerprint(r))
-    assert fps["bucketed"] == fps["paths"]
-
-
 def test_seen_side_scans_bucketed_without_exchange(spark, world, tmp_path):
     """The left_anti against the seen index must show the seen side as a
     bucketed scan (no Exchange under it) — the whole point of the layout.
@@ -147,14 +135,13 @@ def test_static_session_overwrite_keeps_other_partitions(spark, world, tmp_path)
 
 
 def test_bucketed_resume_backfills_paths_store(spark, world, tmp_path):
-    """A store written with seen_store="paths" has no index; resuming it
-    bucketed past the budget must backfill the index from
-    seeds/discovered/requeued, not register an empty one (which would
-    empty the seen set and re-crawl the history)."""
+    """A store crawled within the budget has no index; resuming it past
+    the budget must backfill the index from seeds/discovered/requeued,
+    not register an empty one (which would empty the seen set and
+    re-crawl the history)."""
     store = str(tmp_path / "store_migrate")
-    CrawlRunner(
-        spark, world, store, max_waves=2, seen_store="paths", seen_broadcast_mb=0
-    ).run(resume=False)
+    CrawlRunner(spark, world, store, max_waves=2).run(resume=False)
+    assert not os.path.exists(os.path.join(store, "seen_idx"))
     r = CrawlRunner(
         spark, world, store, max_waves=3, seen_store="bucketed", seen_broadcast_mb=0
     )
@@ -255,27 +242,3 @@ def test_resume_reads_and_inserts_into_live_index(spark, world, tmp_path):
     assert _index_parts(store, "d") == [0, 1, 2, 3]
     assert "Bucketed: true" in _anti_join_plan(spark, r2)
     _ref_match(r2, world, 4)
-
-
-def test_paths_resume_drops_live_index(spark, world, tmp_path):
-    """bucketed past the budget → "paths" resume → "bucketed" resume:
-    the paths run never inserts into the index, so it drops the live
-    one; the bucketed resume rebuilds it and the crawl equals refsim."""
-    store = str(tmp_path / "store_switch")
-    r = CrawlRunner(
-        spark, world, store, max_waves=2, seen_store="bucketed", seen_broadcast_mb=0
-    )
-    r.run(resume=False)
-    assert r._seen_index_live()
-    p = CrawlRunner(
-        spark, world, store, max_waves=4, seen_store="paths", seen_broadcast_mb=0
-    )
-    m = p.run(resume=True)
-    assert m["wave"] == 4
-    assert not os.path.exists(os.path.join(store, "seen_idx"))
-    b = CrawlRunner(
-        spark, world, store, max_waves=6, seen_store="bucketed", seen_broadcast_mb=0
-    )
-    m = b.run(resume=True)
-    assert b._seen_index_live()
-    _ref_match(b, world, m["wave"])

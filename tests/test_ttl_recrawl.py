@@ -1,6 +1,5 @@
-"""Cuckoo seen-filter in the wave loop + the TTL re-crawl story
-(VERDICT r4 #7), the links-path probe pushdown A/B (VERDICT r4 #1),
-and the automatic offsets-form selection (VERDICT r4 #8).
+"""Cuckoo seen-filter in the wave loop + the TTL re-crawl story, and
+the automatic offsets-form selection of the politeness pick.
 
 The reference crawler never re-visits a URL (its seen set is
 append-only, crawler/crawler.py's visited-set semantics); TTL eviction
@@ -54,16 +53,30 @@ def test_cuckoo_runner_matches_reference(spark, world, ref, tmp_path):
     assert {r["url"] for r in runner.seen_final_df().collect()} == ref.seen
 
 
-def test_links_prefilter_on_identical(spark, world, ref, tmp_path):
-    """The pre-shuffle probe pushdown (non-default: A/B-measured slower
-    on the 20× world, kept as an opt-in for duplication-heavy link
-    streams) is output-invariant: identical visits and seen set."""
-    store = str(tmp_path / "store_pre")
+def test_cuckoo_runner_probes_past_broadcast_budget(
+    spark, world, ref, tmp_path, monkeypatch
+):
+    """Past the broadcast budget the links anti-join runs behind the
+    cuckoo probe (an Arrow UDF stage in its plan), and the crawl still
+    equals the reference simulator."""
+    from crawler_tjce_spark.plans import seen as seenmod
+
+    plans = []
+    real = seenmod.filter_unseen
+
+    def recording(*a, **kw):
+        out = real(*a, **kw)
+        plans.append(out._jdf.queryExecution().executedPlan().toString())
+        return out
+
+    monkeypatch.setattr(seenmod, "filter_unseen", recording)
+    store = str(tmp_path / "store_ck_nb")
     runner = CrawlRunner(
-        spark, world, store, max_waves=30, links_prefilter=True,
-        bloom_expected=10_000,
+        spark, world, store, max_waves=30, seen_filter="cuckoo",
+        bloom_expected=10_000, seen_broadcast_mb=0,
     )
     runner.run(resume=False)
+    assert plans and all("ArrowEvalPython" in p for p in plans)
     assert _visits(runner) == [(o, u) for o, u, _, _ in ref.visits]
     assert {r["url"] for r in runner.seen_final_df().collect()} == ref.seen
 
@@ -72,9 +85,9 @@ def test_ttl_evict_requeue_recrawls_exactly_the_stale_set(spark, world, tmp_path
     """End-to-end deletion story: crawl to completion, TTL-evict a URL,
     requeue the seed page that links to it, re-run. The re-crawl
     fetches exactly {seed, evicted}: the seed because it was requeued,
-    the evicted URL because the seed's links RE-DISCOVER it through the
-    cuckoo probe (its fingerprint was deleted) — while every other
-    link of the seed page stays blocked by the filter + exact seen."""
+    the evicted URL because the seed's links RE-DISCOVER it (its seen
+    entry is masked and its fingerprint deleted) — while every other
+    link of the seed page stays blocked by the exact seen set."""
     store = str(tmp_path / "store_ttl")
     runner = CrawlRunner(
         spark, world, store, max_waves=30, seen_filter="cuckoo",
