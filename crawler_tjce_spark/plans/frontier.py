@@ -7,7 +7,7 @@ wave, fetch at most ``host_budget`` URLs, highest score first.
 
 Skew (north_rule): one hot host can own half of a 10^10 frontier. A
 single ``Window.partitionBy(host)`` would then sort that host's whole
-shard in one task. ``politeness_pick`` therefore runs TWO stages:
+shard in one task. ``politeness_pick_ordem`` therefore runs TWO stages:
 
   stage 1  window over (host, salt) where salt = pmod(xxhash64(url), S)
            → keeps only the top ``budget`` per salt bucket (parallel,
@@ -51,38 +51,11 @@ def score_expr(salient_col="salient", depth_col="depth", wave_col="discovered_wa
     ).cast("int")
 
 
-def politeness_pick(
-    frontier: DataFrame,
-    budget_col: str = "host_budget",
-    salt_buckets: int = 16,
-) -> DataFrame:
-    """Top-``budget`` URLs per host by (score desc, url asc), salted.
-
-    Input must carry columns: url, host, score, and ``budget_col``
-    (joined from robots). Output: the picked rows (all input columns).
-    """
-    order = [F.desc("score"), F.col("url")]
-    salted = frontier.withColumn("_salt", F.pmod(F.xxhash64("url"), F.lit(salt_buckets)))
-    w1 = Window.partitionBy("host", "_salt").orderBy(*order)
-    stage1 = (
-        salted.withColumn("_r1", F.row_number().over(w1))
-        .filter(F.col("_r1") <= F.col(budget_col))
-        .drop("_r1", "_salt")
-    )
-    w2 = Window.partitionBy("host").orderBy(*order)
-    return (
-        stage1.withColumn("_r2", F.row_number().over(w2))
-        .filter(F.col("_r2") <= F.col(budget_col))
-        .drop("_r2")
-    )
-
-
 def politeness_pick_ordem(
     frontier: DataFrame,
     ordem_offset: int,
     budget_col: str = "host_budget",
     salt_buckets: int = 16,
-    range_partition_offsets: bool | None = None,
     n_hosts: int | None = None,
 ) -> DataFrame:
     """Fused politeness pick + global ``ordem`` assignment — ONE job.
@@ -122,17 +95,12 @@ def politeness_pick_ordem(
     computes byte-identical offsets (equality pinned in
     tests/test_skew.py).
 
-    Form selection (VERDICT r4 #8 — no caller flag needed): pass the
+    Form selection, with no caller flag: pass the
     frontier's distinct-host count as ``n_hosts`` (the crawl runner
     tracks it from an ``Observation`` riding the frontier write — zero
     extra jobs) and the scalable form engages automatically at
-    ``RANGE_OFFSETS_MIN_HOSTS``. ``range_partition_offsets`` remains as
-    an explicit override (True/False); ``None`` means auto.
+    ``RANGE_OFFSETS_MIN_HOSTS``.
     """
-    if range_partition_offsets is None:
-        range_partition_offsets = (
-            n_hosts is not None and n_hosts >= RANGE_OFFSETS_MIN_HOSTS
-        )
     # the rank/filter/agg Columns reference columns by NAME only, so
     # they are memoized per (application, salt_buckets, budget_col) —
     # the wave loop rebuilds this plan every wave and the expression
@@ -165,7 +133,7 @@ def politeness_pick_ordem(
     )
     picked = stage1.withColumn("_r2", r2_c).filter(r2_keep)
     counts = frontier.groupBy("host").agg(cnt_agg)
-    if range_partition_offsets:
+    if n_hosts is not None and n_hosts >= RANGE_OFFSETS_MIN_HOSTS:
         from crawler_tjce_spark.operators.windows import scalable_prefix_offsets
 
         offsets = scalable_prefix_offsets(counts, "host")
@@ -177,15 +145,3 @@ def politeness_pick_ordem(
         .drop("_r2", "_off")
     )
 
-
-def assign_wave_ordem(picked: DataFrame, ordem_offset: int) -> DataFrame:
-    """Within-wave visit order (crawl contract §4): (host asc, score
-    desc, url asc), globally numbered starting at ``ordem_offset``+1.
-
-    Uses the two-pass scalable sequence (rank within host + broadcast
-    host offsets) — no single-task global window.
-    """
-    from crawler_tjce_spark.operators.windows import scalable_global_ordem
-
-    out = scalable_global_ordem(picked, "host", [F.desc("score"), F.col("url")], name="ordem")
-    return out.withColumn("ordem", (F.col("ordem") + F.lit(ordem_offset)).cast("long"))

@@ -14,9 +14,9 @@ bit math, zero string handling in Python).
 The probe only runs where it saves a shuffle: while the seen side fits
 a broadcast, the exact broadcast ``left_anti`` alone is cheaper than any
 Python-UDF stage (see :func:`filter_unseen`, which takes the bloom or
-the cuckoo probe as its tagger); the filter is still built and
-persisted every wave so it is ready when the seen set outgrows the
-broadcast budget.
+the cuckoo probe as its tagger). So the crawl runner builds the filter
+only once the seen set outgrows the broadcast budget, from the seen set
+itself, and from then on adds each wave's discovered URLs to it.
 
 Build = per-partition partial bit arrays (``mapInPandas``) OR-merged on
 the driver; at 10^10 keys with 1% fpp the array is ~12 GB — beyond one
@@ -55,28 +55,33 @@ def _positions(h1: np.ndarray, h2: np.ndarray, m: int, k: int) -> np.ndarray:
     return ((h1[:, None] + i * h2[:, None]) % np.uint64(m)).astype(np.int64)
 
 
+def _set_bits(bits: np.ndarray, h1: np.ndarray, h2: np.ndarray, k: int) -> None:
+    """Set the k bits of every (h1, h2) key in the uint8 array, in place."""
+    pos = _positions(h1, h2, len(bits) * 8, k).ravel()
+    np.bitwise_or.at(bits, pos >> 3, (1 << (pos & 7)).astype(np.uint8))
+
+
+def bloom_insert(bloom_bits: bytes, h1: np.ndarray, h2: np.ndarray, k: int) -> bytes:
+    """Driver-side insert of a bounded batch of JVM-hashed keys."""
+    bits = np.frombuffer(bloom_bits, dtype=np.uint8).copy()
+    _set_bits(bits, h1, h2, k)
+    return bits.tobytes()
+
+
 def build_bloom(
     seen: DataFrame, url_col: str, expected_n: int, fpp: float = 0.01,
-    distributed: bool = False,
+    base: bytes | None = None,
 ) -> bytes:
-    """Build the bloom bit array from a seen-URL DataFrame.
+    """Build the bloom bit array from a seen-URL DataFrame, OR-ed into
+    ``base`` when given (an incremental add).
 
     JVM computes both hashes; each partition emits a partial bit array
-    (Arrow batch → numpy). Empty input → all-zero array (bloom then
+    (Arrow batch → numpy) and the driver ORs them — one array per
+    upstream partition lands on the driver, fine while P × m/8 bytes is
+    driver-sized (the sandbox's ~1.2 MB arrays); at cluster scale the
+    OR-merge runs executor-side (``treeReduce``) so the driver receives
+    one array. Empty input → ``base`` or an all-zero array (bloom then
     rejects everything, anti-join still authoritative).
-
-    ``distributed=False`` (default): the driver ORs the partials — one
-    array per upstream partition lands on the driver. Fine while
-    P × m/8 bytes is driver-sized (the sandbox's ~1.2 MB arrays).
-
-    ``distributed=True`` (the cluster-scale merge path): partials are
-    OR-merged executor-side via ``treeReduce``, so the driver receives
-    exactly ONE array regardless of partition count. At the documented 10^10-key/1% story the array
-    is ~12 GB — with thousands of partials the driver-merge form would
-    pull terabytes through the driver; the tree form moves each level's
-    arrays between executors and ships one result. OR is associative
-    and commutative, so both forms produce byte-identical arrays
-    (parity-pinned in tests/test_seen_broadcast.py).
     """
     m, k = bloom_params(expected_n, fpp)
     hashed = seen.select(
@@ -90,28 +95,12 @@ def build_bloom(
             if len(pdf) == 0:
                 continue
             any_rows = True
-            pos = _positions(pdf["h1"].to_numpy(), pdf["h2"].to_numpy(), m, k).ravel()
-            np.bitwise_or.at(bits, pos >> 3, (1 << (pos & 7)).astype(np.uint8))
+            _set_bits(bits, pdf["h1"].to_numpy(), pdf["h2"].to_numpy(), k)
         if any_rows:
             yield pd.DataFrame({"bits": [bits.tobytes()]})
 
-    parts_df = hashed.mapInPandas(partial, schema="bits binary")
-    if distributed:
-        import math
-
-        rdd = parts_df.rdd.map(lambda r: r["bits"])
-        n_parts = rdd.getNumPartitions()
-        if rdd.isEmpty():
-            return np.zeros(m // 8, dtype=np.uint8).tobytes()
-        depth = max(2, int(math.ceil(math.log(max(n_parts, 2), 16))))
-        return rdd.treeReduce(
-            lambda a, b: (
-                np.frombuffer(a, dtype=np.uint8) | np.frombuffer(b, dtype=np.uint8)
-            ).tobytes(),
-            depth=depth,
-        )
-    parts = parts_df.collect()
-    acc = np.zeros(m // 8, dtype=np.uint8)
+    parts = hashed.mapInPandas(partial, schema="bits binary").collect()
+    acc = np.frombuffer(base or bytes(m // 8), dtype=np.uint8).copy()
     for row in parts:
         acc |= np.frombuffer(row["bits"], dtype=np.uint8)
     return acc.tobytes()

@@ -29,6 +29,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import shutil
 import time
 from typing import Any
@@ -172,8 +173,12 @@ class SnapshotStore:
     def read_all_waves(self, spark: SparkSession, table: str) -> DataFrame:
         """Union of every wave partition (payload/visits/discovered read).
         Rows carry their wave as a data column; callers filter to the
-        committed range when uncommitted wave dirs may exist."""
-        return spark.read.parquet(os.path.join(self.table_dir(table), "w*"))
+        committed range when uncommitted wave dirs may exist. The
+        ``w{N}`` dirs are listed here and passed by name: a ``w*`` glob
+        makes Spark's metadata check log a FileNotFoundException."""
+        tdir = self.table_dir(table)
+        waves = sorted(int(d[1:]) for d in os.listdir(tdir) if re.fullmatch(r"w\d+", d))
+        return spark.read.parquet(*(self.table_dir(table, w) for w in waves))
 
     def gc_uncommitted(self, keep: set[str]) -> None:
         """Drop snapshot dirs not referenced by the manifest (best effort)."""

@@ -15,10 +15,12 @@ seen set              append-only: seeds ∪ all ``discovered/w*`` ∪
                       catalog parquet index CLUSTERED BY (url), built
                       lazily by one backfill and then kept up every
                       wave, so the exact anti-join reads the seen side
-                      pre-partitioned and only candidates shuffle;
-                      plus a driver-held bloom or cuckoo filter as
-                      prefilter, persisted for resume (only the
-                      committed wave's snapshot is kept)
+                      pre-partitioned and only candidates shuffle
+seen filter           past the budget only: a bloom or cuckoo filter
+                      in front of the anti-join, built with the index
+                      and then kept serving the next wave; persisted as
+                      ``{kind}_{wave}`` for resume (only the committed
+                      wave's snapshot is kept)
 visit log (ordem)     append-only ``visits/wave=N`` partitions
 payload               append-only ``payload/wave=N`` with lineage cols
 progress              ``_manifest.json`` atomic commit per wave
@@ -53,13 +55,15 @@ Per wave:
    a per-wave insert and a bucketed scan to ship a few thousand URLs).
    Past the budget the bloom or cuckoo probe prefilters and only
    maybe-seen rows shuffle; the first such wave builds the index once
-   from the path store, and from then on the seen side scans bucketed;
-6. seen-filter update, per-host metrics + duration-histogram tables,
-   the next-frontier write (old − picked + discovered∧allowed) and,
-   once the index exists, its insert of this wave's discovered URLs run
-   as concurrent background jobs (:meth:`CrawlRunner._spawn`); only the
-   frontier is waited on in-wave, the rest are drained after the next
-   wave's pick;
+   from the path store and the filter from the seen set, and from then
+   on the seen side scans bucketed. Wave N's seen side holds seeds,
+   ``discovered`` of waves before N and ``requeued`` up to N;
+6. per-host metrics + duration-histogram tables, the next-frontier
+   write (old − picked + discovered∧allowed) and, once they exist, the
+   index insert of this wave's discovered URLs and the seen-filter
+   update (when the filter served this wave) run as concurrent
+   background jobs (:meth:`CrawlRunner._spawn`); only the frontier is
+   waited on in-wave, the rest are drained after the next wave's pick;
 7. the payload job PIPELINES ACROSS WAVES: it is waited on at the NEXT
    wave's payload start (or loop end), so wave N+1's pick runs under
    wave N's payload tail; wave N's manifest commit (+ snapshot log for
@@ -192,14 +196,13 @@ class CrawlRunner:
         self.flaky_fetch = flaky_fetch
         self.flaky_share = flaky_share
         self.flaky_fail_pct = flaky_fail_pct
-        self._bloom_bits: bytes | None = None
-        # probes read the filters from broadcasts (one transfer per
-        # executor, cached) instead of re-serializing them with every task
-        # closure; refreshed by _bloom_publish / _cuckoo_publish
-        self._bloom_bc = None
-        self._bloom_k = 0
-        self._cuckoo = None
-        self._cuckoo_bc = None
+        # the seen filter (bloom bit array or CuckooFilter), the broadcast
+        # the probe reads it from (one transfer per executor, cached, not
+        # re-serialized with every task closure) and the wave it serves
+        # — see _serve_filter
+        self._filter = None
+        self._filter_bc = None
+        self._filter_wave: int | None = None
         # (future, wave) of the in-flight payload job — see _drain_payload
         self._payload_pending: tuple[futures.Future, int] | None = None
         # deferred side jobs of the last wave — see _drain_side
@@ -302,13 +305,11 @@ class CrawlRunner:
     def _backfill_seen_index(self, wave: int) -> None:
         """Build the index the first time the seen set outgrows the
         broadcast budget: wipe whatever a cut-short build left behind,
-        create the table and fill it from seeds, ``discovered/w*`` and
-        ``requeued/w*`` up to ``wave`` — the entries the path store
-        holds — as two appends. ``wave`` is the running wave, so its
-        requeue batches are included; on a replay its stale
-        ``discovered`` entries are overwritten by the wave's own index
-        insert. Seeds go LAST: partition (s, -1) is what marks the index
-        live, so a build cut short is not live and is redone."""
+        create the table and fill it with wave ``wave``'s seen side as
+        the path store holds it (:meth:`_path_entries`), as two appends;
+        the wave's own index insert then adds its discovered URLs.
+        Seeds go LAST: partition (s, -1) is what marks the index live,
+        so a build cut short is not live and is redone."""
         self._drop_seen_index()
         self._create_seen_table()
         entries = self._path_entries(wave).select(
@@ -348,18 +349,19 @@ class CrawlRunner:
         finally:
             self.spark.catalog.dropTempView(view)
 
-    def _path_entries(self, upto_wave: int) -> DataFrame:
-        """(url, src, _w) seen entries read from the store's own tables:
-        seeds as (s, -1), ``discovered/w{N}`` as (d, N) and
-        ``requeued/w{N}`` as (r, N) for N ≤ ``upto_wave``. Waves are
-        pruned at the PATH level (see :meth:`_seen_df`)."""
+    def _path_entries(self, wave: int) -> DataFrame:
+        """(url, src, _w) entries of wave ``wave``'s seen side, read from
+        the store's own tables: seeds as (s, -1), ``discovered/w{N}`` as
+        (d, N) for N < ``wave`` and ``requeued/w{N}`` as (r, N) for
+        N ≤ ``wave``. Waves are pruned at the PATH level (see
+        :meth:`_seen_df`)."""
         entries = self.seeds.select(
             "url", F.lit("s").alias("src"), F.lit(-1).alias("_w")
         )
-        for table in ("discovered", "requeued"):
+        for table, last in (("discovered", wave - 1), ("requeued", wave)):
             paths = [
                 p
-                for w in range(0, upto_wave + 1)
+                for w in range(0, last + 1)
                 if os.path.exists(p := self.store.table_dir(table, w))
             ]
             if paths:
@@ -371,9 +373,11 @@ class CrawlRunner:
                 )
         return entries
 
-    def _seen_df(self, upto_wave: int) -> DataFrame:
-        """seen = (seeds ∪ discovered ∪ requeued)[wave ≤ upto_wave]
-        − still-live evictions.
+    def _seen_df(self, wave: int) -> DataFrame:
+        """Wave ``wave``'s seen side: seeds ∪ discovered before ``wave``
+        ∪ requeued up to ``wave`` (:meth:`requeue` writes its batches
+        under the wave that re-fetches them, and that wave's links step
+        must not re-discover them) − still-live evictions.
 
         Wave pruning happens at the PATH level (explicit ``w{N}`` dirs),
         not by scanning ``w*`` and filtering the ``wave`` column. Two
@@ -395,18 +399,19 @@ class CrawlRunner:
         :meth:`_backfill_seen_index`), all three entry sources are read
         from it instead; the wave bound prunes catalog PARTITIONS (same
         replay-safety as the path-level pruning — the replayed wave's
-        partition is never listed), the scan reports ``Bucketed: true``,
-        and downstream url-equality joins exchange ONLY their other
-        side. The eviction mask is a broadcast join, which preserves the
-        streamed side's bucket partitioning."""
+        partition (d, ``wave``) is never listed), the scan reports
+        ``Bucketed: true``, and downstream url-equality joins exchange
+        ONLY their other side. The eviction mask is a broadcast join,
+        which preserves the streamed side's bucket partitioning."""
         if self._ensure_seen_index():  # re-registers after session restart
+            wv = F.col("wave")
             entries = (
                 self.spark.table(self._seen_table)
-                .filter(F.col("wave") <= upto_wave)
-                .select("url", F.col("wave").alias("_w"))
+                .filter((wv < wave) | ((F.col("src") == "r") & (wv == wave)))
+                .select("url", wv.alias("_w"))
             )
         else:
-            entries = self._path_entries(upto_wave).select("url", "_w")
+            entries = self._path_entries(wave).select("url", "_w")
         evp = os.path.join(self.store.root, "evicted")
         if os.path.isdir(evp):
             ev = (
@@ -419,124 +424,104 @@ class CrawlRunner:
             )
         return entries.select("url")
 
-    # ------------------------------------------------------------ bloom filter
-    def _bloom_path(self, wave: int) -> str:
-        return os.path.join(self.store.root, f"bloom_{wave}.bin")
+    # ------------------------------------------------------------ seen filter
+    def _filter_path(self, wave: int) -> str:
+        ext = "npz" if self.seen_filter == "cuckoo" else "bin"
+        return os.path.join(self.store.root, f"{self.seen_filter}_{wave}.{ext}")
 
-    def _bloom_publish(self) -> None:
-        """(Re)broadcast the current bit array; unpersist the stale one.
+    def _serve_filter(self, wave: int) -> None:
+        """Make the seen filter serve wave ``wave``'s links probe, i.e.
+        hold :meth:`_seen_df` (``wave``): keep it if it already does,
+        else load snapshot ``{kind}_{wave}``, else rebuild it from the
+        seen side (first wave past the budget, a lost or pruned
+        snapshot, a rollback). The filter is a cache of the seen set,
+        so within the broadcast budget nothing calls this and no filter
+        exists."""
+        if self._filter_wave == wave:
+            return
+        p = self._filter_path(wave)
+        with job_group(self.spark.sparkContext, "bloom_init"):
+            if self.seen_filter == "cuckoo":
+                filt = ckmod.load_cuckoo(p) if os.path.exists(p) else ckmod.build_cuckoo(
+                    self._seen_df(wave), "url", self.bloom_expected, CUCKOO_SHARDS
+                )
+            elif os.path.exists(p):
+                with open(p, "rb") as f:
+                    filt = f.read()
+            else:
+                filt = seenmod.build_bloom(
+                    self._seen_df(wave), "url", self.bloom_expected, BLOOM_FPP
+                )
+        self._set_filter(filt, wave, save=False)
 
-        ``unpersist()`` (non-blocking) drops the executors' cached copy
-        of the superseded array so successive waves hold at most one
-        live bloom per executor."""
-        old = self._bloom_bc
-        self._bloom_bc = self.spark.sparkContext.broadcast(self._bloom_bits)
+    def _set_filter(self, filt, wave: int, save: bool) -> None:
+        """Install ``filt`` as the filter serving ``wave``: broadcast it
+        and unpersist (non-blocking) the superseded broadcast, so
+        executors hold at most one live filter; with ``save`` also
+        persist it as snapshot ``{kind}_{wave}`` for resume."""
+        old = self._filter_bc
+        self._filter, self._filter_wave = filt, wave
+        self._filter_bc = self.spark.sparkContext.broadcast(filt)
         if old is not None:
             old.unpersist()
-
-    def _init_bloom(self, wave: int) -> None:
-        _, self._bloom_k = seenmod.bloom_params(self.bloom_expected, BLOOM_FPP)
-        p = self._bloom_path(wave)
-        if os.path.exists(p):
-            with open(p, "rb") as f:
-                self._bloom_bits = f.read()
-        else:  # rebuild from committed state (resume after bloom-file loss)
-            self._bloom_bits = seenmod.build_bloom(
-                self._seen_df(wave - 1), "url", self.bloom_expected, BLOOM_FPP
-            )
-        self._bloom_publish()
-
-    def _bloom_add(self, df: DataFrame, wave: int) -> None:
-        import numpy as np
-
-        inc = seenmod.build_bloom(df, "url", self.bloom_expected, BLOOM_FPP)
-        acc = np.frombuffer(self._bloom_bits, dtype=np.uint8) | np.frombuffer(
-            inc, dtype=np.uint8
-        )
-        self._bloom_bits = acc.tobytes()
-        self._bloom_publish()
-        # persist under the wave this bloom will SERVE (wave+1), so resume's
-        # _init_bloom(manifest["wave"]) finds it instead of rebuilding
-        with open(self._bloom_path(wave + 1), "wb") as f:
-            f.write(self._bloom_bits)
-
-    # ------------------------------------------------------- cuckoo filter
-    def _cuckoo_path(self, wave: int) -> str:
-        return os.path.join(self.store.root, f"cuckoo_{wave}.npz")
-
-    def _cuckoo_publish(self) -> None:
-        old = self._cuckoo_bc
-        self._cuckoo_bc = self.spark.sparkContext.broadcast(self._cuckoo)
-        if old is not None:
-            old.unpersist()
-
-    def _init_cuckoo(self, wave: int) -> None:
-        p = self._cuckoo_path(wave)
-        if os.path.exists(p):
-            self._cuckoo = ckmod.load_cuckoo(p)
-        else:  # rebuild from committed state (resume after filter-file loss)
-            self._cuckoo = ckmod.build_cuckoo(
-                self._seen_df(wave - 1), "url", self.bloom_expected, CUCKOO_SHARDS
-            )
-        self._cuckoo_publish()
-
-    def _cuckoo_add(self, df: DataFrame, wave: int) -> None:
-        self._cuckoo = ckmod.insert_distributed(self._cuckoo, df.select("url"), "url")
-        self._cuckoo_publish()
-        # like the bloom: persist under the wave this filter will SERVE
-        ckmod.save_cuckoo(self._cuckoo, self._cuckoo_path(wave + 1))
-
-    def _commit(self, manifest: dict) -> None:
-        """Commit the manifest, then delete the filter snapshots it
-        superseded (``bloom_{w}.bin`` / ``cuckoo_{w}.npz`` for waves
-        below the committed one). Kept, they pile up one per wave —
-        ~1.2 MB each at the default ``bloom_expected``, ~12 GB each at
-        10^10 keys. Resume reads only the committed wave's file, and a
-        rollback or a lost file rebuilds it from :meth:`_seen_df`."""
-        self.store.commit(manifest)
-        for name in os.listdir(self.store.root):
-            m = _FILTER_SNAPSHOT.fullmatch(name)
-            if m and int(m.group(1) or m.group(2)) < manifest["wave"]:
-                os.remove(os.path.join(self.store.root, name))
-
-    # --------------------------------------------- seen-filter dispatch
-    def _init_seen_filter(self, wave: int) -> None:
-        if self.seen_filter == "bloom":
-            self._init_bloom(wave)
-        elif self.seen_filter == "cuckoo":
-            self._init_cuckoo(wave)
+        if save and self.seen_filter == "cuckoo":
+            ckmod.save_cuckoo(filt, self._filter_path(wave))
+        elif save:
+            with open(self._filter_path(wave), "wb") as f:
+                f.write(filt)
 
     def _seen_filter_add(self, df: DataFrame, wave: int) -> None:
-        if self.seen_filter == "bloom":
-            self._bloom_add(df, wave)
-        elif self.seen_filter == "cuckoo":
-            self._cuckoo_add(df, wave)
+        """Add wave ``wave``'s discovered URLs (disjoint from the filter:
+        they survived the exact anti-join); the filter then serves, and
+        is persisted for, wave ``wave + 1``."""
+        if self.seen_filter == "cuckoo":
+            filt = ckmod.insert_distributed(self._filter, df.select("url"), "url")
+        else:
+            filt = seenmod.build_bloom(
+                df, "url", self.bloom_expected, BLOOM_FPP, base=self._filter
+            )
+        self._set_filter(filt, wave + 1, save=True)
 
     def _probe_tagger(self):
-        """df → df + ``_maybe_seen`` for the active filter, or ``None``
-        when no filter structure exists (seen_filter="none")."""
-        if self.seen_filter == "bloom":
-            bc, k = self._bloom_bc, self._bloom_k
-            return lambda df: seenmod.maybe_seen_expr(df, "url", bc, k)
+        """df → df + ``_maybe_seen`` from the filter's broadcast."""
+        bc = self._filter_bc
         if self.seen_filter == "cuckoo":
-            bc = self._cuckoo_bc
             return lambda df: ckmod.maybe_seen_expr_cuckoo(df, "url", bc)
-        return None
+        _, k = seenmod.bloom_params(self.bloom_expected, BLOOM_FPP)
+        return lambda df: seenmod.maybe_seen_expr(df, "url", bc, k)
+
+    def _commit(self, manifest: dict) -> None:
+        """Commit the manifest, then delete every filter snapshot but
+        the committed wave's (``bloom_{w}.bin`` / ``cuckoo_{w}.npz``).
+        Kept, they pile up one per wave — ~1.2 MB each at the default
+        ``bloom_expected``, ~12 GB each at 10^10 keys — and one left
+        over from a rolled-back run could be loaded for a wave whose
+        seen set it does not hold. Resume reads only the committed
+        wave's file; a rollback or a lost file rebuilds it from
+        :meth:`_seen_df`."""
+        self.store.commit(manifest)
+        self._prune_filters(keep=manifest["wave"])
+
+    def _prune_filters(self, keep: int) -> None:
+        for name in os.listdir(self.store.root):
+            m = _FILTER_SNAPSHOT.fullmatch(name)
+            if m and int(m.group(1) or m.group(2)) != keep:
+                os.remove(os.path.join(self.store.root, name))
 
     # ------------------------------------------------------------------- run
     def prepare(self, resume: bool = True) -> dict:
-        """One-time setup: load/bootstrap the manifest and the seen-filter
-        state. Split from :meth:`run_waves` so benchmarks can measure
-        the steady-state crawl loop separately from setup (a production
-        crawl amortizes bootstrap over days of waves)."""
+        """One-time setup: load or bootstrap the manifest. Split from
+        :meth:`run_waves` so benchmarks can measure the steady-state
+        crawl loop separately from setup (a production crawl amortizes
+        bootstrap over days of waves)."""
         manifest = self.store.load_manifest() if resume else None
         if manifest is None:
-            # a stale index would be live but hold another crawl's entries
+            # a stale index or filter snapshot would hold another crawl's
+            # entries
             self._drop_seen_index()
+            self._prune_filters(keep=-1)
             with job_group(self.spark.sparkContext, "bootstrap"):
                 manifest = self._bootstrap()
-        with job_group(self.spark.sparkContext, "bloom_init"):
-            self._init_seen_filter(manifest["wave"])
         return manifest
 
     def run_waves(self, manifest: dict) -> dict:
@@ -566,12 +551,13 @@ class CrawlRunner:
         return manifest
 
     def _drain_side(self) -> None:
-        """Wait for the deferred side jobs (seen-filter update, per-host
-        metrics, duration histogram, index insert), then raise the first
-        error among them.
+        """Wait for the deferred side jobs (per-host metrics, duration
+        histogram, index insert, seen-filter update), then raise the
+        first error among them.
 
-        These jobs have no consumer inside their own wave: the filter
-        update is first read by the NEXT wave's links probe, and metrics
+        These jobs have no consumer inside their own wave: the index
+        insert and the filter update (which runs only past the broadcast
+        budget) are first read by the NEXT wave's links step, and metrics
         and histogram only by the manifest commit. The wave loop
         therefore leaves them running and drains them after the next
         wave's pick — so their job latency hides under the next pick's
@@ -626,8 +612,10 @@ class CrawlRunner:
         "cuckoo"``; a bloom cannot delete without a full rebuild, so
         bloom mode raises).
 
-        Effects: the fingerprints leave the cuckoo filter (O(1) slot
-        clears, persisted for resume) and a tombstone (url, evict_wave)
+        Effects: the fingerprints leave the cuckoo filter serving the
+        committed wave (O(1) slot clears, persisted for resume; within
+        the broadcast budget the crawl holds no filter, so this builds
+        it from the seen set first) and a tombstone (url, evict_wave)
         masks the exact seen entries written before now. From this
         point the URLs are re-discoverable: the next fetched page that
         links to one re-discovers it through the normal links path (the
@@ -646,12 +634,10 @@ class CrawlRunner:
                 "negatives); rebuild the bloom from the masked seen set instead"
             )
         manifest = self.store.load_manifest()
-        if self._cuckoo is None:
-            self._init_cuckoo(manifest["wave"])
+        self._serve_filter(manifest["wave"])
         h1, h2 = ckmod.hashes_for_urls(self.spark, urls)
-        removed = self._cuckoo.delete(h1, h2)
-        ckmod.save_cuckoo(self._cuckoo, self._cuckoo_path(manifest["wave"]))
-        self._cuckoo_publish()
+        removed = self._filter.delete(h1, h2)
+        self._set_filter(self._filter, manifest["wave"], save=True)
         ev = self.spark.createDataFrame(
             [(u, manifest["wave"]) for u in urls], "url string, evict_wave int"
         )
@@ -665,13 +651,15 @@ class CrawlRunner:
 
     def requeue(self, urls: list[str]) -> dict:
         """Re-inject URLs into the frontier for re-fetch and mark them
-        seen again (a ``requeued/w{N}`` entry resurrects them over any
-        tombstone), so the re-crawl wave's links path does not
-        double-discover them. Works in any filter mode — after a
-        ``ttl_evict`` the cuckoo gets the fingerprints re-inserted
-        (driver-side; requeue batches are bounded), a bloom still
-        carries them (it never forgets — harmless, they are seen again
-        anyway). Returns the updated committed manifest."""
+        seen again: a ``requeued/w{N}`` entry, N the committed wave that
+        re-fetches them, resurrects them over any tombstone and is part
+        of wave N's own seen side (:meth:`_seen_df`), so the re-crawl
+        wave's links path does not re-discover them. Works in any filter
+        mode: a filter snapshot serving wave N gets the batch inserted
+        driver-side (requeue batches are bounded; after a ``ttl_evict``
+        the cuckoo gets the fingerprints back); without one, the filter
+        is built later from a seen side that already holds the batch.
+        Returns the updated committed manifest."""
         manifest = self.store.load_manifest()
         wave = manifest["wave"]
         rq = (
@@ -693,15 +681,17 @@ class CrawlRunner:
             # wipe them (replay only overwrites (d, wave)); duplicate
             # rows are harmless to seen-set semantics
             self._seen_idx_insert(rq.select("url"), "r", wave, overwrite=False)
-        if self.seen_filter == "cuckoo":
-            if self._cuckoo is None:
-                self._init_cuckoo(wave)
+        if os.path.exists(self._filter_path(wave)):  # never for "none"
+            self._serve_filter(wave)
             h1, h2 = ckmod.hashes_for_urls(self.spark, urls)
-            absent = ~self._cuckoo.contains(h1, h2)  # single-copy invariant
-            if absent.any():
-                self._cuckoo.insert_hashed(h1[absent], h2[absent])
-            ckmod.save_cuckoo(self._cuckoo, self._cuckoo_path(wave))
-            self._cuckoo_publish()
+            if self.seen_filter == "cuckoo":
+                absent = ~self._filter.contains(h1, h2)  # single-copy invariant
+                self._filter.insert_hashed(h1[absent], h2[absent])
+                filt = self._filter
+            else:
+                _, k = seenmod.bloom_params(self.bloom_expected, BLOOM_FPP)
+                filt = seenmod.bloom_insert(self._filter, h1, h2, k)
+            self._set_filter(filt, wave, save=True)
         # frontier = current ∪ requeued; written to a fresh snapshot path
         # (never overwrite the snapshot the plan is reading)
         old = self.spark.read.parquet(manifest["frontier_path"])
@@ -897,10 +887,11 @@ class CrawlRunner:
 
     def _links(self, fetched: DataFrame, manifest: dict) -> tuple[DataFrame, bool]:
         """Discovered links: first-fetcher attribution, exact anti-join
-        against the seen set (behind the filter probe past the broadcast
-        budget), robots split; written as ``discovered/w{wave}``. Returns
-        the re-read partition and whether the seen index is live. Adds
-        the discovered count (rides the write) to ``seen_rows``."""
+        against the wave's seen side (behind the filter probe past the
+        broadcast budget), robots split; written as
+        ``discovered/w{wave}``. Returns the re-read partition and whether
+        the seen index is live. Adds the discovered count (rides the
+        write) to ``seen_rows``."""
         wave = manifest["wave"]
         sc = self.spark.sparkContext
         with job_group(sc, "links_seen"):
@@ -918,16 +909,20 @@ class CrawlRunner:
                 manifest.get("seen_rows"), manifest.get("avg_url_bytes", 80.0)
             )
             index_live = self._ensure_seen_index()
-            if not bcast_seen and not index_live:
-                # first wave past the budget: build the index once (the
-                # wave comes from the in-memory manifest — the previous
-                # wave's commit may still be deferred)
-                with job_group(sc, "seen_idx"):
-                    self._backfill_seen_index(wave)
-                index_live = True
+            tagger = None
+            if not bcast_seen:
+                if not index_live:
+                    # first wave past the budget: build the index once (the
+                    # wave comes from the in-memory manifest — the previous
+                    # wave's commit may still be deferred)
+                    with job_group(sc, "seen_idx"):
+                        self._backfill_seen_index(wave)
+                    index_live = True
+                if self.seen_filter != "none":
+                    self._serve_filter(wave)
+                    tagger = self._probe_tagger()
             new_links = seenmod.filter_unseen(
-                links, self._seen_df(wave - 1), "url", self._probe_tagger(),
-                broadcast_seen=bcast_seen,
+                links, self._seen_df(wave), "url", tagger, broadcast_seen=bcast_seen
             )
             discovered = self._with_robots(
                 new_links.select(
@@ -961,20 +956,24 @@ class CrawlRunner:
         index_live: bool,
     ) -> tuple[str, int, int, dict[str, int]]:
         """Start the jobs that depend only on the written discovered
-        partition and visit log, not on each other: seen-filter update,
-        per-host metrics, next frontier and (once live) the index insert.
-        Only the frontier is waited on here — the next pick reads it;
-        the others join the deferred side jobs. Returns the next
-        frontier's (path, rows, hosts) and the wave's counters, which
-        the metrics job fills in before it completes."""
+        partition and visit log, not on each other: per-host metrics,
+        next frontier, the index insert (once live) and the seen-filter
+        update (when the filter served this wave). Only the frontier is
+        waited on here — the next pick reads it; the others join the
+        deferred side jobs. Returns the next frontier's (path, rows,
+        hosts) and the wave's counters, which the metrics job fills in
+        before it completes."""
         counters: dict[str, int] = {}
         side = [
-            self._spawn("bloom_update", lambda: self._seen_filter_add(discovered, wave)),
             self._spawn(
                 "metrics",
                 lambda: counters.update(self._write_metrics(picked, discovered, wave)),
             ),
         ]
+        if self._filter_wave == wave:
+            side.append(self._spawn(
+                "bloom_update", lambda: self._seen_filter_add(discovered, wave)
+            ))
         nxt = self._spawn(
             "frontier_write", lambda: self._write_frontier(frontier, picked, discovered, wave)
         )
@@ -1080,5 +1079,8 @@ class CrawlRunner:
         )
 
     def seen_final_df(self) -> DataFrame:
+        """The seen set as of the committed wave W: seeds, ``discovered``
+        and ``requeued`` up to W, − live evictions (:meth:`_seen_df` of
+        W + 1)."""
         m = self.store.load_manifest()
-        return self._seen_df(m["wave"])
+        return self._seen_df(m["wave"] + 1)

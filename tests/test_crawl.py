@@ -72,16 +72,19 @@ def test_resume_from_checkpoint(spark, world, ref, tmp_path):
 
 
 def test_resume_after_bloom_loss(spark, world, ref, tmp_path):
-    """Bloom sidecar file lost → rebuilt from committed state; identical."""
+    """Bloom sidecar file lost → rebuilt from committed state; identical.
+    The filter exists only past the broadcast budget, hence
+    ``seen_broadcast_mb=0``."""
     import os
 
     store = str(tmp_path / "store_bloomloss")
-    r1 = CrawlRunner(spark, world, store, max_waves=4, bloom_expected=10_000)
+    kw = dict(bloom_expected=10_000, seen_broadcast_mb=0)
+    r1 = CrawlRunner(spark, world, store, max_waves=4, **kw)
     r1.run(resume=False)
     for f in os.listdir(store):
         if f.startswith("bloom_"):
             os.remove(os.path.join(store, f))
-    r2 = CrawlRunner(spark, world, store, max_waves=30, bloom_expected=10_000)
+    r2 = CrawlRunner(spark, world, store, max_waves=30, **kw)
     r2.run(resume=True)
     assert _spark_visits(r2) == [(o, u) for o, u, _, _ in ref.visits]
 
@@ -98,9 +101,10 @@ def _filter_snapshots(store):
 def test_superseded_filter_snapshots_pruned(spark, world, ref, tmp_path, seen_filter):
     """Each commit deletes the seen-filter snapshots of earlier waves;
     a resume and a rollback + re-run rebuild what they need and still
-    reproduce the reference crawl."""
+    reproduce the reference crawl. The filter exists only past the
+    broadcast budget, hence ``seen_broadcast_mb=0``."""
     store = str(tmp_path / f"store_prune_{seen_filter}")
-    kw = dict(bloom_expected=10_000, seen_filter=seen_filter)
+    kw = dict(bloom_expected=10_000, seen_filter=seen_filter, seen_broadcast_mb=0)
     m1 = CrawlRunner(spark, world, store, max_waves=4, **kw).run(resume=False)
     assert m1["wave"] == 4 and m1["frontier_rows"] > 0
     assert _filter_snapshots(store) and min(_filter_snapshots(store)) >= m1["wave"]

@@ -135,14 +135,16 @@ def test_per_host_metrics_counters(spark, world, tmp_path):
 
 def test_bloom_sidecar_served_on_resume(spark, world, tmp_path):
     """Wave N's persisted bloom is written under the wave it serves, so
-    resume loads it instead of rebuilding (round-1 off-by-one)."""
+    resume loads it instead of rebuilding. The filter exists only past
+    the broadcast budget, hence ``seen_broadcast_mb=0``."""
     store = str(tmp_path / "store_bloomresume")
-    r1 = CrawlRunner(spark, world, store, max_waves=3, bloom_expected=10_000)
+    kw = dict(max_waves=3, bloom_expected=10_000, seen_broadcast_mb=0)
+    r1 = CrawlRunner(spark, world, store, **kw)
     m1 = r1.run(resume=False)
     assert os.path.exists(os.path.join(store, f"bloom_{m1['wave']}.bin"))
-    r2 = CrawlRunner(spark, world, store, max_waves=3, bloom_expected=10_000)
-    r2._init_bloom(m1["wave"])
-    assert r2._bloom_bits == r1._bloom_bits  # loaded, byte-identical
+    r2 = CrawlRunner(spark, world, store, **kw)
+    r2._serve_filter(m1["wave"])
+    assert r2._filter == r1._filter  # loaded, byte-identical
 
 
 # ------------------------------------------------------- snapshot time travel
@@ -626,13 +628,14 @@ def test_pipelined_payload_crash_before_deferred_commit_replays(spark, world, tm
 def test_side_job_failure_waits_for_siblings_and_skips_commit(
     spark, world, tmp_path, monkeypatch
 ):
-    """A failing side job (wave 1's seen-filter update) surfaces at the
+    """A failing side job (wave 1's seen-filter update, which runs past
+    the broadcast budget, hence ``seen_broadcast_mb=0``) surfaces at the
     next drain — after wave 2's pick — only once the other side jobs of
     its wave have finished; wave 1 is not committed, no job is left
     running, and a resume equals the reference simulator."""
     store = str(tmp_path / "store_sidefail")
     r1 = CrawlRunner(spark, world, store, max_waves=3, bloom_expected=10_000,
-                     fetch_images=True)
+                     fetch_images=True, seen_broadcast_mb=0)
     real_add, real_metrics = r1._seen_filter_add, r1._write_metrics
     finished = []
 
@@ -658,7 +661,7 @@ def test_side_job_failure_waits_for_siblings_and_skips_commit(
     assert not spark.sparkContext.statusTracker().getActiveJobsIds()
 
     r2 = CrawlRunner(spark, world, store, max_waves=3, bloom_expected=10_000,
-                     fetch_images=True)
+                     fetch_images=True, seen_broadcast_mb=0)
     r2.run(resume=True)
     ref = refsim.simulate(world, max_waves=3)
     got = sorted((r["ordem"], r["url"]) for r in r2.visits_df().select("ordem", "url").collect())

@@ -57,21 +57,24 @@ def test_probe_udf_reads_live_broadcast_value(spark):
 
 def test_runner_publishes_bloom_broadcast(spark, tmp_path):
     """The crawl runner must hold a Broadcast handle (not just bytes) and
-    refresh it on bloom updates, unpersisting the stale generation."""
+    refresh it on bloom updates, unpersisting the stale generation. The
+    filter exists only past the broadcast budget, hence
+    ``seen_broadcast_mb=0``: wave 0 builds it."""
     from crawler_tjce_spark.datagen import WorldConfig, write_world
     from crawler_tjce_spark.streaming.runner import CrawlRunner
 
     world = str(tmp_path / "world")
     write_world(WorldConfig(n_hosts=4, n_pages=60, n_seeds=4), world)
-    runner = CrawlRunner(spark, world, str(tmp_path / "store"), max_waves=2,
-                         bloom_expected=500)
-    manifest = runner.prepare(resume=False)
-    assert isinstance(runner._bloom_bc, Broadcast)
-    gen0 = runner._bloom_bc
+    runner = CrawlRunner(spark, world, str(tmp_path / "store"), max_waves=1,
+                         bloom_expected=500, seen_broadcast_mb=0)
+    manifest = runner.run(resume=False)
+    assert isinstance(runner._filter_bc, Broadcast)
+    gen0 = runner._filter_bc
+    runner.max_waves = 2
     runner.run_waves(manifest)
-    assert isinstance(runner._bloom_bc, Broadcast)
-    assert runner._bloom_bc is not gen0  # updated blooms were re-published
-    assert runner._bloom_bc.value == runner._bloom_bits
+    assert isinstance(runner._filter_bc, Broadcast)
+    assert runner._filter_bc is not gen0  # updated blooms were re-published
+    assert runner._filter_bc.value == runner._filter
 
 
 def test_wave_shuffle_sizing_restored(spark, tmp_path):
@@ -87,21 +90,6 @@ def test_wave_shuffle_sizing_restored(spark, tmp_path):
     runner = CrawlRunner(spark, world, str(tmp_path / "store_sp"), max_waves=1)
     runner.run(resume=False)
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
-
-
-def test_distributed_bloom_merge_parity(spark):
-    """build_bloom(distributed=True) — the treeReduce executor-side
-    OR-merge (VERDICT r5 #8) — must produce a byte-identical array to
-    the driver merge (OR is associative+commutative), including on
-    empty input (all-zero array)."""
-    seen_urls, _ = _dfs(spark)
-    driver = seenmod.build_bloom(seen_urls, "url", expected_n=400)
-    tree = seenmod.build_bloom(seen_urls, "url", expected_n=400, distributed=True)
-    assert driver == tree
-    empty = seen_urls.filter("url = 'nope'")
-    assert seenmod.build_bloom(empty, "url", 400) == seenmod.build_bloom(
-        empty, "url", 400, distributed=True
-    )
 
 
 def _plan(df) -> str:

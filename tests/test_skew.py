@@ -10,7 +10,10 @@ from pyspark.sql import functions as F
 
 from crawler_tjce_spark import refsim
 from crawler_tjce_spark.datagen import WorldConfig, write_world
-from crawler_tjce_spark.plans.frontier import politeness_pick
+from crawler_tjce_spark.plans.frontier import (
+    RANGE_OFFSETS_MIN_HOSTS,
+    politeness_pick_ordem,
+)
 from crawler_tjce_spark.streaming.runner import CrawlRunner
 
 
@@ -29,10 +32,10 @@ def test_salted_pick_equals_unsalted(spark):
         for i in range(3000)
     ]
     fr = spark.createDataFrame(rows, "url string, host string, score int, host_budget int")
-    salted = politeness_pick(fr, salt_buckets=16)
-    unsalted = politeness_pick(fr, salt_buckets=1)
-    a = sorted(r["url"] for r in salted.collect())
-    b = sorted(r["url"] for r in unsalted.collect())
+    salted = politeness_pick_ordem(fr, 0, salt_buckets=16)
+    unsalted = politeness_pick_ordem(fr, 0, salt_buckets=1)
+    a = sorted((r["url"], r["ordem"]) for r in salted.collect())
+    b = sorted((r["url"], r["ordem"]) for r in unsalted.collect())
     assert a == b and len(a) > 0
 
 
@@ -61,8 +64,6 @@ def test_range_partitioned_offsets_equal_single_window(spark):
     the range-partitioned prefix sum is the drop-in 10^6+-hosts form of
     the single-task counts window (many hosts, uneven sizes, budgets
     both binding and slack)."""
-    from crawler_tjce_spark.plans.frontier import politeness_pick_ordem
-
     rows = [
         (
             f"https://h{i % 211}.example/p/{i}",
@@ -74,7 +75,7 @@ def test_range_partitioned_offsets_equal_single_window(spark):
     ]
     fr = spark.createDataFrame(rows, "url string, host string, score int, host_budget int")
     single = politeness_pick_ordem(fr, ordem_offset=100)
-    ranged = politeness_pick_ordem(fr, ordem_offset=100, range_partition_offsets=True)
+    ranged = politeness_pick_ordem(fr, ordem_offset=100, n_hosts=RANGE_OFFSETS_MIN_HOSTS)
     a = sorted((r["ordem"], r["url"]) for r in single.collect())
     b = sorted((r["ordem"], r["url"]) for r in ranged.collect())
     assert a == b and len(a) > 0

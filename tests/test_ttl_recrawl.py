@@ -16,7 +16,10 @@ from pyspark.sql import functions as F
 
 from crawler_tjce_spark import refsim
 from crawler_tjce_spark.datagen import WorldConfig, write_world
-from crawler_tjce_spark.plans.frontier import politeness_pick_ordem
+from crawler_tjce_spark.plans.frontier import (
+    RANGE_OFFSETS_MIN_HOSTS,
+    politeness_pick_ordem,
+)
 from crawler_tjce_spark.streaming.runner import CrawlRunner
 
 
@@ -81,6 +84,21 @@ def test_cuckoo_runner_probes_past_broadcast_budget(
     assert {r["url"] for r in runner.seen_final_df().collect()} == ref.seen
 
 
+def _seed_and_link(spark, world, visited):
+    """A seed page and one of its crawled, non-seed out-links."""
+    pages = spark.read.parquet(f"{world}/pages.parquet")
+    seeds = {r["url"] for r in spark.read.parquet(f"{world}/seeds.parquet").collect()}
+    cand = (
+        pages.filter(F.col("url").isin(list(seeds)))
+        .select("url", F.explode("out_links").alias("link"))
+        .filter(F.col("link").isin(list(visited)) & ~F.col("link").isin(list(seeds)))
+        .limit(1)
+        .collect()
+    )
+    assert cand, "world must have a seed linking to a crawled page"
+    return cand[0]["url"], cand[0]["link"]
+
+
 def test_ttl_evict_requeue_recrawls_exactly_the_stale_set(spark, world, tmp_path):
     """End-to-end deletion story: crawl to completion, TTL-evict a URL,
     requeue the seed page that links to it, re-run. The re-crawl
@@ -100,19 +118,7 @@ def test_ttl_evict_requeue_recrawls_exactly_the_stale_set(spark, world, tmp_path
     assert len(first) == len(visited)  # no re-visits in a plain crawl
     seen_before = {r["url"] for r in runner.seen_final_df().collect()}
 
-    # a seed page and one of its crawled out-links to evict
-    pages = spark.read.parquet(f"{world}/pages.parquet")
-    seeds = {r["url"] for r in spark.read.parquet(f"{world}/seeds.parquet").collect()}
-    cand = (
-        pages.filter(F.col("url").isin(list(seeds)))
-        .select("url", F.explode("out_links").alias("link"))
-        .filter(F.col("link").isin(list(visited)) & ~F.col("link").isin(list(seeds)))
-        .limit(1)
-        .collect()
-    )
-    assert cand, "world must have a seed linking to a crawled page"
-    seed_url, stale_url = cand[0]["url"], cand[0]["link"]
-
+    seed_url, stale_url = _seed_and_link(spark, world, visited)
     assert runner.ttl_evict([stale_url]) == 1
     runner.requeue([seed_url])
 
@@ -131,6 +137,36 @@ def test_ttl_evict_requeue_recrawls_exactly_the_stale_set(spark, world, tmp_path
     assert m2["ordem_offset"] == len(first) + 2
     # seen set is restored (evicted URL re-discovered and re-recorded;
     # seen ⊋ visited — it also holds discovered robots-disallowed URLs)
+    assert {r["url"] for r in r2.seen_final_df().collect()} == seen_before
+
+
+@pytest.mark.parametrize("seen_broadcast_mb", [64, 0])
+def test_requeued_url_not_rediscovered_in_its_requeue_wave(
+    spark, world, tmp_path, seen_broadcast_mb
+):
+    """Evict a URL X, then requeue both X and a seed P that links to X.
+    The re-crawl wave fetches both, and its links step finds X in its
+    own seen side (that wave's requeue batch, in the path store or the
+    index and in the filter): X is fetched exactly twice, not
+    re-discovered and fetched a third time, and the seen set ends as it
+    was. Within the budget and past it (index + cuckoo probe)."""
+    store = str(tmp_path / "store_rq")
+    kw = dict(seen_filter="cuckoo", bloom_expected=10_000,
+              seen_broadcast_mb=seen_broadcast_mb)
+    runner = CrawlRunner(spark, world, store, max_waves=30, **kw)
+    runner.run(resume=False)
+    visited = {u for _, u in _visits(runner)}
+    seen_before = {r["url"] for r in runner.seen_final_df().collect()}
+    seed_url, stale_url = _seed_and_link(spark, world, visited)
+
+    assert runner.ttl_evict([stale_url]) == 1
+    runner.requeue([seed_url, stale_url])
+    r2 = CrawlRunner(spark, world, store, max_waves=60, **kw)
+    assert r2.run(resume=True)["frontier_rows"] == 0
+
+    counts = collections.Counter(u for _, u in _visits(r2))
+    assert counts[seed_url] == 2 and counts[stale_url] == 2
+    assert {u for u, n in counts.items() if n > 1} == {seed_url, stale_url}
     assert {r["url"] for r in r2.seen_final_df().collect()} == seen_before
 
 
@@ -157,7 +193,7 @@ def test_offsets_form_autoselects_on_host_count(spark):
 
     base = politeness_pick_ordem(df, 0)  # auto, small host count → window form
     auto_big = politeness_pick_ordem(df, 0, n_hosts=2_000_000)
-    forced = politeness_pick_ordem(df, 0, range_partition_offsets=True)
+    forced = politeness_pick_ordem(df, 0, n_hosts=RANGE_OFFSETS_MIN_HOSTS)
 
     def rows_of(d):
         return sorted((r["url"], r["ordem"]) for r in d.select("url", "ordem").collect())
