@@ -3,7 +3,7 @@
 All candidate generation is JVM-side (hash/array expressions + shuffles
 on band keys); no per-row Python anywhere except the blocked-GEMM
 embedding join, whose per-task work is one numpy matrix multiply over
-an Arrow batch. Exact verification (``_shared_count_verify``) joins the
+an Arrow batch. Exact verification (``_verify_jaccard_arrays``) joins the
 per-doc distinct-shingle hash arrays onto the (already filtered)
 candidate pairs and takes ``array_intersect`` sizes — linear per pair,
 and only over pairs that survived banding/prefix filtering (the
@@ -117,15 +117,6 @@ def doc_shingle_arrays(df: DataFrame, text_col: str, id_col: str, shingle_k: int
     return base.select(F.col(id_col), F.array_distinct(sh).alias("_hs"))
 
 
-def shingle_hashes(df: DataFrame, text_col: str, id_col: str, shingle_k: int = 3) -> DataFrame:
-    """Exploded DISTINCT shingles per document, pre-hashed to 8 bytes —
-    the row-stream view of :func:`doc_shingle_arrays` (kept for callers
-    that genuinely want global per-shingle aggregation)."""
-    return doc_shingle_arrays(df, text_col, id_col, shingle_k).select(
-        F.col(id_col), F.explode("_hs").alias("_h")
-    )
-
-
 def minhash_signature(
     df: DataFrame, text_col: str, id_col: str, num_hashes: int = 32, shingle_k: int = 3
 ) -> DataFrame:
@@ -163,13 +154,6 @@ def _minhash_from_arrays(docs: DataFrame, id_col: str, num_hashes: int) -> DataF
         for i in range(num_hashes)
     ]
     return docs.select(F.col(id_col), *mins)
-
-
-def _minhash_from_hashes(sh: DataFrame, id_col: str, num_hashes: int) -> DataFrame:
-    aggs = [
-        F.min(F.xxhash64(F.col("_h"), F.lit(i))).alias(f"mh{i}") for i in range(num_hashes)
-    ]
-    return sh.groupBy(id_col).agg(*aggs)
 
 
 def lsh_candidate_pairs(
@@ -230,59 +214,15 @@ def lsh_candidate_pairs(
 def _verify_jaccard_arrays(cand: DataFrame, docs: DataFrame, id_col: str) -> DataFrame:
     """Exact Jaccard for candidate pairs from the per-doc array form.
 
-    Same math as :func:`_shared_count_verify` (J = |A∩B| / (|A|+|B|−|A∩B|)
-    via ``array_intersect``), but the array sides come straight from
-    :func:`doc_shingle_arrays` — the r5 path re-aggregated the exploded
-    substrate (``repartition + groupBy(id).collect_list``, one full
-    substrate shuffle) to rebuild exactly these arrays (guide §2.4)."""
+    J = |A∩B| / (|A|+|B|−|A∩B|) via ``array_intersect``, with the array
+    sides straight from :func:`doc_shingle_arrays`: no shuffle rebuilds
+    the per-doc shingle sets. Per-pair cost is a linear hash intersect of
+    two doc-sized arrays, bounded because the caller's banding/prefix
+    filter already shrank the pair set."""
     a = docs.select(
         F.col(id_col).alias("_ida"), F.col("_hs").alias("_ha"), F.size("_hs").alias("_na")
     )
     b = docs.select(
-        F.col(id_col).alias("_idb"), F.col("_hs").alias("_hb"), F.size("_hs").alias("_nb")
-    )
-    return (
-        cand.join(a, F.col("id_a") == F.col("_ida"))
-        .join(b, F.col("id_b") == F.col("_idb"))
-        .withColumn("_shared", F.size(F.array_intersect("_ha", "_hb")))
-        .withColumn(
-            "jaccard",
-            F.col("_shared").cast("double") / (F.col("_na") + F.col("_nb") - F.col("_shared")),
-        )
-        .select("id_a", "id_b", "jaccard")
-    )
-
-
-def _shared_count_verify(
-    cand: DataFrame, sh: DataFrame, id_col: str
-) -> DataFrame:
-    """Exact Jaccard for candidate pairs via per-pair set intersection.
-
-    Each doc's distinct-shingle hash array (collected once from the
-    cached substrate) is joined onto the candidate pair and
-    ``array_intersect`` gives |A∩B|, so J = shared / (|A|+|B|−shared).
-    Per-pair cost is a linear hash intersect of two doc-sized arrays —
-    bounded because the caller's banding/prefix filter already shrank
-    the pair set; the r2 shape (pair→shingle-row fan-out joins) moved
-    Σ|A| rows per pair through two shuffles and AQE sized its
-    partitions on the pre-fan-out bytes (measured 111 core-s in 3-32
-    tasks at sf0.1 — the q33 budget). The array join sides are doc-count
-    rows (not substrate rows); AQE broadcasts them when small, and at
-    larger scale they hash-join on the id — same plan, no broadcast.
-    """
-    # explicit-count hash repartition: AQE sizes the collect_list
-    # exchange on its ~MB input and coalesces to a handful of tasks,
-    # but the agg builds every doc's array (measured 6+ core-s in 4
-    # tasks) — a user-specified partition count satisfies the groupBy's
-    # distribution and is never coalesced
-    n_parts = sh.sparkSession.sparkContext.defaultParallelism
-    arrs = sh.repartition(n_parts, id_col).groupBy(id_col).agg(
-        F.collect_list("_h").alias("_hs")
-    )
-    a = arrs.select(
-        F.col(id_col).alias("_ida"), F.col("_hs").alias("_ha"), F.size("_hs").alias("_na")
-    )
-    b = arrs.select(
         F.col(id_col).alias("_idb"), F.col("_hs").alias("_hb"), F.size("_hs").alias("_nb")
     )
     return (

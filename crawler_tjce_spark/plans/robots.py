@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from crawler_tjce_spark.colmemo import column_memo
+
 
 def _path_expr(url_col: str):
     path = F.regexp_extract(F.col(url_col), r"^[a-z][a-z0-9+.-]*://[^/?#]*(/.*)?$", 1)
@@ -38,51 +40,22 @@ def with_robots(df: DataFrame, robots: DataFrame, url_col: str = "url") -> DataF
     )
 
 
-# Memo for the literal-map Column pair, keyed by (application id, rules).
-# Building a 256-host ``create_map`` is ~1500 sequential py4j calls —
-# MEASURED 0.5-1.2 s of pure driver time per call, and the wave loop
-# calls it twice per wave (pick + links): at 4 small waves that was
-# ~2-5 s of the per-wave scheduling floor, the largest single
-# contributor to the multi-wave regime's driver-latency residual
-# (probe: 2.2-2.9 s of zero-jobs-running gap between waves). Column
-# objects are immutable expression trees, safe to reuse across queries;
-# the application id in the key drops columns from a stopped JVM (the
-# test suite recycles JVMs mid-process).
-_LITERAL_MAP_MEMO: dict[tuple, tuple] = {}
-# lock + bounded eviction (ADVICE r5): side-job threads resolve the maps
-# concurrently with the wave loop, and the old clear-on-every-miss would
-# thrash if two rule sets ever alternated within one process.
-_LITERAL_MAP_LOCK = __import__("threading").Lock()
-_LITERAL_MAP_MAX = 8
-
-
 def _literal_maps(df: DataFrame, rules_key: tuple):
-    app_id = df.sparkSession.sparkContext.applicationId
-    key = (app_id, rules_key)
-    with _LITERAL_MAP_LOCK:
-        hit = _LITERAL_MAP_MEMO.get(key)
-    if hit is not None:
-        return hit
-    budget_map = F.create_map(
-        *[x for h, _, b in rules_key for x in (F.lit(h), F.lit(int(b)))]
-    )
-    prefix_map = F.create_map(
-        *[
-            x
-            for h, p, _ in rules_key
-            if p is not None
-            for x in (F.lit(h), F.lit(p))
-        ]
-    )
-    hit = (budget_map, prefix_map)
-    with _LITERAL_MAP_LOCK:
-        if len(_LITERAL_MAP_MEMO) >= _LITERAL_MAP_MAX:
-            stale = [mk for mk in _LITERAL_MAP_MEMO if mk[0] != app_id]
-            for mk in stale:
-                del _LITERAL_MAP_MEMO[mk]
-            if len(_LITERAL_MAP_MEMO) >= _LITERAL_MAP_MAX:
-                _LITERAL_MAP_MEMO.clear()
-        return _LITERAL_MAP_MEMO.setdefault(key, hit)
+    """The (budget, prefix) ``create_map`` Column pair for ``rules_key``,
+    memoized per application: building a 256-host map is ~1500
+    sequential py4j calls (0.5-1.2 s of driver time measured), and the
+    wave loop needs it twice per wave (pick and links)."""
+
+    def build():
+        budget_map = F.create_map(
+            *[x for h, _, b in rules_key for x in (F.lit(h), F.lit(int(b)))]
+        )
+        prefix_map = F.create_map(
+            *[x for h, p, _ in rules_key if p is not None for x in (F.lit(h), F.lit(p))]
+        )
+        return budget_map, prefix_map
+
+    return column_memo(df.sparkSession, ("robots_literal", rules_key), build)
 
 
 def with_robots_literal(

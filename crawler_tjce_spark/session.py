@@ -129,6 +129,15 @@ def get_spark(
             builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    # The frontier pick's cross-host offsets window has no partition key
+    # by design (one row per host, one task), and WindowExec warns about
+    # that on every plan: several lines per crawl wave that bury real
+    # warnings.
+    jvm = spark.sparkContext._jvm
+    jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
+        "org.apache.spark.sql.execution.window.WindowExec",
+        jvm.org.apache.logging.log4j.Level.ERROR,
+    )
     return spark
 
 

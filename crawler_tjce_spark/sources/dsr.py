@@ -18,9 +18,11 @@ format (observed in ``examples/response.json``; decode semantics at
   and decodes to nothing (ref ``crawler/crawler.py:746-754``).
 
 Spark integration: pages are independent, inheritance is sequential
-only *within* a page → ``decode_pages_df`` runs the page decoder as an
-``applyInPandas`` grouped by page id (parallelism unit = page, exactly
-the reference's materialize-then-decode shape in ``script.py:255-453``).
+only *within* a page, and each input row holds one whole page →
+``decode_pages_df`` and ``decode_pages_quarantine_df`` run the page
+decoder over the pages table in one ``mapInPandas`` pass, with no
+shuffle (parallelism unit = page, exactly the reference's
+materialize-then-decode shape in ``script.py:255-453``).
 
 This is a clean-room reimplementation from the observed format — the
 decoding loop, data structures and typing pipeline are original; only
@@ -256,8 +258,8 @@ def decode_page(
     before typing/validation, so wire strings carrying literal
     ``\\u00XX`` escape sequences land as the intended characters in the
     output — the captured fixtures carry no such escapes (goldens are
-    unchanged), but a page that does now decodes identically to the
-    reference (r3 VERDICT missing #3).
+    unchanged), but a page that does decodes identically to the
+    reference.
     """
     from crawler_tjce_spark.functions.slug import decode_unicode_escape_py
     data = payload["results"][0]["result"]["data"]
@@ -397,40 +399,55 @@ def encode_dm0(raw_rows: list[list[Any]], schema: list[dict]) -> list[dict]:
     return out
 
 
-def decode_pages_df(
-    spark: SparkSession, pages: DataFrame, table: str = "precatorio",
-    decode_escapes: bool = True,
-) -> DataFrame:
-    """Distributed decode: ``pages(page_id long, payload string)`` →
-    typed rows for one of the three source tables. ``applyInPandas``
-    per page — inheritance is sequential within a page, pages decode in
-    parallel. ``decode_escapes`` (default True = reference behavior)
-    applies the reference's ``_decode_utf8`` to every decoded string
-    value (see :func:`decode_page`)."""
+def _decode_pages(pages: DataFrame, table: str, quarantine: bool) -> DataFrame:
+    """``pages.mapInPandas`` running :func:`decode_page` on each page row:
+    every row holds one whole page and inheritance never crosses a page,
+    so the decode is one map pass with no shuffle. With ``quarantine`` a
+    ``reject_reason`` column is added (see
+    :func:`decode_pages_quarantine_df`)."""
     import pandas as pd
 
-    fields, positional, schema, skip_first = TABLES[table]
+    fields, positional, schema, pagamentos = TABLES[table]
     cols = ["page_id", "row_idx"] + (
         [f for f, _, _ in fields] if fields else [f for f, _ in positional]
     )
+    if quarantine:
+        schema += ", reject_reason string"
+        cols.append("reject_reason")
 
-    def _decode(pdf: pd.DataFrame) -> pd.DataFrame:
-        all_rows = []
-        for pid, payload in zip(pdf["page_id"], pdf["payload"]):
-            for row in decode_page(
-                json.loads(payload), fields or PRECATORIO_FIELDS, positional,
-                pagamentos_semantics=skip_first, decode_escapes=decode_escapes,
-            ):
-                row["page_id"] = int(pid)
-                all_rows.append(row)
-        return pd.DataFrame(all_rows, columns=cols)
+    # every record carries every column: a column that no record of a
+    # batch holds would come out as float NaN, which Arrow cannot cast to
+    # a timestamp or decimal
+    blank = dict.fromkeys(cols)
 
-    return pages.groupBy("page_id").applyInPandas(_decode, schema=schema)
+    def _decode(batches):
+        for pdf in batches:
+            out = []
+            for pid, payload in zip(pdf["page_id"], pdf["payload"]):
+                decoded = decode_page(
+                    json.loads(payload), fields or PRECATORIO_FIELDS, positional,
+                    collect_rejects=quarantine, pagamentos_semantics=pagamentos,
+                )
+                rows, rejects = decoded if quarantine else (decoded, [])
+                out += [blank | row | {"page_id": int(pid)} for row in rows]
+                out += [blank | {"page_id": int(pid), "row_idx": r["row_idx"],
+                                 "reject_reason": r["reason"]} for r in rejects]
+            yield pd.DataFrame(out, columns=cols)
+
+    return pages.mapInPandas(_decode, schema=schema)
+
+
+def decode_pages_df(
+    spark: SparkSession, pages: DataFrame, table: str = "precatorio"
+) -> DataFrame:
+    """Distributed decode: ``pages(page_id long, payload string)`` →
+    typed rows for one of the three source tables, pages decoded in
+    parallel in one map pass."""
+    return _decode_pages(pages, table, quarantine=False)
 
 
 def decode_pages_quarantine_df(
-    spark: SparkSession, pages: DataFrame, table: str = "precatorio",
-    decode_escapes: bool = True,
+    spark: SparkSession, pages: DataFrame, table: str = "precatorio"
 ) -> DataFrame:
     """Distributed decode WITH the invalid-row quarantine (SURVEY §2.2 P6;
     ref ``crawler/crawler.py:1074-1081``): one extra ``reject_reason``
@@ -444,39 +461,7 @@ def decode_pages_quarantine_df(
     One decode pass serves both streams; at 100 TB the quarantine side is
     written to its own table partition for audit/replay.
     """
-    import pandas as pd
-
-    fields, positional, schema, skip_first = TABLES[table]
-    cols = ["page_id", "row_idx"] + (
-        [f for f, _, _ in fields] if fields else [f for f, _ in positional]
-    )
-    out_schema = schema + ", reject_reason string"
-    out_cols = cols + ["reject_reason"]
-
-    def _decode(pdf: pd.DataFrame) -> pd.DataFrame:
-        all_rows = []
-        for pid, payload in zip(pdf["page_id"], pdf["payload"]):
-            rows, rejects = decode_page(
-                json.loads(payload), fields or PRECATORIO_FIELDS, positional,
-                collect_rejects=True, pagamentos_semantics=skip_first,
-                decode_escapes=decode_escapes,
-            )
-            for row in rows:
-                row["page_id"] = int(pid)
-                row["reject_reason"] = None
-                all_rows.append(row)
-            for rej in rejects:
-                all_rows.append(
-                    {"page_id": int(pid), "row_idx": rej["row_idx"],
-                     "reject_reason": rej["reason"]}
-                )
-        # object dtype: quarantined rows have missing data columns and a
-        # float-NaN there would fail Arrow's safe cast to long — keep
-        # explicit Nones instead
-        df = pd.DataFrame(all_rows, columns=out_cols, dtype=object)
-        return df.where(pd.notnull(df), None)
-
-    return pages.groupBy("page_id").applyInPandas(_decode, schema=out_schema)
+    return _decode_pages(pages, table, quarantine=True)
 
 
 # ---------------------------------------------------------------------------

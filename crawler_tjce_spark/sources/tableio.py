@@ -20,7 +20,8 @@ time-travel to the last committed state — as:
   rollback-then-recommit semantics).
 
 A real Iceberg catalog drops in by replacing this class; the runner
-only uses ``read``/``write_wave``/``commit``/``load_manifest``.
+only uses ``write_wave``/``write_full``/``read_all_waves``/
+``table_dir``/``count_rows``/``commit``/``load_manifest``.
 Payload rows carry per-partition lineage columns (wave, part file) per
 the north_rule.
 """
@@ -30,7 +31,6 @@ from __future__ import annotations
 import json
 import os
 import re
-import shutil
 import time
 from typing import Any
 
@@ -154,9 +154,6 @@ class SnapshotStore:
         df.write.mode("overwrite").parquet(path)
         return path
 
-    def read(self, spark: SparkSession, path: str) -> DataFrame:
-        return spark.read.parquet(path)
-
     @staticmethod
     def count_rows(path: str) -> int:
         """Row count from parquet footers — no Spark job. Used by the
@@ -179,14 +176,3 @@ class SnapshotStore:
         tdir = self.table_dir(table)
         waves = sorted(int(d[1:]) for d in os.listdir(tdir) if re.fullmatch(r"w\d+", d))
         return spark.read.parquet(*(self.table_dir(table, w) for w in waves))
-
-    def gc_uncommitted(self, keep: set[str]) -> None:
-        """Drop snapshot dirs not referenced by the manifest (best effort)."""
-        for table in os.listdir(self.root):
-            tdir = os.path.join(self.root, table)
-            if not os.path.isdir(tdir):
-                continue
-            for part in os.listdir(tdir):
-                p = os.path.join(tdir, part)
-                if part.startswith("s") and p not in keep:
-                    shutil.rmtree(p, ignore_errors=True)

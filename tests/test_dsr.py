@@ -1,6 +1,7 @@
 """DSR decoder golden tests against the reference's captured fixture
 (``/root/reference/examples/response.json`` — a real 500-row Power BI
-response) plus encode→decode round-trip properties.
+response), encode→decode round-trip properties, and the Spark decode
+checked against the local one over synthetic ``encode_dm0`` pages.
 
 Ground truth for the last row comes from the server itself: the
 restart token ``DS[0].RT`` is the composite sort key of the LAST row
@@ -11,6 +12,8 @@ from __future__ import annotations
 
 import datetime as dt
 import json
+import random
+from collections import Counter
 from decimal import Decimal
 
 import pytest
@@ -83,7 +86,7 @@ def test_inheritance_monotonic_ordem(payload):
 
 
 def test_spark_distributed_decode_matches_local(spark, payload):
-    """applyInPandas decode over (page replicated 3×) ≡ 3× the local
+    """mapInPandas decode over (page replicated 3×) ≡ 3× the local
     decode, with page-stable row_idx."""
     raw = json.dumps(payload)
     pages = spark.createDataFrame([(i, raw) for i in range(3)], "page_id long, payload string")
@@ -155,3 +158,158 @@ def test_rulifier_roundtrip(rows):
         assert got["natureza"] == ["A", "B", "C", "D"][d0]
         assert got["ano_orcamento"] == year
         assert got["valor_original"] == val
+
+
+# ---------------------------------------------------------------------------
+# Spark decode ≡ local decode, over synthetic encode_dm0 pages
+# ---------------------------------------------------------------------------
+
+_VALUE_DICTS = {
+    "D0": ["ALIMENTAR", "COMUM"],
+    "D1": ["0000001-11.2020.8.06.0001", "0000002-22.2021.8.06.0001",
+           "0000003-33.2022.8.06.0001"],
+    "D2": ["R$ 1.234,56", "R$ 99,90"],
+}
+
+# per table: the wire columns as (descriptor name, dict ref, value choices)
+# and the corrupted cells (row, column, wire value) of a page with rejects.
+# Small choice sets repeat values, so encode_dm0 sets R bits; "DIRETA" is
+# a direct string in a dict column, 9 is out of every dictionary.
+_MONEY = [100.0, 250.25, 0]
+_SYNTH = {
+    "precatorio": (
+        [
+            ("Sum(p.dfslcp_num_ordem)", None, range(1, 500)),
+            ("p.dfslcp_dsc_natureza", "D0", [0, 1, "DIRETA"]),
+            ("p.dfslcp_dsc_proc_precatorio", "D1", [0, 1, 2]),
+            ("Sum(p.dfslcp_num_ano_orcamento)", None, [2023, 2024]),
+            ("p.dfslcp_dat_cadastro", None, [1704067200000, 1706745600000]),
+            ("p.dfslcp_dsc_comarca", None, ["Fortaleza", "Sobral"]),
+            ("p.dfslcp_dsc_tipo_classificao", None, ["Prioridade", "Ordem"]),
+            ("Sum(p.dfslcp_vlr_original)", None, [1000.5, 250.0]),
+            ("p.ValorAtualFormatado", "D2", [0, 1]),
+            ("p.dfslcp_dsc_sit_precatorio", None, ["Pendente", "Pago"]),
+        ],
+        [(3, 1, 9), (5, 4, "junk"), (7, 7, "garbage")],
+    ),
+    "edital": (
+        [
+            (None, None, range(1, 500)),
+            (None, None, [2023, 2024]),
+            (None, "D0", [0, 1, "DIRETA"]),
+            (None, None, ["01/02/2024", "03/04/2024"]),
+            (None, "D1", [0, 1, 2]),
+            (None, None, ["Pendente", "Pago"]),
+            (None, "D2", [0, 1]),
+        ],
+        [(3, 2, 9), (7, 6, "garbage")],
+    ),
+    "pagamento": (
+        [
+            (None, None, range(1, 50)),
+            (None, None, ["Acordo", "Ordem"]),
+            (None, "D0", [0, 1, "DIRETA"]),
+            (None, None, [2023, 2024]),
+            (None, None, ["01/02/2024"]),
+            (None, "D1", [0, 1, 2]),
+            (None, None, ["Fulano", "Beltrano"]),
+            (None, None, ["PF", "PJ"]),
+            (None, None, ["05/06/2024", "07/08/2024"]),
+            (None, None, ["123", "456"]),
+        ] + [(None, None, _MONEY)] * 7,
+        [(3, 2, 9), (7, 10, "garbage")],
+    ),
+}
+
+
+def _synthetic_payload(table: str, seed: int, n_rows: int = 12, bad_cells=(),
+                       empty: bool = False) -> dict:
+    """One page of ``table``: ``n_rows`` rows from ``encode_dm0`` (so later
+    rows inherit through R) with ``bad_cells`` (row, column, wire value)
+    written over them, and one row with its last C element dropped (short
+    C) when the page has one with two or more."""
+    columns, _ = _SYNTH[table]
+    rng = random.Random(f"{table}-{seed}")
+    rows = [[rng.choice(choices) for _, _, choices in columns] for _ in range(n_rows)]
+    for r, c, v in bad_cells:
+        rows[r][c] = v
+    schema = [{"N": f"G{i}", "T": 1} | ({"DN": dn} if dn else {})
+              for i, (_, dn, _) in enumerate(columns)]
+    dm0 = dsr.encode_dm0(rows, schema)
+    short = next((i for i in range(2, len(dm0)) if len(dm0[i]["C"]) >= 2), None)
+    if short is not None:
+        dm0[short]["C"] = dm0[short]["C"][:-1]
+    return {"results": [{"result": {"data": {
+        "descriptor": {"Select": [{"Value": f"G{i}", "Name": name}
+                                  for i, (name, _, _) in enumerate(columns) if name]},
+        "dsr": {"DS": [{"ValueDicts": _VALUE_DICTS,
+                        "PH": [{"DM0": [{}] if empty else dm0}]}]},
+    }}}]}
+
+
+def _synthetic_pages(table: str) -> list[tuple[int, dict]]:
+    """Clean and corrupted pages, a second page under a duplicated
+    page_id, an empty ``DM0=[{}]`` page, and a page whose one data row
+    is rejected (pagamento's row 0 is schema only)."""
+    bad = _SYNTH[table][1]
+    last = 1 if dsr.TABLES[table][3] else 0
+    return [
+        (0, _synthetic_payload(table, 0)),
+        (1, _synthetic_payload(table, 1, bad_cells=bad)),
+        (1, _synthetic_payload(table, 2, bad_cells=bad)),
+        (2, _synthetic_payload(table, 3, empty=True)),
+        (3, _synthetic_payload(table, 4)),
+        (4, _synthetic_payload(table, 5, n_rows=last + 1, bad_cells=[(last,) + bad[0][1:]])),
+    ]
+
+
+def _pages_df(spark, pages):
+    return spark.createDataFrame(
+        [(pid, json.dumps(p)) for pid, p in pages], "page_id long, payload string"
+    )
+
+
+def _local_decode(table: str, payload: dict, collect_rejects: bool = False):
+    fields, positional, _, pagamentos = dsr.TABLES[table]
+    return dsr.decode_page(
+        payload, fields or dsr.PRECATORIO_FIELDS, positional,
+        collect_rejects=collect_rejects, pagamentos_semantics=pagamentos,
+    )
+
+
+@pytest.mark.parametrize("table", ["precatorio", "edital", "pagamento"])
+def test_spark_decode_matches_local_decode(spark, table):
+    """``decode_pages_df`` rows ≡ ``decode_page`` page by page, and the
+    quarantine form splits valid and rejected rows exactly as
+    ``decode_page(collect_rejects=True)``."""
+    pages = _synthetic_pages(table)
+    out = dsr.decode_pages_df(spark, _pages_df(spark, pages), table)
+    want = Counter(
+        tuple({**row, "page_id": pid}.get(c) for c in out.columns)
+        for pid, p in pages for row in _local_decode(table, p)
+    )
+    assert Counter(tuple(r) for r in out.collect()) == want
+
+    quar = dsr.decode_pages_quarantine_df(spark, _pages_df(spark, pages), table)
+    want_q = Counter()
+    for pid, p in pages:
+        rows, rejects = _local_decode(table, p, collect_rejects=True)
+        for row in rows:
+            want_q[tuple({**row, "page_id": pid}.get(c) for c in quar.columns)] += 1
+        for rej in rejects:
+            keyed = {"page_id": pid, "row_idx": rej["row_idx"], "reject_reason": rej["reason"]}
+            want_q[tuple(keyed.get(c) for c in quar.columns)] += 1
+    got_q = Counter(tuple(r) for r in quar.collect())
+    assert got_q == want_q
+    n_rejects = sum(n for key, n in want_q.items() if key[-1] is not None)
+    assert n_rejects == 2 * len(_SYNTH[table][1]) + 1
+    assert sum(want.values()) == sum(want_q.values())  # one output row per wire row
+
+
+def test_spark_decode_plan_has_no_exchange(spark):
+    """Each input row holds one whole page, so the decode needs no
+    shuffle to regroup rows by page."""
+    pages = _pages_df(spark, _synthetic_pages("precatorio"))
+    for df in (dsr.decode_pages_df(spark, pages),
+               dsr.decode_pages_quarantine_df(spark, pages)):
+        assert "Exchange" not in df._jdf.queryExecution().executedPlan().toString()

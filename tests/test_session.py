@@ -58,3 +58,31 @@ def test_driver_memory_default_follows_host(monkeypatch):
     sizes = {"SC_PAGE_SIZE": 4096, "SC_PHYS_PAGES": 2**40 // 4096}
     monkeypatch.setattr(os, "sysconf", lambda name: sizes[name])
     assert session._driver_memory() == f"{48 * 1024}m"
+
+
+_WINDOW = """
+import sys
+sys.path.insert(0, sys.argv[1])
+from pyspark.sql import Window, functions as F
+from crawler_tjce_spark.session import get_spark
+spark = get_spark(cores=1)
+df = spark.range(5).select(F.sum("id").over(Window.orderBy("id")).alias("s"))
+print("sums", [r["s"] for r in df.collect()])
+print("root", spark.sparkContext._jvm.org.apache.logging.log4j.LogManager.getRootLogger().getLevel())
+spark.stop()
+"""
+
+
+def test_unpartitioned_window_logs_no_warning(tmp_path):
+    """A window with no partition key (the frontier pick's offsets
+    window) runs without WindowExec's per-plan WARN line; every other
+    logger keeps the WARN level."""
+    env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="1g")
+    out = subprocess.run(
+        [sys.executable, "-c", _WINDOW, os.path.dirname(_PKG_DIR)],
+        cwd=str(tmp_path), env=env, capture_output=True, text=True, timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert "sums [0, 1, 3, 6, 10]" in out.stdout
+    assert "root WARN" in out.stdout
+    assert "WindowExec" not in out.stderr
