@@ -12,8 +12,8 @@ Subcommands:
                (--artifact writes the reference's production-CSV bytes)
   entities   — build the slug↔name entity dimension CSV from a column
                (--layout reference writes the single-column artifact)
-  metrics    — export the store's per-host metrics + duration-histogram
-               tables to CSVs
+  metrics    — export the store's per-host metrics and duration-histogram
+               views (computed from the committed waves) to CSVs
 """
 
 from __future__ import annotations
@@ -80,7 +80,11 @@ def main(argv: list[str] | None = None) -> int:
                         "single-column entidade artifact (byte layout of "
                         "data/entidades_tjce.csv)")
 
-    mt = sub.add_parser("metrics", help="export per-host metrics + duration histogram")
+    mt = sub.add_parser(
+        "metrics",
+        help="export the per-host metrics and duration-histogram views of the "
+             "committed waves",
+    )
     mt.add_argument("--store", required=True)
     mt.add_argument("--out", required=True, help="output dir (two CSV subdirs)")
 
@@ -207,10 +211,14 @@ def main(argv: list[str] | None = None) -> int:
                 print(f"{mapping.count()} entities written to {args.out}")
         elif args.cmd == "metrics":
             from crawler_tjce_spark.sources.tableio import SnapshotStore
+            from crawler_tjce_spark.streaming.runner import (
+                duration_hist_view,
+                metrics_view,
+            )
 
             store = SnapshotStore(args.store)
-            for tbl in ("metrics", "duration_hist"):
-                df = store.read_all_waves(spark, tbl)
+            for tbl, view in (("metrics", metrics_view), ("duration_hist", duration_hist_view)):
+                df = view(spark, store)
                 df.coalesce(1).write.mode("overwrite").option("header", True).csv(
                     f"{args.out}/{tbl}"
                 )

@@ -217,7 +217,7 @@ def simulate_request_duration(url: str, attempts: int) -> float:
 
 def duration_histogram(
     df: DataFrame,
-    host_col: str = "host",
+    host_col: str | list[str] = "host",
     duration_col: str = "request_duration_s",
     buckets: tuple[float, ...] = DURATION_BUCKETS,
 ) -> DataFrame:
@@ -225,7 +225,11 @@ def duration_histogram(
     (host, le) with the CUMULATIVE ``bucket_count`` (le = +Inf row
     carries the total), plus ``duration_sum`` repeated per host (the
     _sum series). One explode + one map-side-combinable groupBy. The
-    bucket-entry array Column is memoized per application."""
+    bucket-entry array Column is memoized per application.
+
+    ``host_col`` may also be a list of series keys led by the host
+    column (e.g. ``["host", "wave"]``): the later keys keep their names
+    and split each host's series further."""
     from crawler_tjce_spark.colmemo import column_memo
 
     def _entries() -> Column:
@@ -246,12 +250,14 @@ def duration_histogram(
     arr = column_memo(
         df.sparkSession, ("duration_hist_entries", duration_col, buckets), _entries
     )
+    host, *more = [host_col] if isinstance(host_col, str) else host_col
     ex = df.select(
-        F.col(host_col).alias("host"),
+        F.col(host).alias("host"),
+        *more,
         F.col(duration_col).alias("_d"),
         F.explode(arr).alias("b"),
     )
-    return ex.groupBy("host", F.col("b.le").alias("le")).agg(
+    return ex.groupBy("host", *more, F.col("b.le").alias("le")).agg(
         F.sum("b.hit").alias("bucket_count"),
         F.sum("_d").alias("duration_sum"),
     )

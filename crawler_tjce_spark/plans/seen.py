@@ -170,14 +170,19 @@ def filter_unseen(
     wave. At 10^10 seen keys the hint stays off and the probe runs: the
     maybe-seen stream (a few % of candidates) is what shuffles.
 
-    The seen side is deduplicated ONLY when broadcasting (shrinks the
-    shipped table): a shuffled ``left_anti`` needs no distinct input,
-    and an unconditional ``.distinct()`` would be a full hash-aggregate
-    pass over the entire seen history every wave.
+    The seen side is never deduplicated. An anti-join needs no
+    distinct input: the broadcast hash relation keeps duplicate keys
+    and the probe only asks whether a key is present, and a shuffled
+    ``left_anti`` is the same. The crawl's seen entries are almost
+    distinct anyway (discovered URLs passed the anti-join; seeds are
+    bounded), so a ``.distinct()`` before the broadcast would shrink
+    the shipped table by nearly nothing while adding a shuffle stage
+    and a job to the links step, and without the broadcast it would be
+    a full hash-aggregate pass over the seen history every wave.
     """
     seen_urls = seen.select(url_col)
     if broadcast_seen:
-        seen_urls = F.broadcast(seen_urls.distinct())
+        seen_urls = F.broadcast(seen_urls)
     if tagger is None or broadcast_seen:
         return candidates.join(seen_urls, url_col, "left_anti")
     tagged = tagger(candidates)

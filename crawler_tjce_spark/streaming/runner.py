@@ -6,7 +6,7 @@ with distributed state:
 ====================  ====================================================
 state                 representation
 ====================  ====================================================
-frontier              full parquet snapshot per wave (``frontier/snap=N``)
+frontier              full parquet snapshot per wave (``frontier/s{N}``)
 seen set              append-only: seeds ∪ all ``discovered/w*`` ∪
                       ``requeued/w*`` partitions (never rewritten — at
                       10^10 keys a rewrite-per-wave would be
@@ -21,9 +21,13 @@ seen filter           past the budget only: a bloom or cuckoo filter
                       and then kept serving the next wave; persisted as
                       ``{kind}_{wave}`` for resume (only the committed
                       wave's snapshot is kept)
-visit log (ordem)     append-only ``visits/wave=N`` partitions
-payload               append-only ``payload/wave=N`` with lineage cols
+visit log (ordem)     append-only ``visits/w{N}`` partitions
+payload               append-only ``payload/w{N}`` with lineage cols
 progress              ``_manifest.json`` atomic commit per wave
+metrics               read-time views over the committed ``visits`` and
+                      ``discovered`` waves (:func:`metrics_view`,
+                      :func:`duration_hist_view`); the wave totals ride
+                      the visit and discovered writes as ``Observation``s
 ====================  ====================================================
 
 Per wave:
@@ -35,15 +39,16 @@ Per wave:
    from an analytic count branch, so the whole pick is one lazy plan)
    + deterministic fetch retry/backoff lineage (``plans.fetch``); the
    visit-log parquet write is the wave's ONE materialization of the
-   picked set — payload and links re-read the written file, the picked
-   count rides the write as an ``Observation``;
+   picked set — payload and links re-read the written file; the picked
+   count and the fetch counters ride the write as an ``Observation``;
 3. payload fetch runs as a background job (FAIR pool with fair
    intra-pool sharing): it depends only on the picked set, so the
    wave's bookkeeping hides under it instead of adding to it;
-4. "fetch" = join picked URLs against the pages table (the synthetic
-   web); real fetching swaps in an Arrow-batched UDF with identical
-   schema — the scheduling semantics don't change; retry-exhausted URLs
-   are visited but expand nothing;
+4. "fetch" = inner join of the picked URLs against the pages table (the
+   synthetic web), with the wave's visit log as the broadcast side, so
+   the driver never collects the web; real fetching swaps in an
+   Arrow-batched UDF with identical schema — the scheduling semantics
+   don't change; retry-exhausted URLs are visited but expand nothing;
 5. discovered links: explode out-links, attribute each new URL to its
    first fetcher in visit order (``min_by(parent_depth, ordem)`` —
    matches the sequential simulator exactly), exact anti-join against
@@ -58,12 +63,12 @@ Per wave:
    from the path store and the filter from the seen set, and from then
    on the seen side scans bucketed. Wave N's seen side holds seeds,
    ``discovered`` of waves before N and ``requeued`` up to N;
-6. per-host metrics + duration-histogram tables, the next-frontier
-   write (old − picked + discovered∧allowed) and, once they exist, the
-   index insert of this wave's discovered URLs and the seen-filter
-   update (when the filter served this wave) run as concurrent
-   background jobs (:meth:`CrawlRunner._spawn`); only the frontier is
-   waited on in-wave, the rest are drained after the next wave's pick;
+6. the next-frontier write (old − picked + discovered∧allowed) and,
+   once they exist, the index insert of this wave's discovered URLs and
+   the seen-filter update (when the filter served this wave) run as
+   concurrent background jobs (:meth:`CrawlRunner._spawn`); only the
+   frontier is waited on in-wave, the rest are drained after the next
+   wave's pick. The discovered count rides the discovered write;
 7. the payload job PIPELINES ACROSS WAVES: it is waited on at the NEXT
    wave's payload start (or loop end), so wave N+1's pick runs under
    wave N's payload tail; wave N's manifest commit (+ snapshot log for
@@ -533,7 +538,7 @@ class CrawlRunner:
         try:
             while manifest["wave"] < self.max_waves and manifest["frontier_rows"] > 0:
                 manifest = self._run_wave(manifest)
-            self._drain_side()  # counters must be complete before the commit
+            self._drain_side()  # a committed wave is fully on disk
             self._drain_payload(manifest)
         except BaseException:
             # wait out this runner's background jobs before the error
@@ -551,14 +556,12 @@ class CrawlRunner:
         return manifest
 
     def _drain_side(self) -> None:
-        """Wait for the deferred side jobs (per-host metrics, duration
-        histogram, index insert, seen-filter update), then raise the
+        """Wait for the deferred side jobs (index insert, seen-filter
+        update — both past the broadcast budget only), then raise the
         first error among them.
 
-        These jobs have no consumer inside their own wave: the index
-        insert and the filter update (which runs only past the broadcast
-        budget) are first read by the NEXT wave's links step, and metrics
-        and histogram only by the manifest commit. The wave loop
+        These jobs have no consumer inside their own wave: both are
+        first read by the NEXT wave's links step. The wave loop
         therefore leaves them running and drains them after the next
         wave's pick — so their job latency hides under the next pick's
         plan-build + write instead of extending the wave tail — and
@@ -788,7 +791,8 @@ class CrawlRunner:
         frontier = self.spark.read.schema(_FRONTIER_SCHEMA).parquet(
             manifest["frontier_path"]
         )
-        picked, picked_n = self._pick(frontier, manifest)
+        picked, counters = self._pick(frontier, manifest)
+        picked_n = counters["requests_total"]
         step("pick_ordem")
         # the previous wave's side jobs ran under this pick; the links
         # probe below reads the seen filter they updated
@@ -801,18 +805,16 @@ class CrawlRunner:
             self._commit(manifest)
             return manifest
 
-        # duration histogram (ref metrics.py:10-15 analog): depends only
-        # on the picked set, so it runs under the links step
-        self._side_pending.append(
-            self._spawn("metrics", lambda: self._write_histogram(picked, wave))
-        )
         # fetch = join against the web; URLs whose retries exhausted
         # (fetch_status='error') were visited (they consumed schedule
         # slots and carry ordem + retry lineage) but yield no links and no
-        # payload — the reference's failed-fetch path
+        # payload — the reference's failed-fetch path. An inner join lets
+        # the planner broadcast the wave's small visit log and stream the
+        # cached web; a left join could only broadcast the web itself.
+        # A URL missing from the web would expand nothing either way.
         ok = picked.filter(F.col("fetch_status") == "ok")
-        fetched = ok.join(self.pages, "url", "left").select(
-            ok["url"], ok["depth"], ok["ordem"], "out_links", "image_refs"
+        fetched = ok.join(self.pages, "url", "inner").select(
+            "url", "depth", "ordem", "out_links", "image_refs"
         )
         if self.fetch_images:
             # the previous wave's payload tail ran under this wave's pick
@@ -821,9 +823,11 @@ class CrawlRunner:
                 self._spawn("payload_fetch", lambda: self._fetch_payload(fetched, wave)),
                 wave,
             )
-        discovered, index_live = self._links(fetched, manifest)
+        discovered, index_live, counters["links_discovered_total"] = self._links(
+            fetched, manifest
+        )
         step("links_anti_join")
-        fpath, frontier_rows, frontier_hosts, counters = self._start_side_jobs(
+        fpath, frontier_rows, frontier_hosts = self._start_side_jobs(
             frontier, picked, discovered, wave, index_live
         )
         step("side_jobs")
@@ -848,19 +852,22 @@ class CrawlRunner:
             }
         )
         if self._payload_pending is None:
-            # no in-flight payload → drain the side jobs (the commit
-            # serializes their counters) and commit now; otherwise the
-            # commit is DEFERRED to _drain_payload, so a committed wave is
-            # always fully on disk, payload included
+            # no in-flight payload → drain the side jobs and commit now;
+            # otherwise the commit is DEFERRED to _drain_payload, so a
+            # committed wave is always fully on disk, payload included
             self._drain_side()
             self._commit(manifest)
         return manifest
 
-    def _pick(self, frontier: DataFrame, manifest: dict) -> tuple[DataFrame, int]:
+    def _pick(
+        self, frontier: DataFrame, manifest: dict
+    ) -> tuple[DataFrame, dict[str, int]]:
         """Budgets + salted politeness pick + global ``ordem`` + fetch
         lineage, written as the wave's visit log: that write is the one
         materialization of the picked set. Returns the re-read visit log
-        and its row count, which rides the write as an ``Observation``.
+        and the wave's fetch counters (reference metrics.py:6-27 analog:
+        requests, attempts, exhausted fetches, backoff), which ride the
+        write as an ``Observation``.
 
         The payload starts from the written log, not from the lazy pick
         plan: started earlier it would compute the same pick inside its
@@ -880,18 +887,26 @@ class CrawlRunner:
                 .withColumn("wave", F.lit(wave))
             )
             obs = Observation(f"picked_w{wave}")
-            vpath = self.store.write_wave(
-                visits.observe(obs, F.count(F.lit(1)).alias("n")), "visits", wave
+            visits = visits.observe(
+                obs,
+                F.count(F.lit(1)).alias("requests_total"),
+                F.sum("fetch_attempts").alias("fetch_attempts_total"),
+                F.count_if(F.col("fetch_status") == "error").alias("errors_fetch_total"),
+                F.sum("backoff_total_s").alias("retry_backoff_s_total"),
             )
-            return self.spark.read.schema(_VISITS_SCHEMA).parquet(vpath), int(obs.get["n"])
+            vpath = self.store.write_wave(visits, "visits", wave)
+            counters = {k: int(v or 0) for k, v in obs.get.items()}
+            return self.spark.read.schema(_VISITS_SCHEMA).parquet(vpath), counters
 
-    def _links(self, fetched: DataFrame, manifest: dict) -> tuple[DataFrame, bool]:
+    def _links(
+        self, fetched: DataFrame, manifest: dict
+    ) -> tuple[DataFrame, bool, int]:
         """Discovered links: first-fetcher attribution, exact anti-join
         against the wave's seen side (behind the filter probe past the
         broadcast budget), robots split; written as
-        ``discovered/w{wave}``. Returns the re-read partition and whether
-        the seen index is live. Adds the discovered count (rides the
-        write) to ``seen_rows``."""
+        ``discovered/w{wave}``. Returns the re-read partition, whether
+        the seen index is live and the discovered count, which rides the
+        write and is added to ``seen_rows``."""
         wave = manifest["wave"]
         sc = self.spark.sparkContext
         with job_group(sc, "links_seen"):
@@ -943,9 +958,10 @@ class CrawlRunner:
             dpath = self.store.write_wave(
                 discovered.observe(obs, F.count(F.lit(1)).alias("n")), "discovered", wave
             )
+            n = int(obs.get["n"])
             if manifest.get("seen_rows") is not None:
-                manifest["seen_rows"] += int(obs.get["n"])
-        return self.spark.read.schema(_DISCOVERED_SCHEMA).parquet(dpath), index_live
+                manifest["seen_rows"] += n
+        return self.spark.read.schema(_DISCOVERED_SCHEMA).parquet(dpath), index_live, n
 
     def _start_side_jobs(
         self,
@@ -954,22 +970,15 @@ class CrawlRunner:
         discovered: DataFrame,
         wave: int,
         index_live: bool,
-    ) -> tuple[str, int, int, dict[str, int]]:
+    ) -> tuple[str, int, int]:
         """Start the jobs that depend only on the written discovered
-        partition and visit log, not on each other: per-host metrics,
-        next frontier, the index insert (once live) and the seen-filter
-        update (when the filter served this wave). Only the frontier is
-        waited on here — the next pick reads it; the others join the
-        deferred side jobs. Returns the next frontier's (path, rows,
-        hosts) and the wave's counters, which the metrics job fills in
-        before it completes."""
-        counters: dict[str, int] = {}
-        side = [
-            self._spawn(
-                "metrics",
-                lambda: counters.update(self._write_metrics(picked, discovered, wave)),
-            ),
-        ]
+        partition and visit log, not on each other: the next frontier,
+        the index insert (once live) and the seen-filter update (when
+        the filter served this wave). Only the frontier is waited on
+        here — the next pick reads it; the others join the deferred side
+        jobs, so within the broadcast budget a wave defers none. Returns
+        the next frontier's (path, rows, hosts)."""
+        side = []
         if self._filter_wave == wave:
             side.append(self._spawn(
                 "bloom_update", lambda: self._seen_filter_add(discovered, wave)
@@ -985,57 +994,7 @@ class CrawlRunner:
         # registered BEFORE waiting on the frontier: if that job fails,
         # the next drain still waits for these instead of orphaning them
         self._side_pending += side
-        return (*nxt.result(), counters)
-
-    def _write_histogram(self, picked: DataFrame, wave: int) -> None:
-        hist = fetchmod.duration_histogram(
-            fetchmod.with_request_duration(picked)
-        ).withColumn("wave", F.lit(wave))
-        self.store.write_wave(hist, "duration_hist", wave)
-
-    def _write_metrics(
-        self, picked: DataFrame, discovered: DataFrame, wave: int
-    ) -> dict[str, int]:
-        """Per-host metrics (reference metrics.py:6-27 analog:
-        requests_total, records_processed, errors_total{type} — here per
-        host per wave, as a queryable parquet table instead of a
-        Prometheus endpoint). The picked-side and links-side
-        contributions union into a single ``groupBy(host)``: one shuffle.
-        Returns the wave totals, which ride the write as an
-        ``Observation`` (no extra job)."""
-        met_src = picked.select(
-            "host",
-            F.lit(1).alias("_req"),
-            F.col("fetch_attempts").alias("_att"),
-            (F.col("fetch_status") == "error").cast("int").alias("_err"),
-            F.col("backoff_total_s").alias("_back"),
-            F.lit(0).alias("_disc"),
-        ).unionByName(
-            discovered.select(
-                "host",
-                F.lit(0).alias("_req"),
-                F.lit(0).alias("_att"),
-                F.lit(0).alias("_err"),
-                F.lit(0).alias("_back"),
-                F.lit(1).alias("_disc"),
-            )
-        )
-        totals = {
-            "requests_total": "_req",
-            "fetch_attempts_total": "_att",
-            "errors_fetch_total": "_err",
-            "retry_backoff_s_total": "_back",
-            "links_discovered_total": "_disc",
-        }
-        metrics_df = (
-            met_src.groupBy("host")
-            .agg(*(F.sum(c).alias(name) for name, c in totals.items()))
-            .withColumn("wave", F.lit(wave))
-        )
-        obs = Observation(f"metrics_totals_w{wave}")
-        metrics_df = metrics_df.observe(obs, *(F.sum(n).alias(n) for n in totals))
-        self.store.write_wave(metrics_df, "metrics", wave)
-        return {k: int(v or 0) for k, v in obs.get.items()}
+        return nxt.result()
 
     def _write_frontier(
         self, frontier: DataFrame, picked: DataFrame, discovered: DataFrame, wave: int
@@ -1073,10 +1032,7 @@ class CrawlRunner:
 
     # ------------------------------------------------------------- results
     def visits_df(self) -> DataFrame:
-        m = self.store.load_manifest()
-        return self.store.read_all_waves(self.spark, "visits").filter(
-            F.col("wave") < m["wave"]
-        )
+        return _committed(self.spark, self.store, "visits")
 
     def seen_final_df(self) -> DataFrame:
         """The seen set as of the committed wave W: seeds, ``discovered``
@@ -1084,3 +1040,51 @@ class CrawlRunner:
         W + 1)."""
         m = self.store.load_manifest()
         return self._seen_df(m["wave"] + 1)
+
+
+def _committed(spark: SparkSession, store: SnapshotStore, table: str) -> DataFrame:
+    """Rows of ``table`` from the waves the manifest has committed."""
+    m = store.load_manifest()
+    return store.read_all_waves(spark, table).filter(F.col("wave") < m["wave"])
+
+
+def metrics_view(spark: SparkSession, store: SnapshotStore) -> DataFrame:
+    """Per-host metrics per committed wave (reference metrics.py:6-27
+    analog: requests, fetch attempts, exhausted fetches, backoff and
+    discovered links, per host per wave — a query over the visit log and
+    the discovered table instead of a Prometheus endpoint). One row per
+    (host, wave) with a visit or a discovered URL; their wave sums equal
+    the manifest's per-wave ``counters``."""
+    visits = _committed(spark, store, "visits").select(
+        "host",
+        "wave",
+        F.lit(1).alias("requests_total"),
+        F.col("fetch_attempts").alias("fetch_attempts_total"),
+        (F.col("fetch_status") == "error").cast("int").alias("errors_fetch_total"),
+        F.col("backoff_total_s").alias("retry_backoff_s_total"),
+        F.lit(0).alias("links_discovered_total"),
+    )
+    totals = visits.columns[2:]
+    discovered = _committed(spark, store, "discovered").select(
+        "host",
+        "wave",
+        *(F.lit(0).alias(c) for c in totals[:-1]),
+        F.lit(1).alias("links_discovered_total"),
+    )
+    return (
+        visits.unionByName(discovered)
+        .groupBy("host", "wave")
+        .agg(*(F.sum(c).alias(c) for c in totals))
+        .select("host", *totals, "wave")
+    )
+
+
+def duration_hist_view(spark: SparkSession, store: SnapshotStore) -> DataFrame:
+    """Per-host request-duration histogram per committed wave (reference
+    metrics.py:10-15 analog): :func:`fetch.duration_histogram` over the
+    visit log's deterministic request durations, one row set per
+    (host, le, wave)."""
+    visits = fetchmod.with_request_duration(_committed(spark, store, "visits"))
+    return fetchmod.duration_histogram(visits, ["host", "wave"]).select(
+        "host", "le", "bucket_count", "duration_sum", "wave"
+    )

@@ -152,3 +152,72 @@ def test_payload_lands_with_lineage(spark, world, tmp_path):
     checked = fidelity_check_spark(payload)
     bad = checked.filter(~F.col("pixels_ok") | ~F.col("caption_ok"))
     assert bad.count() == 0
+
+
+# the job groups a wave's jobs run in (``perf.job_group``); None = untagged
+WAVE_GROUPS = ("pick_ordem", "links_seen", "frontier_write", "seen_idx",
+               "bloom_init", "bloom_update", "payload_fetch", "metrics", None)
+
+
+def _jobs_by_group(spark):
+    st = spark.sparkContext.statusTracker()
+    return {g: set(st.getJobIdsForGroup(g)) for g in WAVE_GROUPS}
+
+
+def test_steady_wave_job_count(spark, world, tmp_path):
+    """A steady wave without payload, within the broadcast budget, runs
+    at most 12 jobs: 6 to pick, 4 for the links step and 2 for the
+    next frontier. Per-host metrics and the duration histogram are
+    read-time views, so no job runs in group ``metrics``, and the seen
+    side is broadcast without a dedup job."""
+    r = CrawlRunner(spark, world, str(tmp_path / "store_jobs"), max_waves=2,
+                    bloom_expected=10_000)
+    m = r.run(resume=False)
+    before = _jobs_by_group(spark)
+    r.max_waves += 1
+    m = r.run_waves(m)
+    assert m["wave"] == 3 and m["metrics"][-1]["picked"] > 0
+    jobs = {g: len(ids - before[g]) for g, ids in _jobs_by_group(spark).items()}
+    assert jobs["metrics"] == 0
+    assert 0 < jobs["links_seen"] <= 4
+    assert sum(jobs.values()) <= 12, jobs
+
+
+def _subtree(plan: str, node: str) -> list[str]:
+    """Lines of the first ``node`` in a plan tree string and below it."""
+    lines = plan.splitlines()
+
+    def col(line: str) -> int:
+        return len(line) - len(line.lstrip(" :+-"))
+
+    start = next(i for i, ln in enumerate(lines) if node in ln)
+    sub = [lines[start]]
+    for ln in lines[start + 1:]:
+        if col(ln) <= col(lines[start]):
+            break
+        sub.append(ln)
+    return sub
+
+
+def test_fetch_join_broadcasts_the_visit_log(spark, world, tmp_path):
+    """The fetch join broadcasts the wave's visit log and streams the
+    cached web: the driver never collects the pages table."""
+    r = CrawlRunner(spark, world, str(tmp_path / "store_fetch"), max_waves=2,
+                    bloom_expected=10_000)
+    fetched = []
+    real_links = r._links
+
+    def spy(df, manifest):
+        fetched.append(df)
+        return real_links(df, manifest)
+
+    r._links = spy
+    r.run(resume=False)
+    plan = fetched[-1]._jdf.queryExecution().executedPlan().toString()
+    assert "InMemoryRelation" in plan
+    build = "\n".join(_subtree(plan, "BroadcastExchange"))
+    # the build side scans the visit log (``ordem`` is its column, not
+    # the web's) and holds no cached relation
+    assert "FileScan parquet" in build and "ordem" in build
+    assert "InMemoryRelation" not in build
+    assert plan.count("BroadcastExchange") == 1

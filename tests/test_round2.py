@@ -17,7 +17,11 @@ from crawler_tjce_spark.datagen import WorldConfig, write_world
 from crawler_tjce_spark.operators import dedup
 from crawler_tjce_spark.plans.fetch import simulate_fetch, with_fetch_lineage
 from crawler_tjce_spark.sources import dsr
-from crawler_tjce_spark.streaming.runner import CrawlRunner
+from crawler_tjce_spark.streaming.runner import (
+    CrawlRunner,
+    duration_hist_view,
+    metrics_view,
+)
 
 
 @pytest.fixture(scope="module")
@@ -118,8 +122,8 @@ def test_per_host_metrics_counters(spark, world, tmp_path):
     assert req == len(ref.visits)
     assert errs == sum(1 for _, s, _ in ref.fetch_lineage.values() if s == "error")
     assert attempts == sum(a for a, _, _ in ref.fetch_lineage.values())
-    # the queryable per-host table agrees with the manifest roll-up
-    mt = runner.store.read_all_waves(spark, "metrics")
+    # the queryable per-host view agrees with the manifest roll-up
+    mt = metrics_view(spark, runner.store)
     assert mt.agg(F.sum("requests_total")).collect()[0][0] == req
     per_host = {
         r["host"]: r["n"]
@@ -129,6 +133,37 @@ def test_per_host_metrics_counters(spark, world, tmp_path):
     for _, _, _, h in ref.visits:
         ref_per_host[h] = ref_per_host.get(h, 0) + 1
     assert per_host == ref_per_host
+
+
+def test_cli_metrics_exports_the_views(spark, world, tmp_path):
+    """``cli metrics`` writes the two views of a 3-wave store as CSVs:
+    one data row per view row. The CLI stops its session on exit, so it
+    runs in a child process."""
+    import csv
+    import glob
+    import subprocess
+    import sys
+
+    store = str(tmp_path / "store_cli")
+    runner = CrawlRunner(spark, world, store, max_waves=3, bloom_expected=10_000,
+                         flaky_fetch=True, flaky_share=30, flaky_fail_pct=50)
+    assert runner.run(resume=False)["wave"] == 3
+    out = str(tmp_path / "metrics_csv")
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="1g", PYTHONPATH=repo)
+    done = subprocess.run(
+        [sys.executable, "-m", "crawler_tjce_spark.cli", "--cores", "1",
+         "metrics", "--store", store, "--out", out],
+        cwd=str(tmp_path), env=env, capture_output=True, text=True, timeout=300,
+    )
+    assert done.returncode == 0, done.stderr[-3000:]
+    for tbl, view in (("metrics", metrics_view), ("duration_hist", duration_hist_view)):
+        rows = []
+        for f in glob.glob(f"{out}/{tbl}/*.csv"):
+            with open(f, newline="") as fh:
+                rows += list(csv.DictReader(fh))
+        assert len(rows) == view(spark, runner.store).count() > 0, tbl
+        assert {int(r["wave"]) for r in rows} == {0, 1, 2}
 
 
 # ------------------------------------------------------------- bloom sidecar
@@ -536,10 +571,10 @@ def test_entities_list_csv_byte_parity_with_reference_artifact(spark, tmp_path):
 
 
 def test_duration_histogram_matches_refsim(spark, world, tmp_path):
-    """The per-host request-duration histogram (ref metrics.py:10-15
-    analog: cumulative 0.1-10s buckets) written each wave must equal
-    the bucket counts computed from the sequential simulator's lineage
-    through the same deterministic duration model."""
+    """The per-host request-duration histogram view (ref metrics.py:10-15
+    analog: cumulative 0.1-10s buckets, one row set per host and wave)
+    must equal the bucket counts computed from the sequential
+    simulator's lineage through the same deterministic duration model."""
     import math
 
     from crawler_tjce_spark.plans.fetch import (
@@ -555,7 +590,7 @@ def test_duration_histogram_matches_refsim(spark, world, tmp_path):
     runner.run(resume=False)
     got = {
         (r["host"], r["le"]): r["bucket_count"]
-        for r in runner.store.read_all_waves(spark, "duration_hist")
+        for r in duration_hist_view(spark, runner.store)
         .groupBy("host", "le")
         .agg(F.sum("bucket_count").alias("bucket_count"))
         .collect()
@@ -628,15 +663,16 @@ def test_pipelined_payload_crash_before_deferred_commit_replays(spark, world, tm
 def test_side_job_failure_waits_for_siblings_and_skips_commit(
     spark, world, tmp_path, monkeypatch
 ):
-    """A failing side job (wave 1's seen-filter update, which runs past
-    the broadcast budget, hence ``seen_broadcast_mb=0``) surfaces at the
-    next drain — after wave 2's pick — only once the other side jobs of
-    its wave have finished; wave 1 is not committed, no job is left
-    running, and a resume equals the reference simulator."""
+    """A failing side job (wave 1's seen-filter update) surfaces at the
+    next drain — after wave 2's pick — only once the other side job of
+    its wave (the slowed index insert) has finished; wave 1 is not
+    committed, no job is left running, and a resume equals the reference
+    simulator. Both side jobs run past the broadcast budget only, hence
+    ``seen_broadcast_mb=0``."""
     store = str(tmp_path / "store_sidefail")
     r1 = CrawlRunner(spark, world, store, max_waves=3, bloom_expected=10_000,
                      fetch_images=True, seen_broadcast_mb=0)
-    real_add, real_metrics = r1._seen_filter_add, r1._write_metrics
+    real_add, real_insert = r1._seen_filter_add, r1._seen_idx_insert
     finished = []
 
     def failing_add(df, wave):
@@ -644,15 +680,14 @@ def test_side_job_failure_waits_for_siblings_and_skips_commit(
             raise RuntimeError("filter update failed")
         real_add(df, wave)
 
-    def slow_metrics(picked, discovered, wave):
+    def slow_insert(urls_df, src, wave, overwrite):
         if wave == 1:
             time.sleep(2)
-        out = real_metrics(picked, discovered, wave)
+        real_insert(urls_df, src, wave, overwrite)
         finished.append(wave)
-        return out
 
     monkeypatch.setattr(r1, "_seen_filter_add", failing_add)
-    monkeypatch.setattr(r1, "_write_metrics", slow_metrics)
+    monkeypatch.setattr(r1, "_seen_idx_insert", slow_insert)
     with pytest.raises(RuntimeError, match="filter update failed"):
         r1.run(resume=False)
     assert 1 in finished
