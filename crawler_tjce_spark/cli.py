@@ -41,7 +41,6 @@ def main(argv: list[str] | None = None) -> int:
     c.add_argument("--max-waves", type=int, default=50)
     c.add_argument("--fresh", action="store_true", help="ignore existing checkpoint")
     c.add_argument("--fetch-images", action="store_true")
-    c.add_argument("--no-bloom", action="store_true")
     c.add_argument("--flaky-fetch", action="store_true",
                    help="deterministic retry/backoff model (plans/fetch.py)")
     c.add_argument("--flaky-share", type=int, default=10)
@@ -131,7 +130,6 @@ def main(argv: list[str] | None = None) -> int:
                 args.world,
                 args.store,
                 max_waves=args.max_waves,
-                seen_filter="none" if args.no_bloom else "bloom",
                 fetch_images=args.fetch_images,
                 flaky_fetch=args.flaky_fetch,
                 flaky_share=args.flaky_share,

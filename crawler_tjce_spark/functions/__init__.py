@@ -7,7 +7,7 @@ Submodules:
   ``crawler/crawler.py:99-250``, ``models/models.py:48-228``).
 * ``slug`` — slugify / unslugify / unicode-escape decode (reference
   ``schemas/entity_mapping.py:7-28``, ``crawler/crawler.py:84-97``).
-* ``urlkit`` — URL canonicalization + 32/64-bit hash keys for the
+* ``urlkit`` — URL canonicalization and host extraction for the
   frontier and the seen-set.
 * ``text`` — tokenization, quality scoring, n-gram language id,
   fingerprinting and shingles for the training-data operators.

@@ -52,16 +52,6 @@ def parse_ptbr_number(col: Column | str) -> Column:
     return F.coalesce(normalized.try_cast("double"), F.lit(0.0))
 
 
-def parse_ptbr_int(col: Column | str) -> Column:
-    """Numeric parse then truncate toward zero (ref ``int(val_float)``)."""
-    return parse_ptbr_number(col).cast("long")
-
-
-def parse_ptbr_decimal(col: Column | str, precision: int = 18, scale: int = 2) -> Column:
-    """Monetary parse → ``decimal(18,2)`` (ref ``models/models.py:167-228``)."""
-    return parse_ptbr_number(col).cast(f"decimal({precision},{scale})")
-
-
 def parse_multiformat_date(col: Column | str) -> Column:
     """Multi-format date → timestamp (ref ``crawler/crawler.py:141-233``).
 

@@ -1,11 +1,11 @@
-"""URL canonicalization + hashing for the frontier and the seen-set.
+"""URL canonicalization and host extraction for the frontier and the
+seen-set.
 
 The reference's frontier key is the pagination restart token
 (``crawler/crawler.py:628-652``) and its seen-set is an exact Python
 set of entity names (``schemas/entity_mapping_crawler.py:219-223``).
-At 10^10-URL scale the key must be a canonical URL + a cheap stable
-hash; everything here is JVM-side (``regexp_replace`` chains +
-``xxhash64``/``hash`` a.k.a. murmur3) so canonicalization runs inside
+At 10^10-URL scale the key must be a canonical URL; everything here is
+JVM-side (``regexp_replace`` chains) so canonicalization runs inside
 whole-stage codegen at scan speed.
 """
 
@@ -55,20 +55,3 @@ def canonicalize_url(col: Column | str) -> Column:
 def url_host(col: Column | str) -> Column:
     """Host (without port) of a canonical URL — the politeness key."""
     return F.regexp_extract(_as_str(col), r"^[a-z][a-z0-9+.-]*://([^/:?#]*)", 1)
-
-
-def url_depth(col: Column | str) -> Column:
-    """Path depth of a canonical URL (segments after the host)."""
-    path = F.regexp_extract(_as_str(col), r"^[a-z][a-z0-9+.-]*://[^/?#]*(/[^?#]*)?", 1)
-    seg = F.filter(F.split(path, "/"), lambda x: x != "")
-    return F.size(seg)
-
-
-def url_key64(col: Column | str) -> Column:
-    """64-bit stable key (xxhash64) of the canonical URL — seen-set key."""
-    return F.xxhash64(_as_str(col))
-
-
-def url_key32(col: Column | str) -> Column:
-    """32-bit murmur3 key — bloom-filter bit addressing."""
-    return F.hash(_as_str(col))

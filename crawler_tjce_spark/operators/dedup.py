@@ -117,30 +117,10 @@ def doc_shingle_arrays(df: DataFrame, text_col: str, id_col: str, shingle_k: int
     return base.select(F.col(id_col), F.array_distinct(sh).alias("_hs"))
 
 
-def minhash_signature(
-    df: DataFrame, text_col: str, id_col: str, num_hashes: int = 32, shingle_k: int = 3
-) -> DataFrame:
-    """Per-document MinHash signature as ``num_hashes`` long columns.
-
-    h_i(doc) = min over shingles s of xxhash64(xxhash64(s), i) — seeding
-    the built-in ``xxhash64`` over an 8-byte pre-hash instead of re-hashing
-    the shingle string per seed, so signature width costs cheap long-hash
-    columns, not repeated string passes. Min over distinct shingles equals
-    min over all occurrences, so the distinct substrate is lossless.
-
-    r6: computed as in-row ``array_min(transform(...))`` projections over
-    the per-doc shingle array — the r5 explode + ``groupBy(id)`` shuffled
-    the whole substrate only to reassemble sets the source rows already
-    held (guide §2.4). Identical values: min over the same distinct set.
-    """
-    return _minhash_from_arrays(
-        doc_shingle_arrays(df, text_col, id_col, shingle_k), id_col, num_hashes
-    )
-
-
 def _minhash_from_arrays(docs: DataFrame, id_col: str, num_hashes: int) -> DataFrame:
-    """Signature columns from the per-doc shingle-array form — pure
-    projections, no shuffle."""
+    """Signature columns ``mh0..`` from the per-doc shingle-array form:
+    h_i(doc) = min over the doc's shingle hashes s of xxhash64(s, i) —
+    pure projections, no shuffle."""
 
     def _seeded(i: int):
         # MUST stay a one-argument lambda: F.transform treats a

@@ -148,23 +148,6 @@ def ivf_probe_expr(vec_col: Column | str, centroids: list[list[float]], nprobe: 
     )
 
 
-def ivf_index(
-    vectors: DataFrame,
-    dim: int,
-    n_cells: int = 16,
-    vec_col: str = "embedding",
-    seed: int = 42,
-    max_iter: int = 5,
-) -> tuple[DataFrame, list[list[float]]]:
-    """IVF coarse quantizer: k-means centroids + per-vector cell
-    assignment (expression-based — no shuffle). At 10^11 vectors this
-    is the standard shape: train on a sample, assign in one pass, store
-    cell as a partition column so probes prune files."""
-    centroids = kmeans_centroids(vectors, n_cells, vec_col, seed, max_iter)
-    assigned = vectors.withColumn("_cell", ivf_assign_expr(vec_col, centroids))
-    return assigned, centroids
-
-
 def cosine_topk_ivf(
     vectors: DataFrame,
     queries: DataFrame,

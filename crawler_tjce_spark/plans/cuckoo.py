@@ -265,24 +265,6 @@ def insert_distributed(cf: CuckooFilter, new: DataFrame, url_col: str) -> Cuckoo
     return CuckooFilter(full, shards, mask)
 
 
-def save_cuckoo(cf: CuckooFilter, path: str) -> None:
-    """Persist for checkpoint/resume (np.savez: table + geometry)."""
-    import io
-    import os
-
-    buf = io.BytesIO()
-    np.savez(buf, table=cf.table, shards=np.int64(cf.shards), mask=np.int64(cf.mask))
-    tmp = path + ".tmp"
-    with open(tmp, "wb") as f:
-        f.write(buf.getvalue())
-    os.replace(tmp, path)  # atomic, like the manifest commit
-
-
-def load_cuckoo(path: str) -> CuckooFilter:
-    with np.load(path) as z:
-        return CuckooFilter(z["table"], int(z["shards"]), int(z["mask"]))
-
-
 def maybe_seen_expr_cuckoo(
     df: DataFrame, url_col: str, cf: CuckooFilter | Broadcast
 ):

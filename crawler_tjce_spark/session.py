@@ -139,8 +139,3 @@ def get_spark(
         jvm.org.apache.logging.log4j.Level.ERROR,
     )
     return spark
-
-
-def load_table(spark: SparkSession, sf_dir: str, name: str):
-    """Read one driver-generated parquet table (see TESTDATA.md)."""
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")

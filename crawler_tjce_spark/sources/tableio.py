@@ -167,12 +167,18 @@ class SnapshotStore:
                     total += pq.read_metadata(os.path.join(root, fn)).num_rows
         return total
 
-    def read_all_waves(self, spark: SparkSession, table: str) -> DataFrame:
+    def read_all_waves(
+        self, spark: SparkSession, table: str, schema: str | None = None
+    ) -> DataFrame:
         """Union of every wave partition (payload/visits/discovered read).
         Rows carry their wave as a data column; callers filter to the
         committed range when uncommitted wave dirs may exist. The
         ``w{N}`` dirs are listed here and passed by name: a ``w*`` glob
-        makes Spark's metadata check log a FileNotFoundException."""
+        makes Spark's metadata check log a FileNotFoundException. With
+        a ``schema`` a table with no wave written yet reads as no rows
+        with those columns (without one, Spark cannot infer a schema)."""
         tdir = self.table_dir(table)
-        waves = sorted(int(d[1:]) for d in os.listdir(tdir) if re.fullmatch(r"w\d+", d))
-        return spark.read.parquet(*(self.table_dir(table, w) for w in waves))
+        names = os.listdir(tdir) if os.path.isdir(tdir) else []
+        waves = sorted(int(d[1:]) for d in names if re.fullmatch(r"w\d+", d))
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        return reader.parquet(*(self.table_dir(table, w) for w in waves))

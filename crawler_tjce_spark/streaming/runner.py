@@ -18,9 +18,9 @@ seen set              append-only: seeds ∪ all ``discovered/w*`` ∪
                       pre-partitioned and only candidates shuffle
 seen filter           past the budget only: a bloom or cuckoo filter
                       in front of the anti-join, built with the index
-                      and then kept serving the next wave; persisted as
-                      ``{kind}_{wave}`` for resume (only the committed
-                      wave's snapshot is kept)
+                      and then kept serving the next wave; in memory
+                      only — a cache of the seen set, rebuilt from it
+                      by a resume or after a rollback
 visit log (ordem)     append-only ``visits/w{N}`` partitions
 payload               append-only ``payload/w{N}`` with lineage cols
 progress              ``_manifest.json`` atomic commit per wave
@@ -63,12 +63,12 @@ Per wave:
    from the path store and the filter from the seen set, and from then
    on the seen side scans bucketed. Wave N's seen side holds seeds,
    ``discovered`` of waves before N and ``requeued`` up to N;
-6. the next-frontier write (old − picked + discovered∧allowed) and,
-   once they exist, the index insert of this wave's discovered URLs and
-   the seen-filter update (when the filter served this wave) run as
-   concurrent background jobs (:meth:`CrawlRunner._spawn`); only the
-   frontier is waited on in-wave, the rest are drained after the next
-   wave's pick. The discovered count rides the discovered write;
+6. once they exist, the index insert of this wave's discovered URLs and
+   the seen-filter update (when the filter served this wave) start as
+   background jobs (:meth:`CrawlRunner._spawn`) and are drained after
+   the next wave's pick; the next-frontier write (old − picked +
+   discovered∧allowed) runs meanwhile on the wave's own thread. The
+   discovered count rides the discovered write;
 7. the payload job PIPELINES ACROSS WAVES: it is waited on at the NEXT
    wave's payload start (or loop end), so wave N+1's pick runs under
    wave N's payload tail; wave N's manifest commit (+ snapshot log for
@@ -89,7 +89,6 @@ from __future__ import annotations
 
 import hashlib
 import os
-import re
 import shutil
 import threading
 import time
@@ -142,8 +141,7 @@ _VISITS_SCHEMA = _FRONTIER_SCHEMA + (
 )
 _DISCOVERED_SCHEMA = _FRONTIER_SCHEMA + ", robots_ok boolean, wave int"
 _SEEN_ENTRY_SCHEMA = "url string, wave int"
-# per-wave seen-filter snapshots in the store root (see CrawlRunner._commit)
-_FILTER_SNAPSHOT = re.compile(r"bloom_(\d+)\.bin|cuckoo_(\d+)\.npz")
+_WAVE_SCHEMAS = {"visits": _VISITS_SCHEMA, "discovered": _DISCOVERED_SCHEMA}
 
 
 class CrawlRunner:
@@ -168,10 +166,10 @@ class CrawlRunner:
         self.world_dir = world_dir
         self.store = SnapshotStore(store_root)
         self.max_waves = max_waves
-        # "bloom" (append-only, cheapest), "cuckoo" (deletion-capable —
-        # TTL eviction / forced re-crawl via ttl_evict) or "none"
-        if seen_filter not in ("bloom", "cuckoo", "none"):
-            raise ValueError(f"seen_filter must be bloom|cuckoo|none, got {seen_filter!r}")
+        # "bloom" (append-only, cheapest) or "cuckoo" (deletion-capable —
+        # TTL eviction / forced re-crawl via ttl_evict)
+        if seen_filter not in ("bloom", "cuckoo"):
+            raise ValueError(f"seen_filter must be bloom|cuckoo, got {seen_filter!r}")
         self.seen_filter = seen_filter
         # The bucketed seen index is the only seen store: past the
         # broadcast budget a path-store seen side would hash-exchange the
@@ -430,62 +428,48 @@ class CrawlRunner:
         return entries.select("url")
 
     # ------------------------------------------------------------ seen filter
-    def _filter_path(self, wave: int) -> str:
-        ext = "npz" if self.seen_filter == "cuckoo" else "bin"
-        return os.path.join(self.store.root, f"{self.seen_filter}_{wave}.{ext}")
-
     def _serve_filter(self, wave: int) -> None:
         """Make the seen filter serve wave ``wave``'s links probe, i.e.
         hold :meth:`_seen_df` (``wave``): keep it if it already does,
-        else load snapshot ``{kind}_{wave}``, else rebuild it from the
-        seen side (first wave past the budget, a lost or pruned
-        snapshot, a rollback). The filter is a cache of the seen set,
-        so within the broadcast budget nothing calls this and no filter
-        exists."""
+        else build it from that seen side (first wave past the budget, a
+        resume, a rollback). The filter is an in-memory cache of the
+        seen set, held only while the links step probes it, so within
+        the broadcast budget no filter exists."""
         if self._filter_wave == wave:
             return
-        p = self._filter_path(wave)
         with job_group(self.spark.sparkContext, "bloom_init"):
             if self.seen_filter == "cuckoo":
-                filt = ckmod.load_cuckoo(p) if os.path.exists(p) else ckmod.build_cuckoo(
+                filt = ckmod.build_cuckoo(
                     self._seen_df(wave), "url", self.bloom_expected, CUCKOO_SHARDS
                 )
-            elif os.path.exists(p):
-                with open(p, "rb") as f:
-                    filt = f.read()
             else:
                 filt = seenmod.build_bloom(
                     self._seen_df(wave), "url", self.bloom_expected, BLOOM_FPP
                 )
-        self._set_filter(filt, wave, save=False)
+        self._set_filter(filt, wave)
 
-    def _set_filter(self, filt, wave: int, save: bool) -> None:
-        """Install ``filt`` as the filter serving ``wave``: broadcast it
-        and unpersist (non-blocking) the superseded broadcast, so
-        executors hold at most one live filter; with ``save`` also
-        persist it as snapshot ``{kind}_{wave}`` for resume."""
+    def _set_filter(self, filt, wave: int | None) -> None:
+        """Install ``filt`` as the filter serving ``wave`` (``None``,
+        ``None`` releases it): broadcast it and unpersist (non-blocking)
+        the superseded broadcast, so executors hold at most one live
+        filter."""
         old = self._filter_bc
         self._filter, self._filter_wave = filt, wave
-        self._filter_bc = self.spark.sparkContext.broadcast(filt)
+        self._filter_bc = None if filt is None else self.spark.sparkContext.broadcast(filt)
         if old is not None:
             old.unpersist()
-        if save and self.seen_filter == "cuckoo":
-            ckmod.save_cuckoo(filt, self._filter_path(wave))
-        elif save:
-            with open(self._filter_path(wave), "wb") as f:
-                f.write(filt)
 
     def _seen_filter_add(self, df: DataFrame, wave: int) -> None:
         """Add wave ``wave``'s discovered URLs (disjoint from the filter:
-        they survived the exact anti-join); the filter then serves, and
-        is persisted for, wave ``wave + 1``."""
+        they survived the exact anti-join); the filter then serves wave
+        ``wave + 1``."""
         if self.seen_filter == "cuckoo":
             filt = ckmod.insert_distributed(self._filter, df.select("url"), "url")
         else:
             filt = seenmod.build_bloom(
                 df, "url", self.bloom_expected, BLOOM_FPP, base=self._filter
             )
-        self._set_filter(filt, wave + 1, save=True)
+        self._set_filter(filt, wave + 1)
 
     def _probe_tagger(self):
         """df → df + ``_maybe_seen`` from the filter's broadcast."""
@@ -495,24 +479,6 @@ class CrawlRunner:
         _, k = seenmod.bloom_params(self.bloom_expected, BLOOM_FPP)
         return lambda df: seenmod.maybe_seen_expr(df, "url", bc, k)
 
-    def _commit(self, manifest: dict) -> None:
-        """Commit the manifest, then delete every filter snapshot but
-        the committed wave's (``bloom_{w}.bin`` / ``cuckoo_{w}.npz``).
-        Kept, they pile up one per wave — ~1.2 MB each at the default
-        ``bloom_expected``, ~12 GB each at 10^10 keys — and one left
-        over from a rolled-back run could be loaded for a wave whose
-        seen set it does not hold. Resume reads only the committed
-        wave's file; a rollback or a lost file rebuilds it from
-        :meth:`_seen_df`."""
-        self.store.commit(manifest)
-        self._prune_filters(keep=manifest["wave"])
-
-    def _prune_filters(self, keep: int) -> None:
-        for name in os.listdir(self.store.root):
-            m = _FILTER_SNAPSHOT.fullmatch(name)
-            if m and int(m.group(1) or m.group(2)) != keep:
-                os.remove(os.path.join(self.store.root, name))
-
     # ------------------------------------------------------------------- run
     def prepare(self, resume: bool = True) -> dict:
         """One-time setup: load or bootstrap the manifest. Split from
@@ -521,10 +487,9 @@ class CrawlRunner:
         bootstrap over days of waves)."""
         manifest = self.store.load_manifest() if resume else None
         if manifest is None:
-            # a stale index or filter snapshot would hold another crawl's
-            # entries
+            # a stale index or filter would hold another crawl's entries
             self._drop_seen_index()
-            self._prune_filters(keep=-1)
+            self._set_filter(None, None)
             with job_group(self.spark.sparkContext, "bootstrap"):
                 manifest = self._bootstrap()
         return manifest
@@ -603,7 +568,7 @@ class CrawlRunner:
                 # payload (0.0 when the next wave's pick fully hid it)
                 entry["steps"]["payload_tail"] = round(time.time() - t0, 3)
                 break
-        self._commit(manifest)
+        self.store.commit(manifest)
 
     def run(self, resume: bool = True) -> dict:
         return self.run_waves(self.prepare(resume))
@@ -616,11 +581,12 @@ class CrawlRunner:
         bloom mode raises).
 
         Effects: the fingerprints leave the cuckoo filter serving the
-        committed wave (O(1) slot clears, persisted for resume; within
-        the broadcast budget the crawl holds no filter, so this builds
-        it from the seen set first) and a tombstone (url, evict_wave)
-        masks the exact seen entries written before now. From this
-        point the URLs are re-discoverable: the next fetched page that
+        committed wave (O(1) slot clears in memory; within the broadcast
+        budget the crawl holds no filter, so this builds it from the
+        seen set first, and the next wave releases it unprobed) and a
+        tombstone (url, evict_wave) masks the exact seen entries written
+        before now, so a filter built later leaves them out too. From
+        this point the URLs are re-discoverable: the next fetched page that
         links to one re-discovers it through the normal links path (the
         exact anti-join no longer finds it, and past the broadcast
         budget the cuckoo probe says definitely-new) and it is
@@ -640,7 +606,7 @@ class CrawlRunner:
         self._serve_filter(manifest["wave"])
         h1, h2 = ckmod.hashes_for_urls(self.spark, urls)
         removed = self._filter.delete(h1, h2)
-        self._set_filter(self._filter, manifest["wave"], save=True)
+        self._set_filter(self._filter, manifest["wave"])
         ev = self.spark.createDataFrame(
             [(u, manifest["wave"]) for u in urls], "url string, evict_wave int"
         )
@@ -649,7 +615,7 @@ class CrawlRunner:
         )
         if manifest.get("seen_rows") is not None:
             manifest["seen_rows"] = max(0, manifest["seen_rows"] - len(urls))
-        self._commit(manifest)
+        self.store.commit(manifest)
         return removed
 
     def requeue(self, urls: list[str]) -> dict:
@@ -657,11 +623,11 @@ class CrawlRunner:
         seen again: a ``requeued/w{N}`` entry, N the committed wave that
         re-fetches them, resurrects them over any tombstone and is part
         of wave N's own seen side (:meth:`_seen_df`), so the re-crawl
-        wave's links path does not re-discover them. Works in any filter
-        mode: a filter snapshot serving wave N gets the batch inserted
-        driver-side (requeue batches are bounded; after a ``ttl_evict``
-        the cuckoo gets the fingerprints back); without one, the filter
-        is built later from a seen side that already holds the batch.
+        wave's links path does not re-discover them. Works in either
+        filter mode: a filter this runner holds for wave N gets the batch
+        inserted driver-side (requeue batches are bounded; after a
+        ``ttl_evict`` the cuckoo gets the fingerprints back); otherwise
+        a later build reads a seen side that already holds the batch.
         Returns the updated committed manifest."""
         manifest = self.store.load_manifest()
         wave = manifest["wave"]
@@ -684,8 +650,7 @@ class CrawlRunner:
             # wipe them (replay only overwrites (d, wave)); duplicate
             # rows are harmless to seen-set semantics
             self._seen_idx_insert(rq.select("url"), "r", wave, overwrite=False)
-        if os.path.exists(self._filter_path(wave)):  # never for "none"
-            self._serve_filter(wave)
+        if self._filter_wave == wave:
             h1, h2 = ckmod.hashes_for_urls(self.spark, urls)
             if self.seen_filter == "cuckoo":
                 absent = ~self._filter.contains(h1, h2)  # single-copy invariant
@@ -694,7 +659,7 @@ class CrawlRunner:
             else:
                 _, k = seenmod.bloom_params(self.bloom_expected, BLOOM_FPP)
                 filt = seenmod.bloom_insert(self._filter, h1, h2, k)
-            self._set_filter(filt, wave, save=True)
+            self._set_filter(filt, wave)
         # frontier = current ∪ requeued; written to a fresh snapshot path
         # (never overwrite the snapshot the plan is reading)
         old = self.spark.read.parquet(manifest["frontier_path"])
@@ -715,7 +680,7 @@ class CrawlRunner:
         )
         if manifest.get("seen_rows") is not None:
             manifest["seen_rows"] += len(urls)
-        self._commit(manifest)
+        self.store.commit(manifest)
         return manifest
 
     def _bootstrap(self) -> dict:
@@ -765,7 +730,7 @@ class CrawlRunner:
             "metrics": [],
             "snapshot_id": 0,
         }
-        self._commit(manifest)
+        self.store.commit(manifest)
         return manifest
 
     # ------------------------------------------------------------------ wave
@@ -802,7 +767,7 @@ class CrawlRunner:
             # the previous payload's deferred commit must not be skipped
             self._drain_payload(manifest)
             manifest["frontier_rows"] = 0
-            self._commit(manifest)
+            self.store.commit(manifest)
             return manifest
 
         # fetch = join against the web; URLs whose retries exhausted
@@ -856,7 +821,7 @@ class CrawlRunner:
             # otherwise the commit is DEFERRED to _drain_payload, so a
             # committed wave is always fully on disk, payload included
             self._drain_side()
-            self._commit(manifest)
+            self.store.commit(manifest)
         return manifest
 
     def _pick(
@@ -933,9 +898,12 @@ class CrawlRunner:
                     with job_group(sc, "seen_idx"):
                         self._backfill_seen_index(wave)
                     index_live = True
-                if self.seen_filter != "none":
-                    self._serve_filter(wave)
-                    tagger = self._probe_tagger()
+                self._serve_filter(wave)
+                tagger = self._probe_tagger()
+            else:
+                # no probe reads a filter within the budget: keeping one
+                # would only cost a filter update per wave
+                self._set_filter(None, None)
             new_links = seenmod.filter_unseen(
                 links, self._seen_df(wave), "url", tagger, broadcast_seen=bcast_seen
             )
@@ -972,29 +940,25 @@ class CrawlRunner:
         index_live: bool,
     ) -> tuple[str, int, int]:
         """Start the jobs that depend only on the written discovered
-        partition and visit log, not on each other: the next frontier,
-        the index insert (once live) and the seen-filter update (when
-        the filter served this wave). Only the frontier is waited on
-        here — the next pick reads it; the others join the deferred side
-        jobs, so within the broadcast budget a wave defers none. Returns
-        the next frontier's (path, rows, hosts)."""
-        side = []
+        partition and visit log, not on each other: the index insert
+        (once live) and the seen-filter update (when the filter served
+        this wave) join the deferred side jobs, so within the broadcast
+        budget a wave defers none; the next frontier, which the next
+        pick reads, is written meanwhile on this thread. Returns the
+        next frontier's (path, rows, hosts)."""
         if self._filter_wave == wave:
-            side.append(self._spawn(
+            self._side_pending.append(self._spawn(
                 "bloom_update", lambda: self._seen_filter_add(discovered, wave)
             ))
-        nxt = self._spawn(
-            "frontier_write", lambda: self._write_frontier(frontier, picked, discovered, wave)
-        )
         if index_live:
             # overwrites exactly index partition (d, wave): replay-safe
-            side.append(self._spawn("seen_idx", lambda: self._seen_idx_insert(
+            self._side_pending.append(self._spawn("seen_idx", lambda: self._seen_idx_insert(
                 discovered.select("url"), "d", wave, overwrite=True
             )))
-        # registered BEFORE waiting on the frontier: if that job fails,
-        # the next drain still waits for these instead of orphaning them
-        self._side_pending += side
-        return nxt.result()
+        # registered BEFORE the frontier write: if it fails, run_waves
+        # still waits for these instead of orphaning them
+        with job_group(self.spark.sparkContext, "frontier_write"):
+            return self._write_frontier(frontier, picked, discovered, wave)
 
     def _write_frontier(
         self, frontier: DataFrame, picked: DataFrame, discovered: DataFrame, wave: int
@@ -1043,9 +1007,11 @@ class CrawlRunner:
 
 
 def _committed(spark: SparkSession, store: SnapshotStore, table: str) -> DataFrame:
-    """Rows of ``table`` from the waves the manifest has committed."""
+    """Rows of ``table`` from the waves the manifest has committed (no
+    rows, with the table's columns, before the first commit)."""
     m = store.load_manifest()
-    return store.read_all_waves(spark, table).filter(F.col("wave") < m["wave"])
+    rows = store.read_all_waves(spark, table, _WAVE_SCHEMAS[table])
+    return rows.filter(F.col("wave") < m["wave"])
 
 
 def metrics_view(spark: SparkSession, store: SnapshotStore) -> DataFrame:

@@ -48,14 +48,6 @@ def test_crawl_matches_reference_order_and_seen(spark, world, ref, tmp_path):
     assert got_seen == ref.seen
 
 
-def test_crawl_without_bloom_identical(spark, world, ref, tmp_path):
-    """Bloom is a prefilter only — disabling it must not change results."""
-    store = str(tmp_path / "store_nb")
-    runner = CrawlRunner(spark, world, store, max_waves=30, seen_filter="none")
-    runner.run(resume=False)
-    assert _spark_visits(runner) == [(o, u) for o, u, _, _ in ref.visits]
-
-
 def test_resume_from_checkpoint(spark, world, ref, tmp_path):
     """Kill after wave k → resume → outputs identical to straight run."""
     store = str(tmp_path / "store_resume")
@@ -72,54 +64,71 @@ def test_resume_from_checkpoint(spark, world, ref, tmp_path):
 
 
 def test_resume_after_bloom_loss(spark, world, ref, tmp_path):
-    """Bloom sidecar file lost → rebuilt from committed state; identical.
-    The filter exists only past the broadcast budget, hence
-    ``seen_broadcast_mb=0``."""
-    import os
-
+    """The bloom lives only in the runner that built it: a resume past
+    the broadcast budget rebuilds it from the committed seen side, and
+    the crawl ends identical. The filter exists only past the broadcast
+    budget, hence ``seen_broadcast_mb=0``."""
     store = str(tmp_path / "store_bloomloss")
     kw = dict(bloom_expected=10_000, seen_broadcast_mb=0)
     r1 = CrawlRunner(spark, world, store, max_waves=4, **kw)
     r1.run(resume=False)
-    for f in os.listdir(store):
-        if f.startswith("bloom_"):
-            os.remove(os.path.join(store, f))
     r2 = CrawlRunner(spark, world, store, max_waves=30, **kw)
     r2.run(resume=True)
     assert _spark_visits(r2) == [(o, u) for o, u, _, _ in ref.visits]
 
 
-def _filter_snapshots(store):
-    return sorted(
-        int(m.group(2))
-        for f in os.listdir(store)
-        if (m := re.fullmatch(r"(bloom|cuckoo)_(\d+)\.(bin|npz)", f))
-    )
+def _filter_files(store):
+    return [f for f in os.listdir(store) if re.fullmatch(r"(bloom|cuckoo)_\d+\.(bin|npz)", f)]
 
 
 @pytest.mark.parametrize("seen_filter", ["bloom", "cuckoo"])
-def test_superseded_filter_snapshots_pruned(spark, world, ref, tmp_path, seen_filter):
-    """Each commit deletes the seen-filter snapshots of earlier waves;
-    a resume and a rollback + re-run rebuild what they need and still
-    reproduce the reference crawl. The filter exists only past the
-    broadcast budget, hence ``seen_broadcast_mb=0``."""
+def test_no_filter_file_across_resume_and_rollback(spark, world, ref, tmp_path, seen_filter):
+    """The seen filter is in-memory state only: no run writes a filter
+    file, and a resume and a rollback + re-run rebuild the filter from
+    the seen side and still reproduce the reference crawl. The filter
+    exists only past the broadcast budget, hence
+    ``seen_broadcast_mb=0``."""
     store = str(tmp_path / f"store_prune_{seen_filter}")
     kw = dict(bloom_expected=10_000, seen_filter=seen_filter, seen_broadcast_mb=0)
     m1 = CrawlRunner(spark, world, store, max_waves=4, **kw).run(resume=False)
     assert m1["wave"] == 4 and m1["frontier_rows"] > 0
-    assert _filter_snapshots(store) and min(_filter_snapshots(store)) >= m1["wave"]
+    assert _filter_files(store) == []
 
     r2 = CrawlRunner(spark, world, store, max_waves=30, **kw)
-    m2 = r2.run(resume=True)
-    assert min(_filter_snapshots(store)) >= m2["wave"]
+    r2.run(resume=True)
+    assert _filter_files(store) == []
     assert _spark_visits(r2) == [(o, u) for o, u, _, _ in ref.visits]
 
     early = next(s for s in r2.store.snapshots() if s["wave"] == 2)
     r2.store.rollback(early["snapshot_id"])
     r3 = CrawlRunner(spark, world, store, max_waves=30, **kw)
     r3.run(resume=True)
+    assert _filter_files(store) == []
     assert _spark_visits(r3) == [(o, u) for o, u, _, _ in ref.visits]
     assert {r["url"] for r in r3.seen_final_df().collect()} == ref.seen
+
+
+def test_empty_store_reads_no_rows(spark, world, tmp_path):
+    """A bootstrapped store with no committed wave reads as no rows with
+    the tables' columns: the visit log and both metrics views."""
+    from crawler_tjce_spark.streaming.runner import duration_hist_view, metrics_view
+
+    r = CrawlRunner(spark, world, str(tmp_path / "store_empty"), max_waves=0)
+    m = r.run(resume=False)
+    assert m["wave"] == 0
+    reads = (
+        r.visits_df,
+        lambda: metrics_view(spark, r.store),
+        lambda: duration_hist_view(spark, r.store),
+    )
+    empty = [read() for read in reads]
+    assert [df.count() for df in empty] == [0, 0, 0]
+    r.max_waves = 1
+    r.run_waves(m)
+    full = [read() for read in reads]
+    assert all(df.count() > 0 for df in full)
+    assert [df.columns for df in empty] == [df.columns for df in full]
+    assert full[0].columns == spark.read.parquet(r.store.table_dir("visits", 0)).columns
 
 
 def test_politeness_budget_never_exceeded(spark, world, tmp_path):

@@ -169,17 +169,20 @@ def test_cli_metrics_exports_the_views(spark, world, tmp_path):
 # ------------------------------------------------------------- bloom sidecar
 
 def test_bloom_sidecar_served_on_resume(spark, world, tmp_path):
-    """Wave N's persisted bloom is written under the wave it serves, so
-    resume loads it instead of rebuilding. The filter exists only past
-    the broadcast budget, hence ``seen_broadcast_mb=0``."""
+    """No bloom file is written: a resume rebuilds the bloom serving the
+    committed wave from its seen side, byte for byte the one the straight
+    run built up wave by wave (the OR over the same keys, same m and k).
+    The filter exists only past the broadcast budget, hence
+    ``seen_broadcast_mb=0``."""
     store = str(tmp_path / "store_bloomresume")
     kw = dict(max_waves=3, bloom_expected=10_000, seen_broadcast_mb=0)
     r1 = CrawlRunner(spark, world, store, **kw)
     m1 = r1.run(resume=False)
-    assert os.path.exists(os.path.join(store, f"bloom_{m1['wave']}.bin"))
+    assert r1._filter_wave == m1["wave"]
+    assert not [f for f in os.listdir(store) if f.startswith("bloom_")]
     r2 = CrawlRunner(spark, world, store, **kw)
     r2._serve_filter(m1["wave"])
-    assert r2._filter == r1._filter  # loaded, byte-identical
+    assert r2._filter == r1._filter  # rebuilt, byte-identical
 
 
 # ------------------------------------------------------- snapshot time travel
